@@ -285,14 +285,16 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json"))
     java.nio.file.Files.write(out, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // a compact human/tail-friendly summary first: headline metric,
-    // error/suspect state, and only the slowest queries by warm median
+    // error/suspect state, and only the slowest queries by warm median.
+    // Its own `metric` value tells it apart from the contract line by
+    // content, not by position
     val slowest = converged
       .collect { case (k, v) if v.warmMedian >= 0 => k -> v.warmMedian }
       .sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + math.rint(v * 100) / 100 }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total_warm_median","value":${math.rint(tot(_.warmMedian) * 100) / 100},""" +
+      s"""{"metric":"total_warm_median_summary","value":${math.rint(tot(_.warmMedian) * 100) / 100},""" +
         s""""unit":"sec","n_queries":${results.length},"first_total":${math.rint(tot(_.first) * 100) / 100},""" +
         s""""reps":$reps,"n_errors":${errors.length},"suspect":$suspectJson,"rerun":$rerunJson,""" +
         s""""inflated":$inflatedJson,"inflation_passes":$passesRun,"machine_factor":$machineFactorJson,""" +

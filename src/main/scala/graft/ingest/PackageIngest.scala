@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.store.DocumentStore
 import graft.tar.{TarMember, TarOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.metrics.Observe
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One raw package awaiting ingest (post-download, pre-gather).
@@ -260,7 +261,21 @@ object PackageIngest {
     * reference logs instead of sending, `ingester.py:290-295,308-310`). */
   def ingestDs(spark: SparkSession, packages: org.apache.spark.sql.Dataset[RawPackage],
       store: DocumentStore, requestId: String = "graft-local-request",
-      environment: String = "prod"): DataFrame = {
+      environment: String = "prod"): DataFrame =
+    ingestOutcome(spark, packages, store, requestId, environment).rows
+
+  /** The act phase's pinned outcome table and its observed count of failed
+    * packages (`error` set), read off the outcome checkpoint itself — a
+    * caller branches on it without running a job. */
+  final case class Outcome(rows: DataFrame, failed: Long)
+
+  /** [[ingestDs]] with the outcome's failure count. `observeOutcome` adds
+    * a caller's own observed metrics to the outcome checkpoint, so a
+    * per-round report rides an action the round already runs. */
+  def ingestOutcome(spark: SparkSession, packages: org.apache.spark.sql.Dataset[RawPackage],
+      store: DocumentStore, requestId: String = "graft-local-request",
+      environment: String = "prod",
+      observeOutcome: DataFrame => DataFrame = identity): Outcome = {
     import spark.implicits._
     // A batch carrying duplicate deliveries of the same (ref, tar_name)
     // with DIFFERING bytes picks ONE winner per key — max archive digest —
@@ -290,21 +305,67 @@ object PackageIngest {
     // eager checkpoint: THREE consumers read the gathered projection (the
     // resolution lineage, the failed-gather outcome rows, and — through
     // `resolved` — every effect frame); without the pin the gather map
-    // (one tar decompression per package) re-runs per consumer
-    val gathered = gatherAllDs(spark, deduped).localCheckpoint(true)
-    val identifiers = store.read("identifiers").getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, String, String, Option[String])]
-        .toDF("document_uri", "id_kind", "id_value", "id_type")
-    }
+    // (one tar decompression per package) re-runs per consumer. Its
+    // observed OK count decides whether the act phase runs at all.
+    val gatheredObs = Observation("graft.ingest.gathered")
+    val gathered = gatherAllDs(spark, deduped)
+      .observe(gatheredObs, Observe.countIf(col("error").isNull).as("n_ok"))
+      .localCheckpoint(true)
 
+    // 7. outcome (O2/W11): gather failures stay in the outcome with their
+    //    error (per-record isolation — a broken package reports, others
+    //    proceed). localCheckpoint pins the outcome: the lineage reads
+    //    store tables this very method just mutated, so a lazy
+    //    re-execution after unpersist would resolve against post-effect
+    //    state. `original_ref` (the pre-S4 message-level reference) rides
+    //    into the outcome so a streaming caller can join failures back to
+    //    the message ids it decoded them from — the S4 rewrite makes
+    //    `consignment_ref` unjoinable for S3-dialect packages.
+    def pin(rows: DataFrame): Outcome = {
+      val obs = Observation("graft.ingest.outcome")
+      val pinned = observeOutcome(rows)
+        .observe(obs, Observe.countIf(col("error").isNotNull).as("n_failed"))
+        .localCheckpoint(true)
+      Outcome(pinned, Observe.counts(obs)("n_failed"))
+    }
+    val failedGather = gathered.filter(col("error").isNotNull)
+      .select(col("consignment_ref"), col("original_ref"),
+        lit(null).cast("string").as("uri"),
+        col("doc_type"), lit(null).cast("boolean").as("exists_in_db"),
+        lit(null).cast("boolean").as("will_publish"), col("error"))
+    try {
+      // nothing gathered cleanly (a corrupt or member-less archive):
+      // nothing to resolve or act on, so neither snapshot read nor an
+      // empty effect round runs
+      if (Observe.counts(gatheredObs)("n_ok") == 0) pin(failedGather)
+      else act(spark, deduped, gathered, store, requestId, environment)(
+        resolvedRows => pin(resolvedRows.unionByName(failedGather)))
+    } finally gathered.unpersist()
+  }
+
+  /** Resolution and the ordered effects for a gather with at least one OK
+    * package; `finish` pins the outcome (see [[ingestOutcome]]) from the
+    * resolved packages' rows while their checkpoint is still held. */
+  private def act(spark: SparkSession, deduped: org.apache.spark.sql.Dataset[RawPackage],
+      gathered: DataFrame, store: DocumentStore, requestId: String, environment: String)(
+      finish: DataFrame => Outcome): Outcome = {
+    import spark.implicits._
     // pre-effect publish state (W10): the reference consults
     // `api_client.get_published` for FCL reparse packages
     // (ingester.py:435-439); the guard below needs it too. The broadcast
     // hint (like Resolution's) assumes the store dimension fits the 64 MB
     // threshold — true for this store at any caselaw-like cardinality; a
     // store past that would drop the hint and shuffle-join on uri.
-    val pubDim = store.documents.select(col("uri").as("pub_uri"), col("is_published"))
+    // Both snapshot reads take only the store's shared read side, so they
+    // run concurrently.
+    val docsRead = java.util.concurrent.CompletableFuture.supplyAsync(() => store.documents)
+    val identifiers = store.read("identifiers").getOrElse {
+      Seq.empty[(String, String, String, Option[String])]
+        .toDF("document_uri", "id_kind", "id_value", "id_type")
+    }
+    val pubDim = (try docsRead.join()
+      catch { case e: java.util.concurrent.CompletionException => throw e.getCause })
+      .select(col("uri").as("pub_uri"), col("is_published"))
 
     // eager localCheckpoint (not cache): step 2 below mutates the very
     // identifiers table this lineage reads, and cache() is best-effort —
@@ -473,34 +534,14 @@ object PackageIngest {
       //    reference's effect order; `setPublished` remains the standalone
       //    form for callers outside a full act phase.
 
-      // 7. outcome (O2/W11): gather failures stay in the outcome with
-      //    their error (per-record isolation — a broken package reports,
-      //    others proceed). localCheckpoint pins the outcome: the lineage
-      //    reads store tables this very method just mutated, so a lazy
-      //    re-execution after unpersist would resolve against post-effect
-      //    state.
-      // `original_ref` (the pre-S4 message-level reference) rides into the
-      // outcome so a streaming caller can join failures back to the message
-      // ids it decoded them from — the S4 rewrite makes `consignment_ref`
-      // unjoinable for S3-dialect packages.
-      val failedGather = gathered.filter(col("error").isNotNull)
-        .select(col("consignment_ref"), col("original_ref"),
-          lit(null).cast("string").as("uri"),
-          col("doc_type"), lit(null).cast("boolean").as("exists_in_db"),
-          lit(null).cast("boolean").as("will_publish"), col("error"))
-      resolved.select(
+      // 7. outcome: see [[ingestOutcome]]
+      finish(resolved.select(
           col("consignment_ref"), col("original_ref"), col("uri"), col("doc_type"),
           col("exists_in_db"),
           when(col("error").isNull, willPublish).as("will_publish"),
           when(col("error").isNull && cannotPublish, lit("CannotPublishException"))
-            .otherwise(col("error")).as("error"))
-        .unionByName(failedGather)
-        .localCheckpoint(true)
-    } finally {
-      // drop the checkpoint blocks once the outcome is pinned
-      resolved.unpersist()
-      gathered.unpersist()
-    }
+            .otherwise(col("error")).as("error")))
+    } finally resolved.unpersist() // dropped once the outcome is pinned
   }
 
   /** W5–W8 byte writes: perform the asset plan against the archive bytes

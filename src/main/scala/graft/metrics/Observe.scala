@@ -34,6 +34,24 @@ object Observe {
         sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long").as(s"n_null_$c"))
     df.observe(name, ms.head, ms.tail: _*)
   }
+
+  /** Rows where `c` holds: zero on an empty frame, where `sum` is null. */
+  def countIf(c: Column): Column = count(when(c, 1))
+
+  /** An [[org.apache.spark.sql.Observation]]'s metrics as longs, once the
+    * action carrying it has run: the driver branches on counts its eager
+    * checkpoints already computed instead of running `isEmpty`/`count`
+    * jobs. Delivery rides the listener bus just after the action returns;
+    * a row still missing after five minutes fails the caller (the
+    * streaming batch then redelivers) rather than hanging it. Nulls read
+    * as 0. */
+  def counts(o: org.apache.spark.sql.Observation): Map[String, Long] = {
+    val row = scala.concurrent.Await.result(o.future,
+      scala.concurrent.duration.Duration(5, "min"))
+    row.schema.fieldNames.map { f =>
+      f -> Option(row.getAs[Any](f)).fold(0L)(_.asInstanceOf[Number].longValue)
+    }.toMap
+  }
 }
 
 /** Accumulating listener for batch-side observed metrics: keeps the

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed document store — the engine's stand-in for the
   * reference's MarkLogic + S3 sinks (SURVEY.md W1–W8/J4; the reference's
@@ -57,9 +58,32 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
       val df =
         if (t == "notifications" && !Files.exists(notifMarkerPath))
           healedNotifications()
-        else spark.read.parquet(path(t))
+        else parquet(t, path(t))
       Some(if (df.columns.contains("bucket")) df.drop("bucket") else df)
     }
+
+  /** Each table's data schema (the `bucket` partition column excluded),
+    * memoized per store instance: a schemaless parquet read runs a
+    * footer-inference Spark job, and a wire round reads the same few
+    * tables many times. A whole-table staged swap or heal drops its entry
+    * ([[writeStaged]]); a bucketed MERGE records the schema it just wrote
+    * ([[mergeBuckets]]). Absence is never memoized, so a table another
+    * instance creates is seen on the next read. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** `spark.read.parquet(paths)` for table `t` under its memoized schema,
+    * inferring (and memoizing) it on the first read. Partition discovery
+    * still appends `bucket` for whole-table reads. */
+  private def parquet(t: String, paths: String*): DataFrame =
+    Option(schemas.get(t)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None =>
+        val df = spark.read.parquet(paths: _*)
+        schemas.putIfAbsent(t, dataSchema(df.schema))
+        df
+    }
+
+  private def dataSchema(s: StructType): StructType = StructType(s.filterNot(_.name == "bucket"))
 
   private def delete(p: java.nio.file.Path): Unit =
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -109,6 +133,7 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
       Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(next, live, StandardCopyOption.ATOMIC_MOVE)
     if (Files.exists(old)) delete(old) // commit: drop the pre-swap state
+    schemas.remove(t)
   }
 
   private def write(t: String, df: DataFrame): Unit =
@@ -158,8 +183,13 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     }
     recover(t)
     val n = bucketCountFor(t)
-    val touched = batch.select(bucketOf(col(keyCol), n).as("_b"))
-      .distinct().collect().map(_.getLong(0)).sorted
+    // per-partition distinct, merged on the driver: one stage, where
+    // `distinct()` would add a shuffle for at most `n` values
+    val touched = {
+      import spark.implicits._
+      batch.select(bucketOf(col(keyCol), n)).as[Long]
+        .mapPartitions(_.toSet.iterator).collect().distinct.sorted
+    }
     lap("touched-collect")
     if (touched.isEmpty) return
     if (Files.exists(Paths.get(path(t))) && !hasBucketDirs(t))
@@ -169,7 +199,7 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     val curDirs = touched.map(b => live.resolve(s"bucket=$b"))
       .filter(Files.exists(_)).map(_.toString)
     val cur: Option[DataFrame] =
-      if (curDirs.isEmpty) None else Some(spark.read.parquet(curDirs.toIndexedSeq: _*))
+      if (curDirs.isEmpty) None else Some(parquet(t, curDirs.toIndexedSeq: _*))
     val merged = merge(cur, batch)
 
     val next = Paths.get(s"$base/.next_$t")
@@ -198,6 +228,7 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
       }
     }
     delete(next)
+    schemas.put(t, dataSchema(merged.schema))
   }
 
   /** One-time migration of a flat (pre-bucketing) table into `bucket=NN`

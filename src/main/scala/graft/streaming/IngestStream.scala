@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.ingest.{Messages, PackageIngest, RawPackage}
+import graft.metrics.Observe
 import graft.model.IngestError
 import graft.store.{DocumentStore, LocalStore}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.SerializableConfiguration
@@ -64,10 +65,11 @@ object IngestStream {
   val MaxInMemoryFetchKey = "graft.stream.maxInMemoryFetchBytes"
   private val DefaultMaxInMemoryFetch = 256L << 20
 
-  /** Session conf key for the fetch-map fan-out (tasks); defaults to the
-    * cluster's default parallelism. See the repartition note in
-    * [[processBatch]] — the per-package pipeline must not inherit a
-    * 1-partition source. */
+  /** Session conf key for the CAP on the fetch-map fan-out (tasks);
+    * defaults to the cluster's default parallelism. A round spreads to
+    * `min(messages, cap)` tasks — see the spread note on [[fetch]]: the
+    * per-package pipeline must not inherit a 1-partition source, and a
+    * one-message round must not pay a shuffle and cap-wide passes. */
   val FetchParallelismKey = "graft.stream.fetchParallelism"
 
   /** Default remote-package resolver: the message's bucket/key as an
@@ -86,6 +88,20 @@ object IngestStream {
 
   /** One micro-batch of raw event records → store effects. Also usable in
     * pure batch mode (the reference's single Lambda invocation).
+    *
+    * A round pays only for the work its messages have. Each eager
+    * checkpoint carries an `Observation` (decode, fetch, gather, outcome),
+    * and the driver branches on those counts instead of running jobs for
+    * them:
+    *   - an empty batch stops after decode;
+    *   - a round with no decodable message fetches nothing;
+    *   - a round whose every fetch failed runs no gather or act phase;
+    *   - a round whose every package failed gather runs neither snapshot
+    *     read nor an effect round ([[PackageIngest.ingestOutcome]]);
+    *   - a round with no failure candidate (decode, fetch or outcome)
+    *     neither reads the receive ledger nor appends to it, and reports
+    *     `graft.ingest.failures` = (0, 0) on its outcome checkpoint;
+    *   - a round that spilled no archive runs no spill-cleanup pass.
     * `environment` is the W9 email gate (ROLLBAR_ENV): outside prod,
     * notification decisions are recorded with delivered=false.
     * `packageUri` maps a decoded message's (s3_bucket, s3_key) to the
@@ -120,13 +136,16 @@ object IngestStream {
     // null input and falls through the `when`.
     // CollectMetrics rides the decode plan and is reported by the eager
     // checkpoint action to any registered graft.metrics.MetricsSink — no
-    // extra pass, no driver-side count() (see Observe's scaladoc). The
-    // checkpoint also pins the decoded frame so the THREE downstream
-    // consumers (fetch, msg-key join, DLQ report) read executor blocks
-    // instead of each re-running the 5-from_json decode over the source —
-    // which additionally keeps the per-micro-batch source scan at exactly
-    // one, so the streaming `graft.ingest.source` counter means arrivals,
-    // not arrivals × actions.
+    // extra pass, no driver-side count() (see Observe's scaladoc) — and
+    // its Observation hands the same counts to the driver, which sizes
+    // the fetch and skips passes with them. The checkpoint also pins the
+    // decoded frame so the THREE downstream consumers (fetch, msg-key
+    // join, DLQ report) read executor blocks instead of each re-running
+    // the 5-from_json decode over the source — which additionally keeps
+    // the per-micro-batch source scan at exactly one, so the streaming
+    // `graft.ingest.source` counter means arrivals, not arrivals ×
+    // actions.
+    val decodedObs = Observation("graft.ingest.decoded")
     val decoded = Messages.decode(batch)
       .withColumn("error",
         when(col("error").isNull &&
@@ -134,42 +153,149 @@ object IngestStream {
           concat(lit("RuntimeError: Didn't recognise originator "),
             coalesce(col("originator"), lit("null"))))
           .otherwise(col("error")))
-      .observe("graft.ingest.decoded",
+      .observe(decodedObs,
         count(lit(1)).as("n_records"),
         sum(when(col("error").isNotNull, 1L).otherwise(0L)).cast("long").as("n_rejected"),
         sum(when(col("msg_id").isNotNull, 1L).otherwise(0L)).cast("long").as("n_retryable"))
       .localCheckpoint(true)
-    if (decoded.isEmpty) { decoded.unpersist(); return }
+    val decodedCounts = Observe.counts(decodedObs)
+    if (decodedCounts("n_records") == 0) { decoded.unpersist(); return }
+    val nRejected = decodedCounts("n_rejected")
+    val nOk = decodedCounts("n_records") - nRejected
 
     // ---- fetch: message → archive bytes, one Hadoop-FS read per record
     // on its executor (no driver download loop). localCheckpoint(true)
     // pins the bytes to executor storage so the act phase's multiple
     // passes (gather, asset byte copy) re-read blocks, not the remote
     // object store — the distributed analogue of the reference saving to
-    // /tmp exactly once per message.
+    // /tmp exactly once per message. A round whose every message failed
+    // decode fetches nothing.
+    val fetchedObs = Observation("graft.ingest.fetched")
+    val fetched = if (nOk == 0) None else Some(fetch(decoded, nOk, packageUri, fetchedObs))
+    val fetchedCounts = fetched.fold(Map.empty[String, Long])(_ => Observe.counts(fetchedObs))
+      .withDefaultValue(0L)
+    val nFetchFailed = fetchedCounts("n_failed")
+
+    try {
+      // taxonomy routing stays codegen'd: IngestError.all is a 12-element
+      // static list, so `isin` beats a Scala UDF here
+      val terminalNames = IngestError.all.filter(_.terminal).map(_.name)
+      def failureMetric(df: DataFrame, terminal: Column): DataFrame =
+        df.observe("graft.ingest.failures",
+          Observe.countIf(col("error").isNotNull).as("n_failures"),
+          Observe.countIf(col("error").isNotNull && terminal).as("n_terminal"))
+
+      // ---- gather + act (O1/O2): the REAL batch pipeline ----
+      // A round that got this far clean reports its failure metric on the
+      // outcome checkpoint: (0, 0) when the outcome is clean too, which
+      // is exactly when the report below is skipped; otherwise that
+      // report's exact row supersedes it within the round.
+      val outcome = fetched match {
+        case Some(f) if nFetchFailed < nOk =>
+          val packages = f.filter(col("error").isNull).as[Fetched]
+            .map(f => RawPackage(f.consignment_ref, f.originator, f.tar_name,
+              f.archive, f.archive_path, f.digest))
+          Some(PackageIngest.ingestOutcome(spark, packages, scoped, requestId, environment,
+            observeOutcome =
+              if (nRejected + nFetchFailed == 0)
+                failureMetric(_, col("error").isin(terminalNames: _*))
+              else identity))
+        case _ => None // nothing fetched: no gather, no act phase
+      }
+      // ---- failure report (W11): SQS ids only; SNS failures vanish ----
+      // Only a round that observed a failure candidate (decode, fetch or
+      // outcome) reads the receive ledger and appends to it.
+      try if (nRejected + nFetchFailed + outcome.fold(0L)(_.failed) > 0) {
+        // outcome errors join back to message ids on the PRE-S4 reference
+        // (`original_ref`) — the rewrite makes consignment_ref unjoinable
+        // for S3-dialect packages
+        val msgKeys = decoded
+          .filter(col("error").isNull && col("msg_id").isNotNull)
+          .select(col("msg_id"), col("consignment_ref").as("original_ref"))
+        val candidates = Seq(decoded.filter(col("error").isNotNull)) ++
+          fetched.map(_.toDF().filter(col("error").isNotNull)) ++
+          outcome.map(_.rows.filter(col("error").isNotNull)
+            .select(col("original_ref"), col("error"))
+            .join(broadcast(msgKeys), Seq("original_ref")))
+        val failures = candidates.map(_.select(col("msg_id"), col("error")))
+          .reduce(_ unionByName _)
+          .filter(col("msg_id").isNotNull)
+          .dropDuplicates("msg_id", "error")
+        // redrive policy (the SQS DLQ budget, terraform/variables.tf:44-48):
+        // the failures table IS the receive ledger — each append is one
+        // failed receive, so prior rows for this msg_id count earlier
+        // attempts (SQS messageId is stable across redeliveries). At
+        // receive maxReceives the message parks TERMINAL (DLQ) instead of
+        // redelivering forever — the poison-message bound. Durable across
+        // restarts because the ledger is store state, not query state; a
+        // crash between this append and the offset commit re-counts the
+        // replayed receive and can park one receive early — the same
+        // approximation SQS itself documents (ApproximateReceiveCount).
+        // Join shape: the ledger scan is pre-filtered by the micro-batch's
+        // failed ids (broadcast — bounded by batch size), and the per-id
+        // counts broadcast back, so neither side ever shuffles the ledger.
+        val priorReceives = scoped.failures
+          .join(broadcast(failures.select("msg_id").distinct()), Seq("msg_id"))
+          .groupBy(col("msg_id")).agg(count(lit(1)).as("prior_receives"))
+        scoped.appendFailures(failureMetric(failures
+          .join(broadcast(priorReceives), Seq("msg_id"), "left")
+          .withColumn("receive_no", coalesce(col("prior_receives"), lit(0L)) + lit(1L))
+          .withColumn("terminal",
+            col("error").isin(terminalNames: _*) ||
+              col("receive_no") >= lit(maxReceives.toLong))
+          .select("msg_id", "error", "terminal"), col("terminal")))
+      } finally outcome.foreach(_.rows.unpersist())
+    } finally {
+      // best-effort spill cleanup on the executors that hold the files
+      // (deleteOnExit is the backstop); runs before the checkpoint blocks
+      // are dropped so the paths are still reachable process-locally.
+      // Only a round that spilled runs it.
+      fetched.foreach { f =>
+        if (fetchedCounts("n_spilled") > 0)
+          try f.filter(col("archive_path").isNotNull)
+            .select(col("archive_path")).as[String]
+            .foreachPartition((it: Iterator[String]) =>
+              it.foreach(pth => { new java.io.File(pth).delete(); () }))
+          catch { case _: Exception => () }
+        f.unpersist()
+      }
+      decoded.unpersist()
+    }
+  }
+
+  /** Fetches the decoded OK messages' archives (see [[Fetched]]) into an
+    * eager checkpoint observed by `obs` (`n_failed`, `n_spilled`).
+    *
+    * SPREAD: the per-package map runs on `min(nOk, fetchParallelism)`
+    * tasks. A micro-batch's partitioning follows the SOURCE (a queue drain
+    * or a single event file is often 1–2 partitions), and everything
+    * per-package downstream — fetch, tar gather, asset byte copies —
+    * inherits it through the checkpoints. Without the spread the
+    * embarrassingly-parallel section of the pipeline runs on ONE task
+    * (measured: 64 s of a 94 s ingest-bench wall in one thread at
+    * local[32]; 2.9× docs/s from this one repartition). The rows being
+    * shuffled are tiny message tuples — the archives are fetched AFTER.
+    * `fetchParallelism` is a CAP: a round of fewer messages spreads only
+    * as wide as it has messages, and a round of one message runs on one
+    * partition with no shuffle at all, so its later passes run one task
+    * each instead of inheriting the cap. */
+  private def fetch(decoded: DataFrame, nOk: Long,
+      packageUri: (String, String) => String, obs: Observation): Dataset[Fetched] = {
+    val spark = decoded.sparkSession
+    import spark.implicits._
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val resolveUri = packageUri
     val spillLimit = math.min(
       spark.conf.getOption(MaxInMemoryFetchKey).map(_.toLong)
         .getOrElse(DefaultMaxInMemoryFetch),
       Int.MaxValue.toLong)
-    // SPREAD the per-package map across every core BEFORE the fetch: a
-    // micro-batch's partitioning follows the SOURCE (a queue drain or a
-    // single event file is often 1–2 partitions), and everything
-    // per-package downstream — fetch, tar gather, asset byte copies —
-    // inherits it through the checkpoints. Without this the
-    // embarrassingly-parallel section of the pipeline runs on ONE task
-    // (measured: 64 s of a 94 s ingest-bench wall in one thread at
-    // local[32]; 2.9× docs/s from this one repartition). The rows being
-    // shuffled are tiny message tuples — the archives are fetched AFTER —
-    // so the redistribution is ~free at any batch size.
-    val fetchParallelism = spark.conf.getOption(FetchParallelismKey)
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    val fetched = decoded.filter(col("error").isNull)
+    val spread = math.min(nOk, spark.conf.getOption(FetchParallelismKey)
+      .map(_.toLong).getOrElse(spark.sparkContext.defaultParallelism.toLong)).toInt
+    val messages = decoded.filter(col("error").isNull)
       .select(col("msg_id"), col("consignment_ref"), col("originator"),
         col("s3_bucket"), col("s3_key"))
       .as[(String, String, String, String, String)]
-      .repartition(fetchParallelism)
+    (if (spread <= 1) messages.coalesce(1) else messages.repartition(spread))
       .map { case (msgId, ref, orig, bucket, key) =>
         val tarName = s"$ref.tar.gz" // local_tar_filename, messages.py:63-64
         try {
@@ -206,80 +332,10 @@ object IngestStream {
               s"ClientError: package fetch failed: ${e.getMessage}")
         }
       }
+      .observe(obs,
+        Observe.countIf(col("error").isNotNull).as("n_failed"),
+        Observe.countIf(col("archive_path").isNotNull).as("n_spilled"))
       .localCheckpoint(true)
-
-    try {
-      // ---- gather + act (O1/O2): the REAL batch pipeline ----
-      val packages = fetched.filter(col("error").isNull).as[Fetched]
-        .map(f => RawPackage(f.consignment_ref, f.originator, f.tar_name,
-          f.archive, f.archive_path, f.digest))
-      val outcome =
-        if (packages.isEmpty) None
-        else Some(PackageIngest.ingestDs(spark, packages, scoped, requestId, environment))
-      try {
-        // ---- failure report (W11): SQS ids only; SNS failures vanish ----
-        // outcome errors join back to message ids on the PRE-S4 reference
-        // (`original_ref`) — the rewrite makes consignment_ref unjoinable
-        // for S3-dialect packages
-        val msgKeys = decoded
-          .filter(col("error").isNull && col("msg_id").isNotNull)
-          .select(col("msg_id"), col("consignment_ref").as("original_ref"))
-        val outcomeFailures = outcome match {
-          case Some(o) => o.filter(col("error").isNotNull)
-            .select(col("original_ref"), col("error"))
-            .join(broadcast(msgKeys), Seq("original_ref"))
-            .select(col("msg_id"), col("error"))
-          case None => Seq.empty[(String, String)].toDF("msg_id", "error")
-        }
-        val failures = decoded.filter(col("error").isNotNull)
-          .select(col("msg_id"), col("error"))
-          .unionByName(fetched.toDF().filter(col("error").isNotNull)
-            .select(col("msg_id"), col("error")))
-          .unionByName(outcomeFailures)
-          .filter(col("msg_id").isNotNull)
-          .dropDuplicates("msg_id", "error")
-        // taxonomy routing stays codegen'd: IngestError.all is a 12-element
-        // static list, so `isin` beats a Scala UDF here
-        val terminalNames = IngestError.all.filter(_.terminal).map(_.name)
-        // redrive policy (the SQS DLQ budget, terraform/variables.tf:44-48):
-        // the failures table IS the receive ledger — each append is one
-        // failed receive, so prior rows for this msg_id count earlier
-        // attempts (SQS messageId is stable across redeliveries). At
-        // receive maxReceives the message parks TERMINAL (DLQ) instead of
-        // redelivering forever — the poison-message bound. Durable across
-        // restarts because the ledger is store state, not query state; a
-        // crash between this append and the offset commit re-counts the
-        // replayed receive and can park one receive early — the same
-        // approximation SQS itself documents (ApproximateReceiveCount).
-        // Join shape: the ledger scan is pre-filtered by the micro-batch's
-        // failed ids (broadcast — bounded by batch size), and the per-id
-        // counts broadcast back, so neither side ever shuffles the ledger.
-        val priorReceives = scoped.failures
-          .join(broadcast(failures.select("msg_id").distinct()), Seq("msg_id"))
-          .groupBy(col("msg_id")).agg(count(lit(1)).as("prior_receives"))
-        scoped.appendFailures(failures
-          .join(broadcast(priorReceives), Seq("msg_id"), "left")
-          .withColumn("receive_no", coalesce(col("prior_receives"), lit(0L)) + lit(1L))
-          .withColumn("terminal",
-            col("error").isin(terminalNames: _*) ||
-              col("receive_no") >= lit(maxReceives.toLong))
-          .select("msg_id", "error", "terminal")
-          .observe("graft.ingest.failures",
-            count(lit(1)).as("n_failures"),
-            sum(when(col("terminal"), 1L).otherwise(0L)).cast("long").as("n_terminal")))
-      } finally outcome.foreach(_.unpersist())
-    } finally {
-      // best-effort spill cleanup on the executors that hold the files
-      // (deleteOnExit is the backstop); runs before the checkpoint blocks
-      // are dropped so the paths are still reachable process-locally
-      try fetched.filter(col("archive_path").isNotNull)
-        .select(col("archive_path")).as[String]
-        .foreachPartition((it: Iterator[String]) =>
-          it.foreach(pth => { new java.io.File(pth).delete(); () }))
-      catch { case _: Exception => () }
-      fetched.unpersist()
-      decoded.unpersist()
-    }
   }
 
   /** Wire a streaming (kind, record_json) source into the batch processor.

@@ -60,6 +60,28 @@ class ObserveSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(sink)
   }
 
+  test("a clean round after a failing one reports zero failures, not the old counts") {
+    import graft.streaming.IngestFixtures._
+    val sink = MetricsSink.register(spark)
+    val store = LocalStore(spark, Files.createTempDirectory("observe-clean").toString)
+    try {
+      IngestStream.processBatch(store)(Seq(sqsGarbage("m-3")).toDF("kind", "record_json"), 0L)
+      await("failing round")(
+        sink.latest("graft.ingest.failures").filter(_("n_failures") == 1L))
+
+      // the clean round skips the failure report; its outcome checkpoint
+      // carries the (0, 0) row instead
+      val resolver = stage("REF-OBS" -> tdrArchive("REF-OBS", "[2024] EWHC 21 (KB)"))
+      IngestStream.processBatch(store, packageUri = resolver)(
+        Seq(sqs("m-4", v2Inner("REF-OBS"))).toDF("kind", "record_json"), 1L)
+      val fl = await("clean round")(
+        sink.latest("graft.ingest.failures").filter(_("n_failures") == 0L))
+      assert(fl("n_terminal") == 0L)
+      assert(store.documents.count() == 1)
+      assert(store.failures.count() == 1, "only the failing round's row")
+    } finally spark.listenerManager.unregister(sink)
+  }
+
   test("streaming source counter appears in query progress") {
     val dir = Files.createTempDirectory("observe-stream").toString
     val ckpt = Files.createTempDirectory("observe-ckpt").toString

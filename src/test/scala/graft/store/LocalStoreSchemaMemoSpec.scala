@@ -1,0 +1,103 @@
+package graft.store
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Pins LocalStore's per-instance table-schema memo: repeated reads skip
+  * the parquet footer-inference job, yet every read still sees what the
+  * store (or another instance on the same base) last wrote. */
+class LocalStoreSchemaMemoSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def docs(uris: String*) =
+    uris.map(u => (u, s"<x>$u</x>", "judgment", "m", null: String, false, "inserted"))
+      .toDF("uri", "xml", "doc_type", "annotation_message", "annotation_payload",
+        "automated", "upload_state")
+
+  private def ids(uris: String*) =
+    uris.map(u => (u, "slug", u, null: String)).toDF("document_uri", "id_kind", "id_value", "id_type")
+
+  /** Spark jobs started while `body` ran. The listener bus is async, so a
+    * marker job is run after `body` and waited for: the bus is FIFO. */
+  private def jobsDuring(body: => Unit): Int = {
+    val started = new AtomicInteger()
+    @volatile var markerSeen = false
+    val marker = "schema-memo-spec-marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen = true
+        else if (!markerSeen) started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "listener bus did not drain within 30 s")
+      started.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a repeated read runs no footer-inference job") {
+    val store = LocalStore(spark, Files.createTempDirectory("graft-memo-jobs").toString)
+    store.appendIdentifiers(ids("doc/1"))
+    store.upsertDocuments(docs("doc/1"))
+    store.read("identifiers")
+    store.documents
+    assert(jobsDuring { store.read("identifiers"); store.documents } == 0)
+    assert(store.read("identifiers").get.count() == 1)
+    assert(store.documents.count() == 1)
+  }
+
+  test("after the legacy notifications heal, memoized reads return delivered") {
+    val base = Files.createTempDirectory("graft-memo-heal").toString
+    val store = LocalStore(spark, base)
+    // a store written before `delivered` existed: 3-column files on disk
+    Seq(("doc/1", "new", "REF-1")).toDF("uri", "action", "payload")
+      .write.parquet(s"$base/notifications")
+    assert(store.read("notifications").get.columns.contains("delivered"))
+    store.appendNotifications(Seq(("doc/2", "new", "REF-2", true))
+      .toDF("uri", "action", "payload", "delivered"))
+    // the heal rewrote the table through a staged swap; later reads (the
+    // memoized path) keep the healed schema
+    for (_ <- 1 to 2) {
+      val rows = store.read("notifications").get.collect()
+      assert(rows.head.schema.fieldNames.contains("delivered"))
+      assert(rows.map(r => r.getAs[String]("uri") -> r.getAs[Boolean]("delivered")).toMap ==
+        Map("doc/1" -> false, "doc/2" -> true))
+    }
+    store.appendNotifications(Seq(("doc/3", "updated", "REF-3", false))
+      .toDF("uri", "action", "payload", "delivered"))
+    assert(store.read("notifications").get.count() == 3)
+  }
+
+  test("a second instance on the same base sees tables and rows the first writes") {
+    val base = Files.createTempDirectory("graft-memo-multi").toString
+    val a = LocalStore(spark, base)
+    val b = LocalStore(spark, base)
+    // absence is not memoized
+    assert(b.read("identifiers").isEmpty)
+    a.appendIdentifiers(ids("doc/1"))
+    assert(b.read("identifiers").get.count() == 1)
+    a.appendIdentifiers(ids("doc/2"))
+    assert(b.read("identifiers").get.count() == 2)
+
+    assert(b.documents.count() == 0)
+    a.upsertDocuments(docs("doc/1"))
+    assert(b.documents.count() == 1)
+    // each instance merges on top of the other's buckets
+    b.upsertDocuments(docs("doc/1", "doc/2"))
+    a.upsertDocuments(docs("doc/2"))
+    val versions = a.documents.collect()
+      .map(r => r.getAs[String]("uri") -> r.getAs[Int]("version")).toMap
+    assert(versions == Map("doc/1" -> 2, "doc/2" -> 2))
+    assert(b.documents.collect().map(_.getAs[Int]("version")).toSeq.sorted == Seq(2, 2))
+  }
+}

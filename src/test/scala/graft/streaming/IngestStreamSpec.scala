@@ -2,11 +2,20 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
 import graft.ingest.{PackageIngest, RawPackage}
-import graft.store.LocalStore
+import graft.store.{DocumentStore, EffectBatch, LocalStore}
 import graft.tar.TarOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end streaming shell: MemoryStream source → foreachBatch decode →
   * Hadoop-FS package fetch → the REAL gather/act phases → store tables,
@@ -16,59 +25,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * staged as real tarballs under a local "bucket" directory and fetched
   * by the messages' (s3Bucket, s3Key) through the `file:` resolver — the
   * same seam a cluster points at `s3a://`. */
-class IngestStreamSpec extends SparkSpec {
+class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  import IngestFixtures._
   import spark.implicits._
 
   private val goldenFixtures =
     Paths.get("/root/reference/aws_examples/s3/te-editorial-out-int")
-
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  private def v2Inner(ref: String, originator: String = "TDR"): String =
-    s"""{"parameters": {"reference": "$ref", "originator": "$originator",
-       |"s3Bucket": "b", "s3Key": "k/$ref.tar.gz"}}""".stripMargin.replace("\n", " ")
-
-  private def sqs(msgId: String, inner: String): (String, String) =
-    ("sqs",
-      s"""{"messageId": "$msgId", "eventSource": "aws:sqs",
-         |"body": ${jsonStr(s"""{"Type": "Notification", "Message": ${jsonStr(inner)}}""")}}"""
-        .stripMargin.replace("\n", " "))
-
-  private def sns(inner: String): (String, String) =
-    ("sns", s"""{"Sns": {"Message": ${jsonStr(inner)}}}""")
-
-  /** A complete synthetic TDR package: metadata (TRE payload + PARSER cite
-    * + TDR section), judgment XML, docx, parser.log — enough to drive every
-    * act-phase effect. */
-  private def tdrArchive(ref: String, cite: String): Array[Byte] = {
-    val metadata =
-      s"""{"parameters": {"TRE": {"reference": "TRE-$ref", "payload": {
-         |  "filename": "doc.docx", "xml": "doc.xml", "metadata": "TRE-$ref-metadata.json",
-         |  "images": [], "log": "parser.log"}},
-         |  "PARSER": {"uri": null, "cite": "$cite", "parser_run_id": "run-$ref"},
-         |  "TDR": {"Source-Organization": "MoJ", "Contact-Name": "Jo Doe",
-         |    "Contact-Email": "jo@example.com", "Internal-Sender-Identifier": "$ref",
-         |    "Consignment-Completed-Datetime": "2024-01-01T00:00:00Z"}}}""".stripMargin
-    TarOps.packStrings(Seq(
-      s"$ref/TRE-$ref-metadata.json" -> metadata,
-      s"$ref/doc.xml" -> s"<akomaNtoso><judgment>body of $ref</judgment></akomaNtoso>",
-      s"$ref/doc.docx" -> s"docx bytes $ref",
-      s"$ref/parser.log" -> "ok"))
-  }
-
-  /** Stage archives under a temp bucket root at `<root>/b/k/<ref>.tar.gz`
-    * (matching [[v2Inner]]'s s3Bucket/s3Key) and return the `file:`
-    * resolver for processBatch. */
-  private def stage(archives: (String, Array[Byte])*): (String, String) => String = {
-    val root = Files.createTempDirectory("graft-bucket")
-    Files.createDirectories(root.resolve("b/k"))
-    archives.foreach { case (ref, bytes) =>
-      Files.write(root.resolve(s"b/k/$ref.tar.gz"), bytes)
-    }
-    val rootStr = root.toString
-    (bucket: String, key: String) => s"file:$rootStr/$bucket/$key"
-  }
 
   test("streaming ingest: unknown originator fails into the DLQ as redeliverable, store untouched") {
     implicit val sqlCtx = spark.sqlContext
@@ -384,5 +346,144 @@ class IngestStreamSpec extends SparkSpec {
     assert(byXml.size == 3)
     assert(byXml.count(_._2 == 2) == 2) // X/Y untouched by the third run
     assert(byXml.count(_._2 == 1) == 1) // Z processed exactly once
+  }
+
+  /** Counts the calls a round makes on a [[LocalStore]] — the
+    * skipped-work specs below pin which store passes a round runs. */
+  private final class CountingStore(inner: LocalStore) extends DocumentStore {
+    private val calls = new ConcurrentHashMap[String, AtomicInteger]()
+    private def hit[A](op: String)(body: => A): A = {
+      calls.computeIfAbsent(op, _ => new AtomicInteger()).incrementAndGet()
+      body
+    }
+    def count(op: String): Int = Option(calls.get(op)).fold(0)(_.get)
+    def spark = inner.spark
+    override def applyEffects(b: EffectBatch): Unit = hit("applyEffects")(inner.applyEffects(b))
+    def read(t: String): Option[DataFrame] = hit(s"read($t)")(inner.read(t))
+    override def documents: DataFrame = hit("documents")(inner.documents)
+    override def failures: DataFrame = hit("failures")(inner.failures)
+    def upsertDocuments(u: DataFrame): Unit = hit("upsertDocuments")(inner.upsertDocuments(u))
+    def setPublished(d: DataFrame): Unit = hit("setPublished")(inner.setPublished(d))
+    def appendIdentifiers(r: DataFrame): Unit = hit("appendIdentifiers")(inner.appendIdentifiers(r))
+    def upsertProperties(r: DataFrame): Unit = hit("upsertProperties")(inner.upsertProperties(r))
+    def appendAssets(r: DataFrame): Unit = hit("appendAssets")(inner.appendAssets(r))
+    def appendNotifications(r: DataFrame): Unit =
+      hit("appendNotifications")(inner.appendNotifications(r))
+    def appendFailures(r: DataFrame): Unit = hit("appendFailures")(inner.appendFailures(r))
+    def assetRoot: String = inner.assetRoot
+  }
+
+  private def counting(prefix: String) =
+    new CountingStore(LocalStore(spark, Files.createTempDirectory(prefix).toString))
+
+  private def failureRows(store: DocumentStore): Seq[(String, String, Boolean)] =
+    store.failures.collect().toSeq
+      .map(r => (r.getAs[String]("msg_id"), r.getAs[String]("error"), r.getAs[Boolean]("terminal")))
+
+  test("skipped work: a clean one-message round never reads or appends the failure ledger") {
+    val store = counting("graft-skip-clean")
+    val resolver = stage("REF-C" -> tdrArchive("REF-C", "[2024] EWHC 11 (KB)"))
+    IngestStream.processBatch(store, packageUri = resolver)(
+      Seq(sqs("msg-c1", v2Inner("REF-C"))).toDF("kind", "record_json"), 0L)
+
+    assert(store.count("applyEffects") == 1, "the clean message still ran its effect round")
+    assert(store.count("failures") == 0)
+    assert(store.count("appendFailures") == 0)
+    assert(store.documents.count() == 1)
+    assert(failureRows(store).isEmpty)
+  }
+
+  test("skipped work: a corrupt-tar round runs no resolution read and no effect round") {
+    val store = counting("graft-skip-corrupt")
+    // gzip magic followed by garbage: the archive cannot be read
+    val corrupt = Array(0x1f.toByte, 0x8b.toByte) ++ "not a deflate stream".getBytes("UTF-8")
+    val resolver = stage("REF-BAD" -> corrupt)
+    IngestStream.processBatch(store, packageUri = resolver)(
+      Seq(sqs("msg-bad", v2Inner("REF-BAD"))).toDF("kind", "record_json"), 0L)
+
+    assert(store.count("read(identifiers)") == 0)
+    assert(store.count("documents") == 0)
+    assert(store.count("applyEffects") == 0)
+    // the failures row is the one the full act phase reported: gather's
+    // unreadable-archive error, retryable on a first receive
+    val unreadable = intercept[Exception](TarOps.explode(corrupt)).getMessage
+    assert(failureRows(store) ==
+      Seq(("msg-bad", s"InvalidXMLException: unreadable archive: $unreadable", false)))
+    assert(store.documents.count() == 0)
+  }
+
+  test("skipped work: a mixed round still reports exactly the failed message") {
+    val store = counting("graft-skip-mixed")
+    // REF-GONE is never staged: its fetch fails, REF-M ingests cleanly
+    val resolver = stage("REF-M" -> tdrArchive("REF-M", "[2024] EWHC 12 (KB)"))
+    IngestStream.processBatch(store, packageUri = resolver)(
+      Seq(sqs("msg-gone", v2Inner("REF-GONE")), sqs("msg-m", v2Inner("REF-M")))
+        .toDF("kind", "record_json"), 0L)
+
+    val fails = failureRows(store)
+    assert(fails.map(_._1) == Seq("msg-gone"))
+    assert(fails.head._2.startsWith("ClientError"))
+    assert(!fails.head._3)
+    assert(store.documents.count() == 1)
+  }
+
+  /** Runs `body` and returns the executed plans of its `localCheckpoint`
+    * actions (listener delivery is async: waits until `want` arrived). */
+  private def checkpointPlans(want: Seq[QueryExecution] => Boolean)(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!want(seen.asScala.toSeq) && System.nanoTime() < deadline) Thread.sleep(50)
+      seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def observes(name: String)(qe: QueryExecution) =
+    qe.analyzed.exists { case c: CollectMetrics => c.name == name; case _ => false }
+  private val isFetch = observes("graft.ingest.fetched") _
+  private val isGather = observes("graft.ingest.gathered") _
+  private def shuffles(qe: QueryExecution) =
+    collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }
+
+  test("fetch fan-out: a one-message round fetches and gathers on one partition, no shuffle") {
+    val store = LocalStore(spark, Files.createTempDirectory("graft-fanout-one").toString)
+    val resolver = stage("REF-ONE" -> tdrArchive("REF-ONE", "[2024] EWHC 13 (KB)"))
+    val plans = checkpointPlans(qs => qs.exists(isFetch) && qs.exists(isGather)) {
+      IngestStream.processBatch(store, packageUri = resolver)(
+        Seq(sqs("msg-one", v2Inner("REF-ONE"))).toDF("kind", "record_json").repartition(3), 0L)
+    }
+    val fetch = plans.filter(isFetch)
+    val gather = plans.filter(isGather)
+    assert(fetch.size == 1 && gather.size == 1)
+    assert(fetch.head.toRdd.getNumPartitions == 1)
+    assert(shuffles(fetch.head).isEmpty, fetch.head.executedPlan.toString)
+    assert(gather.head.toRdd.getNumPartitions == 1)
+    assert(shuffles(gather.head).isEmpty, gather.head.executedPlan.toString)
+    assert(store.documents.count() == 1)
+  }
+
+  test("fetch fan-out: a round larger than the cap spreads to exactly the cap") {
+    val store = LocalStore(spark, Files.createTempDirectory("graft-fanout-cap").toString)
+    spark.conf.set(IngestStream.FetchParallelismKey, "2")
+    try {
+      // nothing staged: every fetch fails, which is enough to see its spread
+      val plans = checkpointPlans(_.exists(isFetch)) {
+        IngestStream.processBatch(store, packageUri = stage())(
+          (1 to 5).map(i => sqs(s"msg-cap-$i", v2Inner(s"REF-CAP-$i"))).toDF("kind", "record_json"),
+          0L)
+      }
+      val fetch = plans.filter(isFetch)
+      assert(fetch.size == 1)
+      assert(fetch.head.toRdd.getNumPartitions == 2)
+      assert(failureRows(store).map(_._1).sorted == (1 to 5).map(i => s"msg-cap-$i"))
+    } finally spark.conf.unset(IngestStream.FetchParallelismKey)
   }
 }
