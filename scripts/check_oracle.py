@@ -1,12 +1,16 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate.
 
-Usage: python3 scripts/check_oracle.py <verify_out_dir> <sf_dir>
+Usage: python3 scripts/check_oracle.py <verify_out_dir> <sf_dir> [q1,q2,...]
 
 Reads each <name>/ parquet result written by graft.Verify plus
 oracle_sql.json, runs each oracle statement in DuckDB with the sf tables
 registered as views, sorts columns by name / rows by all columns, and
 compares values exactly (strict superset of any hash compare).
+
+The optional third argument mirrors graft.Verify's: a comma-separated list
+of query names. Only those are scored, and each must have Spark output and
+match; everything else in the output dir or oracle_sql.json is ignored.
 """
 import json
 import sys
@@ -34,7 +38,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def main(out_dir: str, sf_dir: str) -> int:
+def main(out_dir: str, sf_dir: str, only: set | None = None) -> int:
     con = duckdb.connect()
     import os
     for t in TABLES:
@@ -50,6 +54,8 @@ def main(out_dir: str, sf_dir: str) -> int:
     n_pass = n_fail = 0
     import glob
     have = {p.rstrip("/").split("/")[-1] for p in glob.glob(f"{out_dir}/*/")}
+    if only is not None:
+        have &= only
     for name in sorted(have):
         if name not in oracles:
             try:
@@ -92,7 +98,7 @@ def main(out_dir: str, sf_dir: str) -> int:
     # only some queries); score only what was dumped instead of failing
     # every undumped oracle. The driver never passes this.
     if "--subset" not in sys.argv:
-        missing = set(oracles) - have
+        missing = (set(oracles) if only is None else only) - have
         for name in sorted(missing):
             print(f"✗ {name}: oracle declared but no spark output")
             n_fail += 1
@@ -101,4 +107,5 @@ def main(out_dir: str, sf_dir: str) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    sys.exit(main(args[0], args[1], set(args[2].split(",")) if len(args) > 2 else None))

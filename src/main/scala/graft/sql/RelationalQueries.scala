@@ -1,6 +1,9 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -2014,6 +2017,58 @@ object RelationalQueries {
        |FROM sc
        |ORDER BY nll_per_transition DESC, user_id, sid LIMIT $SurpriseTopK""".stripMargin
 
+  // ------------------------------------------------------ Markov induction
+  /** Backward induction shared by q142, q169 and q171: for every variant
+    * `(tag, keep)` of the row-normalized matrix `trans` (from_type,
+    * to_type, p), the probability of reaching `absorbing` within k ≤
+    * `horizon` steps from every state, as a local frame (variant, state,
+    * horizon, ph DECIMAL(18,12)). The states are the from ∪ to set of
+    * the UNFILTERED matrix; a variant whose filtered matrix is empty
+    * emits no rows.
+    *
+    * The matrix is collected once (Spark evaluates every variant's `keep`
+    * in that one pass) and all steps of all variants run in one local
+    * loop: the matrix is type²-bounded and corpus-independent, so a Spark
+    * job per step would cost scheduling, not compute.
+    *
+    * Parity: the arithmetic is Spark's own, so the frame equals the
+    * DataFrame formulation (and the oracle's unrolled SQL) exactly. Each
+    * product is `CAST(p * CAST(ph AS DOUBLE) AS DECIMAL(18,12))` —
+    * `Decimal(double)` then a HALF_UP `changePrecision` — with ph read
+    * back as a compact DECIMAL(18,12) from an UnsafeRow; sums are exact
+    * (unscaled longs); the absorbing state is pinned to 1 at every step;
+    * an edge with a null endpoint or p joins nothing, as in SQL. */
+  private[graft] def markovInduction(trans: DataFrame, variants: Seq[(Any, Column)],
+      absorbing: String, horizon: Int): DataFrame = {
+    val edges = trans.select(col("from_type"), col("to_type"), col("p"),
+        array(variants.indices.map(i => when(variants(i)._2, lit(i))): _*).as("keep"))
+      .collect()
+    val states = edges.flatMap(r => Seq(r.getString(0), r.getString(1))).distinct.toSeq
+    val one = 1000000000000L // 1 at scale 12
+    def d12(unscaled: Long): Decimal = Decimal.createUnsafe(unscaled, 18, 12)
+    def round12(x: Double): Long = {
+      val d = Decimal(x)
+      require(d.changePrecision(18, 12), s"$x overflows DECIMAL(18,12)")
+      d.toUnscaledLong
+    }
+    val rows = variants.zipWithIndex.flatMap { case ((tag, _), i) =>
+      val kept = edges.filter(_.getSeq[Any](3).contains(i))
+      val live = kept.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+      def pinned(sums: Map[String, Long]): Map[String, Long] =
+        states.map(s => s -> (if (s == absorbing) one else sums.getOrElse(s, 0L))).toMap
+      var ph = pinned(Map.empty)
+      if (kept.isEmpty) Nil else (1 to horizon).flatMap { k =>
+        ph = pinned(live.groupMapReduce(_.getString(0))(r =>
+          round12(r.getDouble(2) * d12(ph(r.getString(1))).toDouble))(_ + _))
+        states.map(s => Row(tag, s, k, d12(ph(s)).toJavaBigDecimal))
+      }
+    }
+    trans.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("variant", Literal(variants.head._1).dataType),
+      StructField("state", StringType), StructField("horizon", IntegerType),
+      StructField("ph", DecimalType(18, 12)))))
+  }
+
   // ---------------------------------------------------------------- q142
   /** Markov absorption: P(reach `purchase` within k ≤ [[AbsHorizon]]
     * steps) from every state, by unrolled backward induction over
@@ -2022,13 +2077,13 @@ object RelationalQueries {
     * matrix card, answering "how close is each state to converting"
     * instead of "what happens next".
     *
-    * 100 TB shape: the corpus work is exactly q121's (one user-keyed
-    * shuffle into type²-bounded transition counts, checkpointed once);
-    * every induction step then runs on type²-sized broadcast frames —
-    * the recursion never touches events again. Parity: transition
-    * probabilities are q121's single divisions; each per-step product
-    * rounds through DECIMAL(18,12) and sums exactly, so the oracle
-    * unrolls the identical arithmetic. */
+    * 100 TB shape: one corpus pass, exactly q121's (one user-keyed
+    * shuffle into type²-bounded transition counts); one collect of that
+    * matrix; then [[markovInduction]] runs the steps locally, so the
+    * recursion never touches events and runs no Spark job per step.
+    * Parity: transition probabilities are q121's single divisions; each
+    * per-step product rounds through DECIMAL(18,12) and sums exactly,
+    * so the oracle unrolls the identical arithmetic. */
   private val AbsHorizon = 3
   private val AbsTarget = "purchase"
 
@@ -2044,28 +2099,9 @@ object RelationalQueries {
       .withColumn("from_total", sum(col("n")).over(Window.partitionBy(col("from_type"))))
       .select(col("from_type"), col("to_type"),
         (col("n").cast(DoubleType) / col("from_total")).as("p"))
-      .localCheckpoint(true) // one corpus pass; every induction step reads this
-    val states = trans.select(col("from_type").as("state"))
-      .unionByName(trans.select(col("to_type").as("state"))).distinct()
-    val d12 = DecimalType(18, 12)
-    val zero = lit(0).cast(d12)
-    var pk = states.select(col("state"),
-      when(col("state") === AbsTarget, lit(1).cast(d12)).otherwise(zero).as("ph"))
-    val horizons = (1 to AbsHorizon).map { k =>
-      val step = trans
-        .join(broadcast(pk.withColumnRenamed("state", "to_type")), Seq("to_type"))
-        .select(col("from_type"),
-          (col("p") * col("ph").cast(DoubleType)).cast(d12).as("c"))
-        .groupBy(col("from_type")).agg(sum(col("c")).cast(d12).as("s"))
-      pk = states
-        .join(broadcast(step.withColumnRenamed("from_type", "state")), Seq("state"), "left")
-        .select(col("state"),
-          when(col("state") === AbsTarget, lit(1).cast(d12))
-            .otherwise(coalesce(col("s"), zero)).as("ph"))
-      pk.select(col("state"), lit(k).as("horizon"),
-        col("ph").cast(DoubleType).as("p_convert"))
-    }
-    horizons.reduce(_ unionByName _).orderBy(col("state"), col("horizon"))
+    markovInduction(trans, Seq(AbsTarget -> lit(true)), AbsTarget, AbsHorizon)
+      .select(col("state"), col("horizon"), col("ph").cast(DoubleType).as("p_convert"))
+      .orderBy(col("state"), col("horizon"))
   }
 
   val q142Sql: String = {
@@ -2122,12 +2158,12 @@ object RelationalQueries {
     * effect = 1 − P_removed/P_base; attribution share normalizes the
     * effects.
     *
-    * 100 TB shape: the corpus work is ONE user-keyed shuffle (q121's —
+    * 100 TB shape: one corpus pass, ONE user-keyed shuffle (q121's —
     * sessionization, truncation, lag pairs, and terminal rows all share
     * the partition key), collapsed to the type²-bounded transition
-    * matrix and checkpointed; every one of the (1 + |channels|) ×
-    * [[RemHorizon]] induction steps runs on broadcast type²-frames and
-    * never re-touches events. Channels are FIXED literals (q75's funnel
+    * matrix; one collect of that matrix; then all (1 + |channels|) ×
+    * [[RemHorizon]] induction steps run locally in [[markovInduction]]
+    * and never re-touch events. Channels are FIXED literals (q75's funnel
     * rule) so the oracle can unroll the identical removals; an absent
     * channel filters nothing and yields effect 0.
     *
@@ -2143,7 +2179,7 @@ object RelationalQueries {
 
   /** The shared journey chain: sessions truncated at the first
     * [[RemTarget]], START-prefixed, CONV/NULL-terminated, collapsed to
-    * the checkpointed row-normalized transition matrix — q169 and q171
+    * the row-normalized transition matrix — q169 and q171
     * both analyze exactly this frame (the q146/q153 shared-kernel
     * rule). */
   private def journeyTrans(spark: SparkSession, dir: String): DataFrame = {
@@ -2169,46 +2205,15 @@ object RelationalQueries {
       .withColumn("from_total", sum(col("n")).over(Window.partitionBy(col("from_type"))))
       .select(col("from_type"), col("to_type"),
         (col("n").cast(DoubleType) / col("from_total")).as("p"))
-      .localCheckpoint(true) // one corpus pass; every induction reads this
   }
 
   def q169RemovalAttribution(spark: SparkSession, dir: String): DataFrame = {
     val d12 = DecimalType(18, 12)
-    val trans = journeyTrans(spark, dir)
-    val states = trans.select(col("from_type").as("state"))
-      .unionByName(trans.select(col("to_type").as("state"))).distinct()
-    val zero = lit(0).cast(d12)
-
-    // ALL five matrices (base + one per removal) run through ONE tagged
-    // induction — [[RemHorizon]] checkpointed steps over a
-    // (variant × type²)-bounded frame — instead of 5 separate lazy
-    // 6-step chains, whose un-materialized broadcasts re-executed each
-    // prefix (O(steps²) sub-plans; measured 4.0 s → 3.1 s at sf0.1 —
-    // the remaining cost is FLAT across SFs, i.e. scheduling for the
-    // 6 checkpointed steps, which is the point: corpus-independent)
-    val taggedTrans = (trans.withColumn("variant", lit("__base")) +:
-      RemChannels.map(c => trans
-        .filter(col("from_type") =!= c && col("to_type") =!= c)
-        .withColumn("variant", lit(c))))
-      .reduce(_ unionByName _).localCheckpoint(true)
-    val vStates = states.crossJoin(
-      taggedTrans.select(col("variant")).distinct()).localCheckpoint(true)
-    var pk = vStates.select(col("variant"), col("state"),
-      when(col("state") === "conv", lit(1).cast(d12)).otherwise(zero).as("ph"))
-    for (_ <- 1 to RemHorizon) {
-      val step = taggedTrans
-        .join(pk.withColumnRenamed("state", "to_type"), Seq("variant", "to_type"))
-        .select(col("variant"), col("from_type"),
-          (col("p") * col("ph").cast(DoubleType)).cast(d12).as("c"))
-        .groupBy(col("variant"), col("from_type")).agg(sum(col("c")).cast(d12).as("s"))
-      pk = vStates
-        .join(step.withColumnRenamed("from_type", "state"), Seq("variant", "state"), "left")
-        .select(col("variant"), col("state"),
-          when(col("state") === "conv", lit(1).cast(d12))
-            .otherwise(coalesce(col("s"), zero)).as("ph"))
-        .localCheckpoint(true) // tiny; keeps each step one shallow job
-    }
-    val starts = pk.filter(col("state") === "start")
+    val ph = markovInduction(journeyTrans(spark, dir),
+      ("__base" -> lit(true)) +: RemChannels.map(c =>
+        c -> (col("from_type") =!= c && col("to_type") =!= c)),
+      "conv", RemHorizon)
+    val starts = ph.filter(col("state") === "start" && col("horizon") === RemHorizon)
     val base = starts.filter(col("variant") === "__base").select(col("ph").as("pb"))
     val removed = starts.filter(col("variant") =!= "__base")
       .select(col("variant").as("channel"), col("ph").as("pr"))
@@ -2317,12 +2322,12 @@ object RelationalQueries {
     * efficiency axiom Σφ = v(full) − v(∅) holds as an algebraic
     * identity over the computed v's (spec-pinned).
     *
-    * 100 TB shape: the corpus cost is the SAME one user-keyed shuffle
-    * as q169 (shared [[journeyTrans]] kernel); all 16 chains run
-    * through ONE variant-tagged induction ([[RemHorizon]] checkpointed
-    * steps over a 16×type²-bounded frame — q169's device, just a wider
-    * tag), and the Shapley fold is a 32-row mapping-table join. The
-    * whole analysis layer is corpus-independent.
+    * 100 TB shape: one corpus pass, the SAME one user-keyed shuffle as
+    * q169 (shared [[journeyTrans]] kernel); one collect of the
+    * type²-bounded matrix; then all 16 chains run locally in
+    * [[markovInduction]] (q169's call, just 16 variants), and the
+    * Shapley fold is a 32-row mapping-table join over that local frame.
+    * The whole analysis layer is corpus-independent.
     *
     * Parity: weights enter as the INTEGER factors |S|!(n−1−|S|)! ∈
     * {6, 2} (dividing by n! = 24 only at the very end — 1/12 is not a
@@ -2331,39 +2336,16 @@ object RelationalQueries {
     * exact decimals; φ and the share are each one IEEE division. */
   def q171ShapleyAttribution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val d12 = DecimalType(18, 12)
-    val trans = journeyTrans(spark, dir)
-    val states = trans.select(col("from_type").as("state"))
-      .unionByName(trans.select(col("to_type").as("state"))).distinct()
-    val zero = lit(0).cast(d12)
     val n = RemChannels.length
     val core = Seq("start", RemTarget, "conv", "no_conv")
     def allowed(mask: Int): Seq[String] =
       core ++ RemChannels.zipWithIndex.collect { case (c, i) if (mask & (1 << i)) != 0 => c }
-    val tagged = (0 until (1 << n)).map { m =>
-      val a = allowed(m)
-      trans.filter(col("from_type").isin(a: _*) && col("to_type").isin(a: _*))
-        .withColumn("variant", lit(m))
-    }.reduce(_ unionByName _).localCheckpoint(true)
-    val vStates = states.crossJoin(
-      tagged.select(col("variant")).distinct()).localCheckpoint(true)
-    var pk = vStates.select(col("variant"), col("state"),
-      when(col("state") === "conv", lit(1).cast(d12)).otherwise(zero).as("ph"))
-    for (_ <- 1 to RemHorizon) {
-      val step = tagged
-        .join(pk.withColumnRenamed("state", "to_type"), Seq("variant", "to_type"))
-        .select(col("variant"), col("from_type"),
-          (col("p") * col("ph").cast(DoubleType)).cast(d12).as("c"))
-        .groupBy(col("variant"), col("from_type")).agg(sum(col("c")).cast(d12).as("s"))
-      pk = vStates
-        .join(step.withColumnRenamed("from_type", "state"), Seq("variant", "state"), "left")
-        .select(col("variant"), col("state"),
-          when(col("state") === "conv", lit(1).cast(d12))
-            .otherwise(coalesce(col("s"), zero)).as("ph"))
-        .localCheckpoint(true) // tiny; one shallow job per step
-    }
-    val v = pk.filter(col("state") === "start")
-      .select(col("variant"), col("ph")).localCheckpoint(true)
+    val v = markovInduction(journeyTrans(spark, dir), (0 until (1 << n)).map { m =>
+        val a = allowed(m)
+        m -> (col("from_type").isin(a: _*) && col("to_type").isin(a: _*))
+      }, "conv", RemHorizon)
+      .filter(col("state") === "start" && col("horizon") === RemHorizon)
+      .select(col("variant"), col("ph"))
     // Shapley mapping: integer weights |S|!·(n−1−|S|)! per marginal
     def fact(x: Int): Int = (1 to x).product
     val mapping = (for {

@@ -50,8 +50,6 @@ class InventoryPlanAuditSpec extends SparkSpec {
       "modulo-sampled query set broadcast against the corpus (bounded by the sampling rate)"),
     "q170_bpe_compression" -> (1,
       "per-lang baseline frame: group-by lang is bounded by the language DOMAIN"),
-    "q171_shapley_attribution" -> (2,
-      "event-type state grid crossed into the transition ledger (bounded state domain)"),
     "q185_ivf_recall_curve" -> (3,
       "query sample + literal nprobe grid (Generate of a literal array defeats the prover)"),
     "q193_packing_curve" -> (1,

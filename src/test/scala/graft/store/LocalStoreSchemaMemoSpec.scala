@@ -1,10 +1,8 @@
 package graft.store
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Pins LocalStore's per-instance table-schema memo: repeated reads skip
   * the parquet footer-inference job, yet every read still sees what the
@@ -19,31 +17,6 @@ class LocalStoreSchemaMemoSpec extends SparkSpec {
 
   private def ids(uris: String*) =
     uris.map(u => (u, "slug", u, null: String)).toDF("document_uri", "id_kind", "id_value", "id_type")
-
-  /** Spark jobs started while `body` ran. The listener bus is async, so a
-    * marker job is run after `body` and waited for: the bus is FIFO. */
-  private def jobsDuring(body: => Unit): Int = {
-    val started = new AtomicInteger()
-    @volatile var markerSeen = false
-    val marker = "schema-memo-spec-marker"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          markerSeen = true
-        else if (!markerSeen) started.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener bus did not drain within 30 s")
-      started.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("a repeated read runs no footer-inference job") {
     val store = LocalStore(spark, Files.createTempDirectory("graft-memo-jobs").toString)
