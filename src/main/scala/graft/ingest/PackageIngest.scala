@@ -633,17 +633,7 @@ object PackageIngest {
           // from the tmp+rename commit, not Hadoop CRCs; on a real object
           // store (s3a/HDFS) this match is a no-op.
           val fs = dest.getFileSystem(conf.value) match {
-            case l: org.apache.hadoop.fs.LocalFileSystem =>
-              val raw = l.getRawFileSystem
-              // a store written through the CHECKSUMMED wrapper (builds
-              // predating the raw-FS switch) left `.name.crc` siblings;
-              // overwriting dest through the raw FS would leave them stale
-              // and a later checksummed read throws ChecksumException —
-              // drop the sibling best-effort before the overwrite
-              try raw.delete(new org.apache.hadoop.fs.Path(
-                dest.getParent, s".${dest.getName}.crc"), false)
-              catch { case _: java.io.IOException => () }
-              raw
+            case l: org.apache.hadoop.fs.LocalFileSystem => l.getRawFileSystem
             case other => other
           }
           // commit via tmp + rename: on local/HDFS a crashed create() leaves

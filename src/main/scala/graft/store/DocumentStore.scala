@@ -119,6 +119,31 @@ trait DocumentStore {
 object DocumentStore {
   import org.apache.spark.sql.types._
 
+  /** Runs the thunks concurrently (one thread each), returns results in
+    * order; the first failure (in thunk order) rethrows with its original
+    * type after every thread finishes — none is interrupted mid-write. */
+  private[store] def inParallel[T](thunks: Seq[() => T]): Seq[T] =
+    if (thunks.sizeIs <= 1) thunks.map(_.apply())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+      try {
+        val fs = thunks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = t()
+        }))
+        var failure: Throwable = null
+        val out = fs.map { f =>
+          try Some(f.get())
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              if (failure == null) failure = e.getCause
+              None
+          }
+        }
+        if (failure != null) throw failure
+        out.map(_.get)
+      } finally pool.shutdownNow()
+    }
+
   /** The store's table schemas — the cross-implementation contract the
     * parity spec compares against (names, types, order). */
   val schemas: Map[String, StructType] = Map(

@@ -189,18 +189,9 @@ final case class HttpStore(spark: SparkSession, endpoint: String,
     // same deterministic txn id, so clear any failed attempt's parts first
     // (and stamp the commit with the epoch the abort earned — zombie guard)
     val epoch = if (txnScope.isDefined) abort(ep, txn) else 0L
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(frames.size)
-    try {
-      val staged = frames.map { case (op, df) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = stage(ep, txn, Some(op), df)
-        })
-      }
-      staged.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdownNow()
+    DocumentStore.inParallel(frames.map { case (op, df) =>
+      () => stage(ep, txn, Some(op), df)
+    })
     val body = frames.map { case (op, df) => s"$op\t${df.schema.json}" }.mkString("\n")
     val (c, bdy) = HttpStore.postCommit(s"$ep/txn/$txn/commitBatch?epoch=$epoch",
       body.getBytes("UTF-8"))

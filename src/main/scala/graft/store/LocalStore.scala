@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
   *                    (W2), also the dimension J1–J3 joins against;
   *   - `properties`  (uri, name, value) — upsert on (uri, name) (W3/W4);
   *   - `assets`      (uri, asset_type, dest_filename) — append (W5–W8);
-  *   - `notifications` (uri, action, payload) — append (W9);
+  *   - `notifications` (uri, action, payload, delivered) — append (W9);
   *   - `failures`    (msg_id, error, terminal) — the partial-batch /
   *                    DLQ table (W11).
   *
@@ -36,37 +36,29 @@ import org.apache.spark.sql.types.StructType
   * provided (a crash mid-batch can land some buckets and not others) —
   * the same already-accepted exposure as a crash between any two of the
   * reference's non-transactional effects; redelivery replays the batch
-  * and every keyed effect converges. A pre-bucketing (flat) table
-  * migrates to the bucketed layout on its first upsert.
+  * and every keyed effect converges.
   */
 final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64)
     extends DocumentStore {
 
   Files.createDirectories(Paths.get(base))
-  adoptLegacyAssetBytes()
 
   private def path(t: String) = s"$base/$t"
   private def exists(t: String) = { recover(t); Files.exists(Paths.get(path(t))) }
 
   /** Reads drop the physical `bucket` partition column — bucketing is a
-    * storage layout, not table schema. A pre-heal `notifications` read
-    * goes through mergeSchema so the `delivered` column survives mixed
-    * legacy files even before the first append runs the migration. */
+    * storage layout, not table schema. */
   def read(t: String): Option[DataFrame] =
     if (!exists(t)) None
     else {
-      val df =
-        if (t == "notifications" && !Files.exists(notifMarkerPath))
-          healedNotifications()
-        else parquet(t, path(t))
+      val df = parquet(t, path(t))
       Some(if (df.columns.contains("bucket")) df.drop("bucket") else df)
     }
 
   /** Each table's data schema (the `bucket` partition column excluded),
     * memoized per store instance: a schemaless parquet read runs a
     * footer-inference Spark job, and a wire round reads the same few
-    * tables many times. A whole-table staged swap or heal drops its entry
-    * ([[writeStaged]]); a bucketed MERGE records the schema it just wrote
+    * tables many times. A bucketed MERGE records the schema it just wrote
     * ([[mergeBuckets]]). Absence is never memoized, so a table another
     * instance creates is seen on the next read. */
   private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
@@ -116,29 +108,6 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     }
   }
 
-  /** Whole-table staged swap (append-table heals, legacy migration): stage
-    * the new state in a sibling dir, then swap via renames — a crash at
-    * ANY point leaves either the live state or `.old_t` intact, and
-    * [[recover]] restores the latter on the next touch. */
-  private def writeStaged(t: String)(stage: String => Unit): Unit = {
-    recover(t)
-    val next = Paths.get(s"$base/.next_$t")
-    val old = Paths.get(s"$base/.old_$t")
-    val live = Paths.get(path(t))
-    stage(next.toString)
-    // a crash AFTER a completed swap but before its cleanup leaves a
-    // committed-over leftover .old_t next to a live dir — safe to drop
-    if (Files.exists(old)) delete(old)
-    if (Files.exists(live))
-      Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(next, live, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old)) delete(old) // commit: drop the pre-swap state
-    schemas.remove(t)
-  }
-
-  private def write(t: String, df: DataFrame): Unit =
-    writeStaged(t)(p => df.write.mode(SaveMode.Overwrite).parquet(p))
-
   private def append(t: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(path(t))
 
@@ -156,18 +125,6 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
   /** crc32, not Spark's murmur3 `hash()`: a spec'd, version-independent
     * function — the on-disk assignment must outlive Spark upgrades. */
   private def bucketOf(key: Column, n: Int): Column = pmod(crc32(key), lit(n))
-
-  private def hasBucketDirs(t: String): Boolean = {
-    val live = Paths.get(path(t))
-    if (!Files.exists(live)) false
-    else {
-      val s = Files.list(live)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.exists(_.getFileName.toString.startsWith("bucket="))
-      } finally s.close()
-    }
-  }
 
   /** Bucketed MERGE: compute the buckets `batch` touches (a bounded
     * driver-side collect of at most `buckets` longs), read ONLY those
@@ -192,8 +149,6 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     }
     lap("touched-collect")
     if (touched.isEmpty) return
-    if (Files.exists(Paths.get(path(t))) && !hasBucketDirs(t))
-      migrateToBuckets(t, keyCol, n)
 
     val live = Paths.get(path(t))
     val curDirs = touched.map(b => live.resolve(s"bucket=$b"))
@@ -231,17 +186,6 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     schemas.put(t, dataSchema(merged.schema))
   }
 
-  /** One-time migration of a flat (pre-bucketing) table into `bucket=NN`
-    * sub-dirs, through the whole-table staged swap — O(table) ONCE, then
-    * every later upsert is O(touched buckets). */
-  private def migrateToBuckets(t: String, keyCol: String, n: Int): Unit = {
-    val cur = spark.read.parquet(path(t))
-    writeStaged(t) { p =>
-      cur.withColumn("bucket", bucketOf(col(keyCol), n))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(p)
-    }
-  }
-
   // ------------------------------------------------------------- tables
 
   /** Overlapped effect round: the five frames target five DISJOINT table
@@ -252,9 +196,10 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     * wall, BASELINE.md). Spark schedules jobs submitted from concurrent
     * driver threads onto the same executor pool, so the small per-table
     * jobs interleave instead of queueing. Any failure fails the round
-    * (rethrown with its original type — the trait's failure contract
-    * feeds the error taxonomy); a partial round is the trait's documented
-    * crash exposure, converged by redelivery. */
+    * (rethrown with its original type once the other table writes have
+    * finished — the trait's failure contract feeds the error taxonomy);
+    * a partial round is the trait's documented crash exposure, converged
+    * by redelivery. */
   override def applyEffects(b: EffectBatch): Unit = {
     val debug = System.getProperty("graft.store.debugRound") != null
     def traced(name: String, op: () => Unit): () => Unit =
@@ -270,19 +215,7 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
       b.notifications.map(df => traced("appendNotifications", () => appendNotifications(df))),
       b.properties.map(df => traced("upsertProperties", () => upsertProperties(df))),
       b.assets.map(df => traced("appendAssets", () => appendAssets(df)))).flatten
-    if (ops.sizeIs <= 1) ops.foreach(_.apply())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(ops.size)
-      try {
-        val fs = ops.map(op => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = op()
-        }))
-        fs.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      } finally pool.shutdownNow()
-    }
+    DocumentStore.inParallel(ops); ()
   }
 
   /** One row per uri — winner = greatest xml, deterministic. SHARED by
@@ -402,64 +335,15 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     * Hadoop FileSystem API, so the same code targets s3a/HDFS on a
     * cluster.
     *
-    * DELIBERATELY DISJOINT from the `assets` TABLE's directory (round 15;
-    * was `$base/assets`, shared with the table): a parquet read lists its
-    * root recursively, so byte files under the table path (a) inflate
-    * every table read's file listing by O(copied assets) — at fleet scale
-    * that is millions of stats for a metadata query — and (b) break
-    * schema inference outright in the mid-round crash window where bytes
-    * landed but no table row has (RedeliveryConvergenceSpec observes that
-    * window). Object-store rule of thumb encoded here: data-lake tables
-    * and blob trees never share a listing prefix.
-    *
-    * LAYOUT MIGRATION (round 16): a store written before the split holds
-    * its byte tree under the OLD `$base/assets` root — invisible at the
-    * new root, so redelivery would re-copy everything under `asset_files/`
-    * while the orphans keep inflating the assets TABLE's listing (the
-    * exact problem the split targets). Store open adopts the legacy tree:
-    * see [[adoptLegacyAssetBytes]]. */
+    * DELIBERATELY DISJOINT from the `assets` TABLE's directory: a parquet
+    * read lists its root recursively, so byte files under the table path
+    * (a) inflate every table read's file listing by O(copied assets) — at
+    * fleet scale that is millions of stats for a metadata query — and (b)
+    * break schema inference outright in the mid-round crash window where
+    * bytes landed but no table row has (RedeliveryConvergenceSpec observes
+    * that window). Object-store rule of thumb encoded here: data-lake
+    * tables and blob trees never share a listing prefix. */
   def assetRoot: String = s"$base/asset_files"
-
-  /** Moves any legacy byte tree out of the `assets` TABLE directory into
-    * [[assetRoot]] on store open. A top-level DIRECTORY under the table
-    * dir can only be a legacy `<uri>/…` byte folder — parquet appends
-    * write only files, and Spark's own artifacts (`_temporary`,
-    * `_SUCCESS`, swap markers) start with `_`/`.` and are skipped. The
-    * merge is per-FILE: a file already present at the new root wins (the
-    * reference overwrites the same keys on redelivery, so the re-copied
-    * byte is current) and the legacy copy is dropped. Idempotent — a
-    * second open finds no legacy dirs — and one listing when there is
-    * nothing to do. */
-  private def adoptLegacyAssetBytes(): Unit = {
-    val oldRoot = Paths.get(path("assets"))
-    if (!Files.isDirectory(oldRoot)) return
-    val legacyDirs = {
-      val s = Files.list(oldRoot)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(Files.isDirectory(_))
-          .filterNot { d =>
-            val n = d.getFileName.toString
-            n.startsWith("_") || n.startsWith(".") || n.startsWith("bucket=")
-          }.toList
-      } finally s.close()
-    }
-    def mergeMove(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-      if (Files.isDirectory(src)) {
-        Files.createDirectories(dst)
-        val kids = {
-          val s = Files.list(src)
-          try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toList }
-          finally s.close()
-        }
-        kids.foreach(c => mergeMove(c, dst.resolve(c.getFileName.toString)))
-        Files.delete(src)
-      } else if (!Files.exists(dst)) Files.move(src, dst)
-      else Files.delete(src)
-    legacyDirs.foreach { d =>
-      mergeMove(d, Paths.get(assetRoot).resolve(d.getFileName.toString))
-    }
-  }
 
   /** W5–W8: add asset-copy records. Idempotent on the destination key —
     * the reference overwrites the same S3 keys on redelivery. */
@@ -472,32 +356,9 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     append("assets", fresh)
   }
 
-  /** W9: append notification records (uri, action, payload, delivered).
-    * Append-only, so a store written before the `delivered` column existed
-    * holds mixed-schema files — and a plain read takes ONE footer's
-    * schema, so `delivered` could silently vanish. Appends therefore heal
-    * the table once: detect the legacy layout (a marker file, so the check
-    * is a stat, not a scan per batch), mergeSchema-read, default
-    * `delivered=false` for legacy rows, and rewrite through the staged
-    * swap. Crash between rewrite and marker re-runs the (idempotent)
-    * migration. Pre-heal READS go through the same mergeSchema projection
-    * (see [[read]]) so a legacy store is never mis-read, healed or not. */
-  private val notifSchemaMarker = "._delivered_v2"
-  private def notifMarkerPath = Paths.get(s"${path("notifications")}/$notifSchemaMarker")
-  private def healedNotifications(): DataFrame = {
-    val cur = spark.read.option("mergeSchema", "true").parquet(path("notifications"))
-    val withDelivered =
-      if (cur.columns.contains("delivered"))
-        cur.withColumn("delivered", coalesce(col("delivered"), lit(false)))
-      else cur.withColumn("delivered", lit(false))
-    withDelivered.select("uri", "action", "payload", "delivered")
-  }
-  def appendNotifications(rows: DataFrame): Unit = {
-    if (exists("notifications") && !Files.exists(notifMarkerPath))
-      write("notifications", healedNotifications())
+  /** W9: append notification records (uri, action, payload, delivered). */
+  def appendNotifications(rows: DataFrame): Unit =
     append("notifications", rows.select("uri", "action", "payload", "delivered"))
-    if (!Files.exists(notifMarkerPath)) Files.createFile(notifMarkerPath)
-  }
 
   /** W11: append per-message failures (the DLQ table). */
   def appendFailures(rows: DataFrame): Unit = append("failures", rows)

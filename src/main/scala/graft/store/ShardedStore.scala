@@ -69,7 +69,7 @@ final case class ShardedStore(shards: IndexedSeq[DocumentStore])
     * interrupted mid-apply — a torn apply inside a shard is the shard's
     * own crash contract, not ours to create). */
   private def eachShard(body: Int => Unit): Unit = {
-    ShardedStore.inParallel((0 until n).map(i => () => body(i))); ()
+    DocumentStore.inParallel((0 until n).map(i => () => body(i))); ()
   }
 
   override def withBatchScope(scope: String): DocumentStore =
@@ -95,7 +95,7 @@ final case class ShardedStore(shards: IndexedSeq[DocumentStore])
     // shard reads fetch in PARALLEL: a wire shard's schema request
     // materializes a server-side snapshot, so serial fetches would pay
     // N snapshot round-trips end-to-end per resolution read
-    val parts = ShardedStore.inParallel((0 until n).map(i =>
+    val parts = DocumentStore.inParallel((0 until n).map(i =>
       () => shards(i).read(t))).flatten
     if (parts.isEmpty) None else Some(parts.reduce(_.unionByName(_)))
   }
@@ -121,30 +121,4 @@ final case class ShardedStore(shards: IndexedSeq[DocumentStore])
   /** Shared byte root (see class doc: the byte tree scales by prefix on
     * the object store itself, so it is not table-sharded). */
   def assetRoot: String = shards.head.assetRoot
-}
-
-object ShardedStore {
-  /** Runs the thunks concurrently (one thread each), returns results in
-    * order; the first failure rethrows after all threads finish. */
-  private[store] def inParallel[T](thunks: Seq[() => T]): Seq[T] =
-    if (thunks.sizeIs <= 1) thunks.map(_.apply())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-      try {
-        val fs = thunks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
-          def call(): T = t()
-        }))
-        var failure: Throwable = null
-        val out = fs.map { f =>
-          try Some(f.get())
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              if (failure == null) failure = e.getCause
-              None
-          }
-        }
-        if (failure != null) throw failure
-        out.map(_.get)
-      } finally pool.shutdownNow()
-    }
 }

@@ -70,7 +70,7 @@ final case class ShardedWireStore(spark: SparkSession,
     // staged leftovers and earns the attempt epoch each commit carries
     val epochs: Seq[Long] =
       if (txnScope.isEmpty) Seq.fill(n)(0L)
-      else ShardedStore.inParallel((0 until n).map(i => () => {
+      else DocumentStore.inParallel((0 until n).map(i => () => {
         val (c, bdy) = HttpStore.post(s"${endpoints(i)}/txn/${txns(i)}/abort",
           Array.emptyByteArray)
         if (c != 200) throw new RuntimeException(s"ShardedWireStore abort: HTTP $c $bdy")
@@ -78,14 +78,14 @@ final case class ShardedWireStore(spark: SparkSession,
       }))
     // ONE distributed staging pass per frame (frames in parallel — they
     // are disjoint tables and disjoint server part files)
-    ShardedStore.inParallel(frames.map { case (op, key, df) =>
+    DocumentStore.inParallel(frames.map { case (op, key, df) =>
       () => stageRouted(op, key, df, txns)
     })
     // one commitBatch per shard, in parallel: the commits queue on N
     // INDEPENDENT server write locks — the applies overlap across shards
     val body = frames.map { case (op, _, df) => s"$op\t${df.schema.json}" }
       .mkString("\n").getBytes("UTF-8")
-    ShardedStore.inParallel((0 until n).map(i => () => {
+    DocumentStore.inParallel((0 until n).map(i => () => {
       val (c, bdy) = HttpStore.postCommit(
         s"${endpoints(i)}/txn/${txns(i)}/commitBatch?epoch=${epochs(i)}", body)
       if (c != 200)

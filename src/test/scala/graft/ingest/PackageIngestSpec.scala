@@ -433,6 +433,29 @@ class PackageIngestSpec extends SparkSpec {
       assert(Files.exists(tarDest))
       assert(java.util.Arrays.equals(Files.readAllBytes(tarDest), winner.archive),
         "tarball asset bytes must come from the deterministic winner package")
+
+      // asset bytes go through the raw local FS, so no `.crc` sibling
+      // exists to go stale when the same key is overwritten: a redelivery
+      // of the winner rewrites every asset, and a CHECKSUMMED read of the
+      // result still verifies
+      def crcFiles(): List[String] = {
+        import scala.jdk.CollectionConverters._
+        val s = Files.walk(Paths.get(store.assetRoot))
+        try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".crc")).toList
+        finally s.close()
+      }
+      def fileKey() = Files.readAttributes(tarDest,
+        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+      assert(crcFiles().isEmpty, "asset copies must not leave checksum siblings")
+      val firstCopy = fileKey()
+      PackageIngest.ingest(spark, Seq(winner), store)
+      assert(fileKey() != firstCopy, "the redelivery must rewrite the tarball (tmp + rename)")
+      assert(crcFiles().isEmpty, "an asset overwrite must not leave checksum siblings")
+      val checked = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      val in = checked.open(new org.apache.hadoop.fs.Path(tarDest.toString))
+      val reread = try in.readAllBytes() finally in.close()
+      assert(java.util.Arrays.equals(reread, winner.archive),
+        "the overwritten tarball must read back through the checksummed FS as the winner's bytes")
     }
   }
 }

@@ -29,34 +29,12 @@ class LocalStoreSchemaMemoSpec extends SparkSpec {
     assert(store.documents.count() == 1)
   }
 
-  test("after the legacy notifications heal, memoized reads return delivered") {
-    val base = Files.createTempDirectory("graft-memo-heal").toString
-    val store = LocalStore(spark, base)
-    // a store written before `delivered` existed: 3-column files on disk
-    Seq(("doc/1", "new", "REF-1")).toDF("uri", "action", "payload")
-      .write.parquet(s"$base/notifications")
-    assert(store.read("notifications").get.columns.contains("delivered"))
-    store.appendNotifications(Seq(("doc/2", "new", "REF-2", true))
-      .toDF("uri", "action", "payload", "delivered"))
-    // the heal rewrote the table through a staged swap; later reads (the
-    // memoized path) keep the healed schema
-    for (_ <- 1 to 2) {
-      val rows = store.read("notifications").get.collect()
-      assert(rows.head.schema.fieldNames.contains("delivered"))
-      assert(rows.map(r => r.getAs[String]("uri") -> r.getAs[Boolean]("delivered")).toMap ==
-        Map("doc/1" -> false, "doc/2" -> true))
-    }
-    store.appendNotifications(Seq(("doc/3", "updated", "REF-3", false))
-      .toDF("uri", "action", "payload", "delivered"))
-    assert(store.read("notifications").get.count() == 3)
-  }
-
   test("a second instance on the same base sees tables and rows the first writes") {
     val base = Files.createTempDirectory("graft-memo-multi").toString
     val a = LocalStore(spark, base)
     val b = LocalStore(spark, base)
     // absence is not memoized
-    assert(b.read("identifiers").isEmpty)
+    assert(b.read("identifiers").isEmpty && b.read("assets").isEmpty)
     a.appendIdentifiers(ids("doc/1"))
     assert(b.read("identifiers").get.count() == 1)
     a.appendIdentifiers(ids("doc/2"))

@@ -98,58 +98,23 @@ class LocalStoreSwapSpec extends SparkSpec {
     assert(docs.find(_.getAs[String]("uri") == "doc/1").get.getAs[Int]("version") == 2)
   }
 
-  test("legacy flat table migrates to the bucketed layout on first upsert") {
-    val base = Files.createTempDirectory("graft-legacy-flat").toString
-    // a pre-bucketing store: parquet files directly under documents/
-    Seq(("doc/old", "<x/>", "judgment", "m", null: String, false, "inserted", 3, true))
-      .toDF("uri", "xml", "doc_type", "annotation_message", "annotation_payload",
-        "automated", "upload_state", "version", "is_published")
-      .write.parquet(s"$base/documents")
-
-    val store = LocalStore(spark, base, buckets = 8)
-    store.upsertDocuments(Seq(docRow("doc/new")).toDF(docCols: _*))
-
-    assert(bucketFiles(base).nonEmpty) // layout is bucketed now
-    val docs = store.documents.collect()
-    assert(docs.length == 2)
-    val old = docs.find(_.getAs[String]("uri") == "doc/old").get
-    assert(old.getAs[Int]("version") == 3 && old.getAs[Boolean]("is_published"))
-    assert(docs.find(_.getAs[String]("uri") == "doc/new").get.getAs[Int]("version") == 1)
-  }
-
-  test("legacy notifications table heals to the delivered schema on first append") {
-    val base = Files.createTempDirectory("graft-notif").toString
+  test("a failing table write in applyEffects rethrows its own exception; the others land") {
+    val base = Files.createTempDirectory("graft-apply-fail").toString
     val store = LocalStore(spark, base)
-    // a store written before `delivered` existed: 3-column files on disk
-    Seq(("doc/1", "new", "REF-1")).toDF("uri", "action", "payload")
-      .write.parquet(s"$base/notifications")
-    store.appendNotifications(Seq(("doc/2", "updated", "REF-2", true))
-      .toDF("uri", "action", "payload", "delivered"))
-    val rows = store.read("notifications").get.collect()
-    assert(rows.length == 2)
-    assert(!rows.find(_.getAs[String]("uri") == "doc/1").get.getAs[Boolean]("delivered"))
-    assert(rows.find(_.getAs[String]("uri") == "doc/2").get.getAs[Boolean]("delivered"))
-    // second append skips the (already-run) migration and stays uniform
-    store.appendNotifications(Seq(("doc/3", "new", "REF-3", false))
-      .toDF("uri", "action", "payload", "delivered"))
-    val again = store.read("notifications").get.collect()
-    assert(again.length == 3 && again.count(_.getAs[Boolean]("delivered")) == 1)
-  }
-
-  test("mixed-schema notifications READ before any append keeps the delivered column") {
-    val base = Files.createTempDirectory("graft-notif-read").toString
-    // legacy 3-column file AND a post-delivered 4-column file, no marker:
-    // a plain single-footer read could silently drop `delivered`
-    Seq(("doc/1", "new", "REF-1")).toDF("uri", "action", "payload")
-      .write.parquet(s"$base/notifications")
-    Seq(("doc/2", "updated", "REF-2", true)).toDF("uri", "action", "payload", "delivered")
-      .write.mode("append").parquet(s"$base/notifications")
-
-    val store = LocalStore(spark, base)
-    val rows = store.read("notifications").get.collect()
-    assert(rows.length == 2)
-    assert(rows.head.schema.fieldNames.contains("delivered"))
-    assert(!rows.find(_.getAs[String]("uri") == "doc/1").get.getAs[Boolean]("delivered"))
-    assert(rows.find(_.getAs[String]("uri") == "doc/2").get.getAs[Boolean]("delivered"))
+    // a notifications frame without `delivered` fails its projection at
+    // once, while the MERGE writes on either side of it are still running
+    val err = intercept[Exception] {
+      store.applyEffects(EffectBatch(
+        documents = Some(Seq(docRow("doc/1")).toDF(docCols: _*)),
+        notifications = Some(Seq(("doc/1", "new", "REF-1")).toDF("uri", "action", "payload")),
+        properties = Some(Seq(("doc/1", "court", "EWCA")).toDF("uri", "name", "value"))))
+    }
+    assert(err.isInstanceOf[org.apache.spark.sql.AnalysisException],
+      s"expected the write's AnalysisException, got ${err.getClass.getName}")
+    assert(store.documents.collect().map(_.getAs[String]("uri")).toSeq == Seq("doc/1"),
+      "the documents write must still finish when another table write fails")
+    assert(store.read("properties").map(_.count()).contains(1L),
+      "a table write ordered after the failing one must not be interrupted")
+    assert(store.read("notifications").isEmpty)
   }
 }
