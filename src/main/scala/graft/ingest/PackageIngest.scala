@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.model.IngestError
 import graft.store.DocumentStore
 import graft.tar.{TarMember, TarOps}
 import graft.metrics.Observe
@@ -115,6 +116,13 @@ object PackageIngest {
       case Some(metadataJson) =>
         val xmlName = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "xml")).flatten
         val fname = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "filename"))
+        val images = jsonArray(metadataJson, Seq("parameters", "TRE", "payload", "images"))
+        // each image name becomes the asset destination
+        // `<assetRoot>/<uri>/<name>` in the act phase, where Hadoop `Path`
+        // resolves `..`: a name that could leave that directory fails the
+        // package here, before any member is resolved or byte written
+        if (!images.forall(safeAssetName))
+          return failed(IngestError.UnsafeAssetName.name).copy(member_names = names)
         // the asset plan's src_member needles, derived HERE exactly as the
         // act phase derives them (original_ref prefix — the tar's internal
         // folder predates the S4 rewrite): parser.log, the source doc, and
@@ -125,8 +133,7 @@ object PackageIngest {
           if (p.digest == null) Seq.empty
           else Seq(s"${p.consignment_ref}/parser.log") ++
             fname.flatten.map(f => s"${p.consignment_ref}/$f") ++
-            jsonArray(metadataJson, Seq("parameters", "TRE", "payload", "images"))
-              .map(i => s"${p.consignment_ref}/$i")
+            images.map(i => s"${p.consignment_ref}/$i")
         val (xmlContent, assetMembers) = resolve(xmlName, assetNeedles)
         if (p.digest != null) graft.tar.MemberCache.put(p.digest, assetMembers)
         GatheredPackage(
@@ -140,6 +147,13 @@ object PackageIngest {
           names, null)
     }
   }
+
+  /** A package-supplied asset name that stays strictly inside its
+    * document's asset directory: not absolute, and no empty, `.` or `..`
+    * segment and no control character. */
+  private[ingest] def safeAssetName(name: String): Boolean =
+    !name.startsWith("/") && !name.exists(Character.isISOControl) &&
+      name.split("/", -1).forall(seg => seg.nonEmpty && seg != "." && seg != "..")
 
   /** The asset pass's member lookup contract: exact name first, then the
     * reference's last-substring match — shared by the gather-side cache

@@ -22,6 +22,8 @@ object IngestError {
   case object MultipleResolutionsFound extends IngestError("MultipleResolutionsFoundError", terminal = true)
   case object DocumentXMLNotYetInDatabase extends IngestError("DocumentXMLNotYetInDatabase", terminal = true)
   case object CannotPublish extends IngestError("CannotPublishException", terminal = true)
+  /** An image name in the package metadata would leave the asset directory. */
+  case object UnsafeAssetName extends IngestError("UnsafeAssetNameException", terminal = true)
   /** Unknown originator etc. — the reference raises bare RuntimeError. */
   case object Runtime extends IngestError("RuntimeError", terminal = true)
   /** Anything unrecognized: assume transient → retryable. */
@@ -31,7 +33,7 @@ object IngestError {
     S3HTTPError, MaximumRetriesExceeded, InvalidXML, InvalidMessage,
     ErrorLogWouldOverwritePublishedDocument, FileNotFound, DocxFilenameNotFound,
     DocumentInsertion, MultipleResolutionsFound, DocumentXMLNotYetInDatabase,
-    CannotPublish, Runtime)
+    CannotPublish, UnsafeAssetName, Runtime)
 
   def fromName(n: String): IngestError =
     all.find(_.name == n).getOrElse(Unknown(n))

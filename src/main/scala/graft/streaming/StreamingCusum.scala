@@ -31,13 +31,13 @@ final case class CusumAlert(key: String, ts: Timestamp, direction: String,
   * device).
   *
   * Completes the TWS family's shape coverage: eviction timers
-  * ([[StreamingDedupEventTime]]), emission timers ([[StreamingSessionTws]]),
-  * update-mode estimates ([[StreamingDistinctTws]]) — and here the pure
-  * ACCUMULATOR shape: bounded ValueState folded in event-time order,
-  * output only on threshold crossings (append semantics, each alert
-  * exactly once). Within a micro-batch rows fold sorted by (ts, value);
-  * across batches the fold is arrival order, the same contract
-  * [[StreamingSessionTws]]'s prefix documents — with in-order feeds
+  * ([[StreamingDedupEventTime]]), emission timers ([[StreamingSessionTws]])
+  * — and here the pure ACCUMULATOR shape: bounded ValueState folded in
+  * event-time order, output only on threshold crossings (append
+  * semantics, each alert exactly once). Within a micro-batch rows fold
+  * sorted by (ts, value); across batches the fold is arrival order, the
+  * same contract [[StreamingSessionTws]]'s prefix documents — with
+  * in-order feeds
   * (or any single-batch replay) the alert set equals the batch reference
   * [[StreamingCusum.batchAlerts]], pinned by `StreamingCusumSpec` along
   * with RocksDB restart stability. [[StreamingCusum.orderedAlerts]] is
@@ -47,11 +47,13 @@ final case class CusumAlert(key: String, ts: Timestamp, direction: String,
   *
   * 100 TB shape: state is three longs per key regardless of history —
   * proportional to MONITORED KEYS, never to the stream; a non-NONE TTL
-  * (ProcessingTime mode, [[StreamingDistinctTws]]'s dispatch) lets a
-  * key silent past the window re-arm from zero, the retention knob for
-  * unbounded key churn. The ordered variant carries the same knob as
-  * EVENT-TIME retention (`retentionMs` on [[orderedAlerts]]) because
-  * TTLConfig cannot compose with its EventTime mode — see
+  * lets a key silent past the window re-arm from zero, the retention
+  * knob for unbounded key churn. [[alerts]] runs such a TTL in
+  * ProcessingTime mode and a NONE TTL in `TimeMode.None()`, because Spark
+  * rejects any other TTL under `TimeMode.None()`. The ordered variant
+  * carries the same knob as EVENT-TIME retention (`retentionMs` on
+  * [[orderedAlerts]]) because TTLConfig cannot compose with its
+  * EventTime mode — see
   * [[OrderedCusumProcessor]]. */
 object StreamingCusum {
 

@@ -12,14 +12,13 @@ final case class StreamEvtDoc(doc_id: Long, content_hash: String, ts: Timestamp)
 /** Streaming exact dedup with WATERMARK-ALIGNED state eviction — the
   * event-time half of the `transformWithState` API
   * ([[org.apache.spark.sql.streaming.StatefulProcessorHandle.registerTimer]]
-  * under `TimeMode.EventTime()`) that the processing-time trio
-  * ([[StreamingDedupTws]]/[[StreamingNearDupTws]]/[[StreamingDistinctTws]])
-  * deliberately does not use.
+  * under `TimeMode.EventTime()`).
   *
-  * Why a second retention mechanism exists: a [[TTLConfig]] TTL expires
-  * state on the WALL clock. On a backfill-heavy 100 TB stream — re-reading
-  * six months of history in an afternoon — wall-clock retention is wrong
-  * in both directions: a "7 day" TTL never expires anything during the
+  * Why a second retention mechanism exists: a processing-time TTL
+  * ([[StreamingDedup.firstSeenWithTtl]]) expires state on the WALL
+  * clock. On a backfill-heavy 100 TB stream — re-reading six months of
+  * history in an afternoon — wall-clock retention is wrong in both
+  * directions: a "7 day" TTL never expires anything during the
   * backfill (the whole replay runs inside one wall week, so state grows
   * with the full key history), and a paused-then-resumed stream expires
   * state that DATA time says is still live. Event-time timers key

@@ -69,6 +69,28 @@ class ScalarPropsSpec extends SparkSpec {
     }
   }
 
+  test("asset names: every accepted name writes strictly inside its asset directory") {
+    val segment = Gen.frequency(
+      4 -> Gen.oneOf("..", ".", "", "a", "image1.png", "..png", "a..b", "%2e%2e", "~",
+        "c:", "x y", "#f", "?q", "\u0000", "a\nb", "\u007f", "\\.."),
+      1 -> Gen.asciiStr,
+      1 -> Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.choose('\u0080', '\uffff'))).map(_.mkString))
+    val name = for {
+      lead <- Gen.oneOf("", "/")
+      segs <- Gen.nonEmptyListOf(segment)
+    } yield lead + segs.mkString("/")
+    val dir = "/store/asset_files/d-0123abcd"
+    val (accepted, rejected) = samples(name, n = 400).partition(PackageIngest.safeAssetName)
+    accepted.foreach { n =>
+      val written = new org.apache.hadoop.fs.Path(s"$dir/$n").toUri.getPath
+      assert(written.startsWith(s"$dir/") && written.length > dir.length + 1, s"name: '$n'")
+    }
+    assert(accepted.nonEmpty && rejected.nonEmpty)
+    assert(Seq("image1.png", "sub/R-1.jpeg.jpg").forall(PackageIngest.safeAssetName))
+    assert(!Seq("../../escaped.png", "/etc/x", "a//b", "a/", "a/./b", "a\tb")
+      .exists(PackageIngest.safeAssetName))
+  }
+
   test("shingles: count bound, distinctness, element shape") {
     val toks = Gen.listOf(Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString))
     val inputs = samples(toks)

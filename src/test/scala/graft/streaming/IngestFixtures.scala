@@ -28,11 +28,11 @@ object IngestFixtures {
   /** A complete synthetic TDR package: metadata (TRE payload + PARSER cite
     * + TDR section), judgment XML, docx, parser.log — enough to drive every
     * act-phase effect. */
-  def tdrArchive(ref: String, cite: String): Array[Byte] = {
+  def tdrArchive(ref: String, cite: String, images: Seq[String] = Nil): Array[Byte] = {
     val metadata =
       s"""{"parameters": {"TRE": {"reference": "TRE-$ref", "payload": {
          |  "filename": "doc.docx", "xml": "doc.xml", "metadata": "TRE-$ref-metadata.json",
-         |  "images": [], "log": "parser.log"}},
+         |  "images": ${images.map(jsonStr).mkString("[", ", ", "]")}, "log": "parser.log"}},
          |  "PARSER": {"uri": null, "cite": "$cite", "parser_run_id": "run-$ref"},
          |  "TDR": {"Source-Organization": "MoJ", "Contact-Name": "Jo Doe",
          |    "Contact-Email": "jo@example.com", "Internal-Sender-Identifier": "$ref",
@@ -41,7 +41,8 @@ object IngestFixtures {
       s"$ref/TRE-$ref-metadata.json" -> metadata,
       s"$ref/doc.xml" -> s"<akomaNtoso><judgment>body of $ref</judgment></akomaNtoso>",
       s"$ref/doc.docx" -> s"docx bytes $ref",
-      s"$ref/parser.log" -> "ok"))
+      s"$ref/parser.log" -> "ok") ++
+      images.map(i => s"$ref/$i" -> s"image bytes $i"))
   }
 
   /** Stage archives under a temp bucket root at `<root>/b/k/<ref>.tar.gz`

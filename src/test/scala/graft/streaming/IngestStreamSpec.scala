@@ -427,6 +427,27 @@ class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(store.documents.count() == 1)
   }
 
+  test("hostile package: an image name climbing out of the asset root fails terminally at gather") {
+    val storeDir = Files.createTempDirectory("graft-traversal")
+    val store = LocalStore(spark, storeDir.toString)
+    // `<assetRoot>/<uri>/../../escaped.png` is the store directory itself
+    val resolver = stage("REF-T" -> tdrArchive("REF-T", "[2024] EWHC 14 (KB)",
+      images = Seq("image1.png", "../../escaped.png")))
+    IngestStream.processBatch(store, packageUri = resolver)(
+      Seq(sqs("msg-t", v2Inner("REF-T"))).toDF("kind", "record_json"), 0L)
+
+    assert(failureRows(store) == Seq(("msg-t", "UnsafeAssetNameException", true)))
+    assert(store.documents.count() == 0)
+    val root = Paths.get(store.assetRoot)
+    val walk = Files.walk(storeDir)
+    val outside = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(f => Files.isRegularFile(f) && !f.startsWith(root))
+        .filter(_.getFileName.toString.contains("escaped")).toList
+    } finally walk.close()
+    assert(outside.isEmpty, s"files written outside the asset root: $outside")
+  }
+
   /** Runs `body` and returns the executed plans of its `localCheckpoint`
     * actions (listener delivery is async: waits until `want` arrived). */
   private def checkpointPlans(want: Seq[QueryExecution] => Boolean)(body: => Unit): Seq[QueryExecution] = {

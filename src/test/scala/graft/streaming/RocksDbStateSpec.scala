@@ -47,6 +47,26 @@ class RocksDbStateSpec extends SparkSpec {
     }
   }
 
+  test("streaming KMV distinct state runs on the RocksDB provider: exact below k, capped at k") {
+    withRocksDb {
+      implicit val sqlCtx = spark.sqlContext
+      val k = 16
+      val source = MemoryStream[KeyedValue]
+      val q = StreamingDistinct.estimates(source.toDS(), k)
+        .writeStream.format("memory").queryName("rocks_kmv").outputMode("update").start()
+      try {
+        source.addData((1 to 10).map(i => KeyedValue("a", i.toLong * 1000003)): _*)
+        q.processAllAvailable()
+        def rows = spark.table("rocks_kmv").as[DistinctEstimate].collect()
+        assert(rows.toSeq == Seq(DistinctEstimate("a", 10.0, 10)), "below k the sketch is exact")
+        // replays plus growth far past k
+        source.addData((1 to 60).map(i => KeyedValue("a", i.toLong * 1000003)): _*)
+        q.processAllAvailable()
+        assert(rows.map(_.state_size).max == k, s"state must cap at k=$k")
+      } finally q.stop()
+    }
+  }
+
   test("streaming near-dup LSH state runs on the RocksDB provider") {
     withRocksDb {
       implicit val sqlCtx = spark.sqlContext

@@ -63,6 +63,50 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(math.abs(est - 97.0 / 99.0) < 0.15, s"estimator way off: $est")
   }
 
+  test("redelivery: a replay hits its family, never itself") {
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[StreamText]
+    val q = StreamingNearDup.detect(source.toDS())
+      .writeStream.format("memory").queryName("neardup_replay").outputMode("append").start()
+    try {
+      source.addData(StreamText(1L, base), StreamText(3L, unrelated))
+      q.processAllAvailable()
+      source.addData(StreamText(2L, nearDup), StreamText(4L, (0 until 100).map(i => s"y$i").mkString(" ")))
+      q.processAllAvailable()
+      // redelivery of doc 2 plus a two-edit near-dup of the same family: the
+      // replay scores against doc 1 again but never against itself
+      source.addData(StreamText(2L, nearDup),
+        StreamText(5L, (0 until 98).map(i => s"w$i").mkString(" ") + " two edits"))
+      q.processAllAvailable()
+      val all = spark.table("neardup_replay").as[NearDupHit].collect()
+      assert(all.forall(h => h.doc_id != h.dup_of), "a replay must not hit itself")
+      assert(all.map(h => (h.doc_id, h.dup_of)).toSet == Set((2L, 1L), (5L, 1L), (5L, 2L)))
+    } finally q.stop()
+  }
+
+  test("a flooded bucket stays FIFO-capped: a probe scores against exactly BucketCap survivors") {
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[StreamText]
+    val q = StreamingNearDup.detect(source.toDS())
+      .writeStream.format("memory").queryName("neardup_cap").outputMode("append").start()
+    try {
+      // 20 identical texts (distinct ids) land in the SAME 32 buckets;
+      // state must keep only the newest BucketCap per bucket
+      (100L until 120L).map(id => StreamText(id, base)).grouped(5).foreach { g =>
+        source.addData(g: _*); q.processAllAvailable()
+      }
+      source.addData(StreamText(999L, base))
+      q.processAllAvailable()
+      val probeHits = spark.table("neardup_cap").as[NearDupHit]
+        .filter(_.doc_id == 999L).collect()
+      // capped: 32 bands x BucketCap survivors; uncapped would be 32 x 20
+      assert(probeHits.length == 32 * StreamingNearDup.BucketCap,
+        s"expected ${32 * StreamingNearDup.BucketCap} probe hits, got ${probeHits.length}")
+      assert(probeHits.map(_.dup_of).distinct.sorted.toSeq == (112L until 120L),
+        "survivors must be the newest BucketCap of the flood")
+    } finally q.stop()
+  }
+
   test("bucket handler: within-batch order, self-skip, and FIFO cap") {
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
@@ -88,8 +132,15 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(h("b", Iterator(StreamingNearDup.BucketArrival("b", 0, 30L, sigC)), s2).isEmpty)
     assert(s2.get.map(_._1) == List(10L, 20L, 30L))
 
+    // a replay of held doc 10: scores against the others but not itself,
+    // and refreshes its one slot to the newest position
+    val s2r = st(Optional.of(s2.get))
+    val outR = h("b", Iterator(StreamingNearDup.BucketArrival("b", 0, 10L, sigA)), s2r).toList
+    assert(outR == List(NearDupHit(10L, 20L, 0, 60.0 / 96)))
+    assert(s2r.get.map(_._1) == List(20L, 30L, 10L))
+
     // FIFO cap: flood the bucket past BucketCap; oldest ids evicted
-    val s3 = st(Optional.of(s2.get))
+    val s3 = st(Optional.of(s2r.get))
     val flood = (100L until (100L + StreamingNearDup.BucketCap))
       .map(id => StreamingNearDup.BucketArrival("b", 0, id, sigC))
     h("b", flood.iterator, s3).toList // hits against C are expected; ignore
