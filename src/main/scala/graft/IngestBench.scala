@@ -202,7 +202,7 @@ object IngestBench {
     * (writer count can't scale ONE store's write lock; sharding the
     * store can): `streams` writer fleets × `shards` independent
     * [[graft.store.DocStoreServer]]s, every row routed to its shard by
-    * uri hash through [[graft.store.ShardedStore]]. Against the
+    * uri hash through [[graft.store.ShardedWireStore]]. Against the
     * `concurrent` rows (one shared server) the lock contention drops
     * ~1/shards per shard AND each in-lock apply is ~shards× smaller —
     * this mode measures how much of that shows up as combined docs/s on
@@ -240,7 +240,7 @@ object IngestBench {
       val rs = if (roundSize == Int.MaxValue) "all" else roundSize.toString
       println(f"""{"metric":"ingest_docs_per_sec_sharded","value":${n / sec}%.1f,""" +
         f""""docs":$n,"streams":$streams,"shards":$shards,"round_size":"$rs",""" +
-        f""""full_sec":$sec%.1f,"store":"wire(ShardedStore x$shards)"}""")
+        f""""full_sec":$sec%.1f,"store":"wire(ShardedWireStore x$shards)"}""")
     } finally servers.foreach(_.stop())
   }
 
@@ -250,21 +250,6 @@ object IngestBench {
     val sharded = args.lift(1).contains("sharded")
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    if (System.getProperty("graft.store.debugRound") != null)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = j.stageInfos.map(s => s"${s.name.takeWhile(_ != '\n').take(40)}x${s.numTasks}")
-            .mkString("|")
-          starts.put(j.jobId, (System.nanoTime(), desc)); ()
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val (t0, desc) = starts.getOrDefault(j.jobId, (System.nanoTime(), "?"))
-          val dur = (System.nanoTime() - t0) / 1e9
-          if (dur > 0.3) System.err.println(f"[job] id=${j.jobId} ${dur}%.2f s $desc")
-        }
-      })
 
     val bucket = Files.createTempDirectory("graft-ingest-bench-bucket")
     Files.createDirectories(bucket.resolve("b/k"))

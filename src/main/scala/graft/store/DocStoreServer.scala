@@ -17,12 +17,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * protocol, not a product server; a real deployment points [[HttpStore]]
   * at the actual document-store REST API.
   *
-  * Staged transactions land as per-POST part files under a temp dir
-  * (concurrent executor POSTs never contend on one file); commit parses
-  * the whole directory with the transmitted schema and applies the named
-  * operation as one batch. An orphaned transaction (client crashed
-  * between stage and commit) is just an unreferenced directory — nothing
-  * is applied until commit, preserving the trait's failure contract.
+  * Staged transactions land as per-POST part files under a temp dir,
+  * one sub-dir per `?op=` tag (concurrent executor POSTs never contend on
+  * one file); `commitBatch`, the one commit route, parses each op's
+  * directory with the schema its body line carries and applies the ops
+  * as one batch: the five effect ops through the inner store's
+  * `applyEffects`, or `setPublished`/`appendFailures` alone. An orphaned
+  * transaction (client crashed between stage and commit) is just an
+  * unreferenced directory — nothing is applied until commit, preserving
+  * the trait's failure contract.
   *
   * READ PROTOCOL — snapshot, then static parts. The schema request
   * (driver-side, issued while the client has no job running) MATERIALIZES
@@ -240,13 +243,12 @@ final class DocStoreServer(inner: LocalStore, port: Int = 0,
     (ex.getRequestMethod, segs) match {
 
       case ("POST", "txn" :: id :: Nil) if TxnId.matches(id) =>
-        // an `?op=` tag routes the part into a per-op sub-dir for the
-        // multi-table commitBatch; untagged parts stage flat for the
-        // single-op commit
+        // every part lands in its `?op=` tag's sub-dir of the txn, which
+        // is where the commit reads that op's rows from
         val dir = params.get("op") match {
           case Some(op) if OpName.matches(op) => staging.resolve(id).resolve(op)
           case Some(op) => throw new IllegalArgumentException(s"bad op tag: $op")
-          case None => staging.resolve(id)
+          case None => throw new IllegalArgumentException("stage requires ?op=")
         }
         Files.createDirectories(dir)
         val part = dir.resolve(s"part-${java.util.UUID.randomUUID()}.jsonl")
@@ -275,11 +277,12 @@ final class DocStoreServer(inner: LocalStore, port: Int = 0,
         respond(ex, 200, epoch.toString)
 
       case ("POST", "txn" :: id :: "commitBatch" :: Nil) if TxnId.matches(id) =>
-        // ONE wire transaction for a whole act round: body lines are
-        // `op<TAB>schemaJson`, staged rows live under `{txn}/{op}/`.
-        // Applied through the inner store's own applyEffects (overlapped
-        // disjoint-table writes) under one lock and ONE ledger entry —
-        // the replay unit (and thus the exactly-once unit) is the round.
+        // the ONE commit route: body lines are `op<TAB>schemaJson`, staged
+        // rows live under `{txn}/{op}/`. The five effect ops fold into one
+        // EffectBatch applied through the inner store's own applyEffects
+        // (overlapped disjoint-table writes) under one lock and ONE ledger
+        // entry — the replay unit (and thus the exactly-once unit) is the
+        // round. setPublished and appendFailures commit only alone.
         val dir = staging.resolve(id)
         if (committed.contains(id)) {
           deleteRecursively(dir)
@@ -317,25 +320,38 @@ final class DocStoreServer(inner: LocalStore, port: Int = 0,
               requireCurrentEpoch(id,
                 params.get("epoch").flatMap(_.toLongOption).getOrElse(0L))
               try {
-                val batch = body.linesIterator.filter(_.nonEmpty).foldLeft(EffectBatch()) {
-                  (acc, line) =>
-                    val Array(op, schemaJson) = line.split("\t", 2)
-                    op match {
-                      case "upsertDocuments"     => acc.copy(documents = Some(frame(op, schemaJson)))
-                      case "appendIdentifiers"   => acc.copy(identifiers = Some(frame(op, schemaJson)))
-                      case "appendNotifications" => acc.copy(notifications = Some(frame(op, schemaJson)))
-                      case "upsertProperties"    => acc.copy(properties = Some(frame(op, schemaJson)))
-                      case "appendAssets"        => acc.copy(assets = Some(frame(op, schemaJson)))
-                      case other => throw new IllegalArgumentException(s"unknown batch op: $other")
+                // every frame builds before anything applies: a mixed or
+                // unknown body fails here and applies nothing
+                val ops = body.linesIterator.filter(_.nonEmpty).map { line =>
+                  val Array(op, schemaJson) = line.split("\t", 2)
+                  op -> schemaJson
+                }.toList
+                ops match {
+                  case List(("setPublished", s)) => inner.setPublished(frame("setPublished", s))
+                  case List(("appendFailures", s)) => inner.appendFailures(frame("appendFailures", s))
+                  case _ =>
+                    val batch = ops.foldLeft(EffectBatch()) { case (acc, (op, schemaJson)) =>
+                      op match {
+                        case "upsertDocuments"     => acc.copy(documents = Some(frame(op, schemaJson)))
+                        case "appendIdentifiers"   => acc.copy(identifiers = Some(frame(op, schemaJson)))
+                        case "appendNotifications" => acc.copy(notifications = Some(frame(op, schemaJson)))
+                        case "upsertProperties"    => acc.copy(properties = Some(frame(op, schemaJson)))
+                        case "appendAssets"        => acc.copy(assets = Some(frame(op, schemaJson)))
+                        case "setPublished" | "appendFailures" =>
+                          throw new IllegalArgumentException(s"$op commits alone, not in a batch")
+                        case other => throw new IllegalArgumentException(s"unknown batch op: $other")
+                      }
                     }
+                    if (dieAfterDocumentsMerge) {
+                      dieAfterDocumentsMerge = false
+                      batch.documents.foreach(inner.upsertDocuments)
+                      throw new RuntimeException(
+                        "injected crash: died after the documents MERGE, mid effect round")
+                    }
+                    inner.applyEffects(batch)
                 }
-                if (dieAfterDocumentsMerge) {
-                  dieAfterDocumentsMerge = false
-                  batch.documents.foreach(inner.upsertDocuments)
-                  throw new RuntimeException(
-                    "injected crash: died after the documents MERGE, mid effect round")
-                }
-                inner.applyEffects(batch)
+                // applied → ledger marker (durable under the store root) →
+                // ack; see the ledger scaladoc for the apply→marker window
                 Files.createFile(ledgerDir.resolve(id))
                 false
               } catch {
@@ -346,68 +362,6 @@ final class DocStoreServer(inner: LocalStore, port: Int = 0,
                 // duplicates
                 case e: Throwable => deleteRecursively(dir); throw e
               }
-            }
-          } finally txnIsolation.writeLock().unlock()
-          committed.add(id)
-          epochs.remove(id)
-          deleteRecursively(dir)
-          if (!already && dropNextCommitAck) {
-            dropNextCommitAck = false
-            respond(ex, 500, "injected crash: commit applied, ack lost")
-          } else respond(ex, 200, if (already) "already-committed" else "committed")
-        }
-
-      case ("POST", "txn" :: id :: "commit" :: Nil) if TxnId.matches(id) =>
-        val op = params.getOrElse("op",
-          throw new IllegalArgumentException("commit requires ?op="))
-        val dir = staging.resolve(id)
-        if (committed.contains(id)) {
-          // replayed commit of an already-applied transaction (the client
-          // lost the ack): drop any re-staged rows, ack without re-applying
-          deleteRecursively(dir)
-          respond(ex, 200, "already-committed")
-        } else {
-          val schemaJson = {
-            val in = ex.getRequestBody
-            try new String(in.readAllBytes(), "UTF-8") finally in.close()
-          }
-          val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-          val spark = inner.spark
-          // same check-then-act closure as commitBatch: authoritative
-          // re-check inside the write lock; an existing ledger marker is
-          // already-committed. Same failed-commit staging cleanup, and the
-          // same frame-inside-lock rule (a concurrent winner's post-commit
-          // staging delete races a frame built outside).
-          txnIsolation.writeLock().lock()
-          val already = try {
-            if (committed.contains(id) || Files.exists(ledgerDir.resolve(id))) true
-            else {
-            // same zombie guard as commitBatch: stale attempts neither
-            // apply nor clear the live attempt's staging
-            requireCurrentEpoch(id,
-              params.get("epoch").flatMap(_.toLongOption).getOrElse(0L))
-            try {
-              val batch =
-                if (Files.exists(dir)) spark.read.schema(schema).json(dir.toString)
-                else spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-              op match {
-                case "upsertDocuments"     => inner.upsertDocuments(batch)
-                case "setPublished"        => inner.setPublished(batch)
-                case "appendIdentifiers"   => inner.appendIdentifiers(batch)
-                case "upsertProperties"    => inner.upsertProperties(batch)
-                case "appendAssets"        => inner.appendAssets(batch)
-                case "appendNotifications" => inner.appendNotifications(batch)
-                case "appendFailures"      => inner.appendFailures(batch)
-                case other => throw new IllegalArgumentException(s"unknown op: $other")
-              }
-              // applied → ledger marker (durable under the store root) →
-              // ack; see the ledger scaladoc for the apply→marker window
-              Files.createFile(ledgerDir.resolve(id))
-              false
-            } catch {
-              case e: Throwable => deleteRecursively(dir); throw e
-            }
             }
           } finally txnIsolation.writeLock().unlock()
           committed.add(id)

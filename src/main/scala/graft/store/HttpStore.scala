@@ -1,6 +1,7 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Wire-protocol [[DocumentStore]]: a client speaking the
@@ -13,19 +14,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Protocol (all bodies JSON — schemas travel as Spark's `schema.json`,
   * rows as JSON-lines):
   *
-  *   - `POST /txn/{id}`                — stage a chunk of JSON-lines rows
-  *     for transaction `id`. Called FROM THE EXECUTORS, one or more
-  *     chunks per partition, so bulk-write bytes flow in parallel from
-  *     wherever the rows live — the driver never materializes a batch
-  *     (the MarkLogic connector's bulk-write shape).
-  *   - `POST /txn/{id}/commit?op=<op>&epoch=<e>` — body carries the
-  *     batch's schema; the server parses the staged rows with it and
-  *     applies the named [[DocumentStore]] operation as ONE batch (merge
+  *   - `POST /txn/{id}?op=<op>`        — stage a chunk of JSON-lines rows
+  *     of operation `op` for transaction `id`. Called FROM THE EXECUTORS,
+  *     one or more chunks per partition, so bulk-write bytes flow in
+  *     parallel from wherever the rows live — the driver never
+  *     materializes a batch (the MarkLogic connector's bulk-write shape).
+  *   - `POST /txn/{id}/commitBatch?epoch=<e>` — the ONE commit route.
+  *     Body lines are `op<TAB>schemaJson`; the server parses each op's
+  *     staged rows with its schema and applies them as ONE batch (merge
   *     semantics such as the per-batch version bump need the whole
   *     batch, so the commit — not the stage — is the operation
-  *     boundary). `epoch` is the attempt epoch the client's own abort
-  *     earned (0 on a first, un-aborted attempt); a stale epoch answers
-  *     409 without applying — the zombie-commit guard.
+  *     boundary). The act round's five effect ops commit together; a
+  *     single-op write (`setPublished`, `appendFailures`, or any one
+  *     effect op) is a one-line batch. `epoch` is the attempt epoch the
+  *     client's own abort earned (0 on a first, un-aborted attempt); a
+  *     stale epoch answers 409 without applying — the zombie-commit guard.
   *   - `POST /txn/{id}/abort`          — clear a previous FAILED
   *     attempt's staged parts before re-staging the same deterministic
   *     txn id; answers the txn's bumped attempt epoch.
@@ -59,15 +62,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 final case class HttpStore(spark: SparkSession, endpoint: String,
     txnScope: Option[String] = None)
-    extends DocumentStore {
+    extends WireWrites {
 
-  /** Per-instance op counter: with a `txnScope`, the n-th write of the
-    * scope gets txn id `uuid3(scope|op|n)` — the batch's write sequence
-    * is deterministic (the act phase is straight-line code), so a
-    * replayed batch re-issues the SAME txn ids and the server's commit
-    * ledger recognizes every already-applied commit. A fresh scoped
-    * instance per replay (see [[withBatchScope]]) restarts the counter. */
-  private val txnSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+  def endpoints: IndexedSeq[String] = IndexedSeq(endpoint)
 
   override def withBatchScope(scope: String): DocumentStore =
     copy(txnScope = Some(scope))
@@ -102,115 +99,57 @@ final case class HttpStore(spark: SparkSession, endpoint: String,
     }
   }
 
-  /** Stage the batch executor-side in bounded chunks, then commit it as
-    * one named operation. The op's semantics run server-side against the
-    * WHOLE staged batch — stage order across partitions is immaterial
-    * because every [[DocumentStore]] operation is defined on the batch
-    * as a multiset. */
-  private def send(op: String, df: DataFrame): Unit = {
-    val txn = txnScope match {
-      case Some(s) => java.util.UUID.nameUUIDFromBytes(
-        s"$s|$op|${txnSeq.getAndIncrement()}".getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
-    }
-    // scoped txns replay with the SAME id — clear any staged leftovers of
-    // a previous failed attempt before re-staging, or the committed frame
-    // doubles (append-only ledgers would keep the duplicates)
-    val epoch = if (txnScope.isDefined) abort(endpoint, txn) else 0L
-    stage(endpoint, txn, None, df)
-    val (c, b) = HttpStore.postCommit(
-      s"$endpoint/txn/$txn/commit?op=$op&epoch=$epoch",
-      df.schema.json.getBytes("UTF-8"))
-    if (c != 200) throw new RuntimeException(s"HttpStore $op: HTTP $c $b")
-  }
-
-  /** Returns the attempt epoch the abort earned: the commit of THIS
-    * attempt carries it, so a zombie commit of the same txn formed before
-    * the abort (queued past its own client timeout on the server's write
-    * lock) fails the server's epoch check instead of applying whatever
-    * staging holds mid-re-stage (the lost-update window the server's
-    * `epochs` scaladoc documents). A pre-epoch server answering a bare
-    * "aborted" body degrades to epoch 0 — the old at-least-once shape. */
-  private def abort(ep: String, txn: String): Long = {
-    val (c, b) = HttpStore.post(s"$ep/txn/$txn/abort", Array.emptyByteArray)
-    if (c != 200) throw new RuntimeException(s"HttpStore abort: HTTP $c $b")
-    b.trim.toLongOption.getOrElse(0L)
-  }
-
-  /** Executor-side JSON-lines staging of one frame under `txn`; with an
-    * `op`, parts land tagged for the multi-table commitBatch. */
-  private def stage(ep: String, txn: String, op: Option[String], df: DataFrame): Unit = {
-    val url = op match {
-      case Some(o) => s"$ep/txn/$txn?op=$o"
-      case None => s"$ep/txn/$txn"
-    }
-    df.toJSON.foreachPartition { (lines: Iterator[String]) =>
-      val buf = new StringBuilder
-      def flush(): Unit = if (buf.nonEmpty) {
-        val (c, b) = HttpStore.post(url, buf.toString.getBytes("UTF-8"))
-        if (c != 200) throw new RuntimeException(s"HttpStore stage: HTTP $c $b")
-        buf.clear()
-      }
-      lines.foreach { l =>
-        buf.append(l).append('\n')
-        if (buf.length >= HttpStore.StageChunkChars) flush()
-      }
-      flush()
-    }
-  }
-
-  /** Multi-table batch commit — ONE wire transaction for the whole act
-    * round. Each frame stages executor-side under the same txn id with an
-    * `?op=` tag (the five staging jobs run concurrently — disjoint
-    * frames, disjoint server part files), then a single
-    * `POST /txn/{id}/commitBatch` whose body lists `op<TAB>schemaJson`
-    * lines applies every table server-side under one lock and ONE ledger
-    * entry. Against the sequential per-op path this replaces 5 commit
-    * round-trips + 5 ledger entries with 1 of each, and the server's own
-    * [[LocalStore.applyEffects]] overlaps the disjoint table writes. A
-    * replayed batch re-issues the same txn id and the ledger acks the
-    * WHOLE round without re-applying — the exactly-once unit becomes the
-    * round, strictly stronger than per-op dedup. */
-  override def applyEffects(b: EffectBatch): Unit = {
-    val frames: Seq[(String, DataFrame)] = Seq(
-      b.documents.map("upsertDocuments" -> _),
-      b.identifiers.map("appendIdentifiers" -> _),
-      b.notifications.map("appendNotifications" -> _),
-      b.properties.map("upsertProperties" -> _),
-      b.assets.map("appendAssets" -> _)).flatten
-    if (frames.isEmpty) return
-    val txn = txnScope match {
-      case Some(s) => java.util.UUID.nameUUIDFromBytes(
-        s"$s|applyEffects|${txnSeq.getAndIncrement()}".getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
-    }
-    val ep = endpoint
-    // same leftover rule as `send`: a replayed round re-stages under the
-    // same deterministic txn id, so clear any failed attempt's parts first
-    // (and stamp the commit with the epoch the abort earned — zombie guard)
-    val epoch = if (txnScope.isDefined) abort(ep, txn) else 0L
-    DocumentStore.inParallel(frames.map { case (op, df) =>
-      () => stage(ep, txn, Some(op), df)
-    })
-    val body = frames.map { case (op, df) => s"$op\t${df.schema.json}" }.mkString("\n")
-    val (c, bdy) = HttpStore.postCommit(s"$ep/txn/$txn/commitBatch?epoch=$epoch",
-      body.getBytes("UTF-8"))
-    if (c != 200) throw new RuntimeException(s"HttpStore applyEffects: HTTP $c $bdy")
-  }
-
-  def upsertDocuments(updates: DataFrame): Unit = send("upsertDocuments", updates)
-  def setPublished(decisions: DataFrame): Unit = send("setPublished", decisions)
-  def appendIdentifiers(rows: DataFrame): Unit = send("appendIdentifiers", rows)
-  def upsertProperties(rows: DataFrame): Unit = send("upsertProperties", rows)
-  def appendAssets(rows: DataFrame): Unit = send("appendAssets", rows)
-  def appendNotifications(rows: DataFrame): Unit = send("appendNotifications", rows)
-  def appendFailures(rows: DataFrame): Unit = send("appendFailures", rows)
-
   lazy val assetRoot: String = {
     val (c, b) = HttpStore.get(s"$endpoint/assetRoot")
     if (c != 200) throw new RuntimeException(s"HttpStore assetRoot: HTTP $c $b")
     b.trim
   }
+}
+
+/** The write half of both wire clients ([[HttpStore]] on one server,
+  * [[ShardedWireStore]] on N): the act round and every single-op write is
+  * one [[HttpStore.commitRound]] over the client's endpoints, so the two
+  * clients share one transaction protocol.
+  *
+  * Per-instance write counter: with a `txnScope`, the n-th write of the
+  * scope gets txn id `uuid3(scope|<op>|n)`, `<op>` being `applyEffects`
+  * for a round and the operation's name for a single-op write. The
+  * batch's write sequence is deterministic (the act phase is
+  * straight-line code), so a replayed batch re-issues the SAME txn ids
+  * and the server's commit ledger recognizes every already-applied
+  * commit. A fresh scoped instance per replay (`withBatchScope`) restarts
+  * the counter. */
+private[store] trait WireWrites extends DocumentStore {
+  def endpoints: IndexedSeq[String]
+  def txnScope: Option[String]
+
+  private val txnSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  private def write(token: String, frames: Seq[(String, DataFrame)]): Unit =
+    if (frames.nonEmpty) HttpStore.commitRound(endpoints, txnScope,
+      s"$token|${txnSeq.getAndIncrement()}", frames)
+
+  private def single(op: String, df: DataFrame): Unit = write(op, Seq(op -> df))
+
+  /** The whole act round is ONE wire transaction per endpoint: against
+    * per-op commits this replaces 5 commit round-trips + 5 ledger entries
+    * with 1 of each, the server's own [[LocalStore.applyEffects]] overlaps
+    * the disjoint table writes, and a replayed round is acked WHOLE by the
+    * ledger — the exactly-once unit is the round. */
+  override def applyEffects(b: EffectBatch): Unit = write("applyEffects", Seq(
+    b.documents.map("upsertDocuments" -> _),
+    b.identifiers.map("appendIdentifiers" -> _),
+    b.notifications.map("appendNotifications" -> _),
+    b.properties.map("upsertProperties" -> _),
+    b.assets.map("appendAssets" -> _)).flatten)
+
+  def upsertDocuments(updates: DataFrame): Unit = single("upsertDocuments", updates)
+  def setPublished(decisions: DataFrame): Unit = single("setPublished", decisions)
+  def appendIdentifiers(rows: DataFrame): Unit = single("appendIdentifiers", rows)
+  def upsertProperties(rows: DataFrame): Unit = single("upsertProperties", rows)
+  def appendAssets(rows: DataFrame): Unit = single("appendAssets", rows)
+  def appendNotifications(rows: DataFrame): Unit = single("appendNotifications", rows)
+  def appendFailures(rows: DataFrame): Unit = single("appendFailures", rows)
 }
 
 object HttpStore {
@@ -227,6 +166,84 @@ object HttpStore {
     * lost-ack window — the ledger dedupes the replay), so cutting a
     * healthy-but-queued commit just converts progress into a restart. */
   private[store] val CommitReadTimeoutMs = 3600000
+
+  /** The one wire write path. A write of `frames` (op name → rows) to
+    * `endpoints` is one transaction per endpoint:
+    *
+    *   1. scoped writes abort every endpoint's txn first, in parallel — a
+    *      replayed write re-stages under the SAME deterministic txn id, so
+    *      a failed attempt's staged leftovers must go (or the committed
+    *      frame doubles), and each abort earns the attempt epoch that
+    *      endpoint's commit carries (the zombie guard, see
+    *      [[DocStoreServer]]'s `epochs`). A pre-epoch server's bare body
+    *      degrades to epoch 0;
+    *   2. each frame stages in ONE executor pass (frames concurrently —
+    *      disjoint tables, disjoint server part files): every task routes
+    *      its rows to shard `pmod(crc32(key), N)` — the document key
+    *      (`uri`, `document_uri` for identifiers) or `msg_id` for failures,
+    *      so every row about one document lands on one shard and per-batch
+    *      merge semantics hold per shard — buffers per shard and POSTs
+    *      bounded chunks to that shard's `/txn/{id}?op=`. With N = 1 every
+    *      row goes to shard 0 and no hash is computed. Null columns drop
+    *      from the JSON; the server re-parses with the transmitted schema;
+    *   3. one `commitBatch` per endpoint, in parallel — the commits queue
+    *      on N INDEPENDENT server write locks, so the applies overlap.
+    *
+    * Scoped txn ids are `uuid3(scope|name)` on one endpoint and
+    * `uuid3(scope|shard<i>|name)` on shard i of several. A write that
+    * fails on SOME shards replays in full: committed shards ack, failed
+    * shards re-apply — the partial-round convergence the trait documents. */
+  private[store] def commitRound(endpoints: IndexedSeq[String], scope: Option[String],
+      name: String, frames: Seq[(String, DataFrame)]): Unit = {
+    val n = endpoints.size
+    val txns = endpoints.indices.map { i =>
+      scope match {
+        case Some(s) =>
+          val shardScope = if (n == 1) s else s"$s|shard$i"
+          java.util.UUID.nameUUIDFromBytes(s"$shardScope|$name".getBytes("UTF-8")).toString
+        case None => java.util.UUID.randomUUID().toString
+      }
+    }
+    val epochs: Seq[Long] =
+      if (scope.isEmpty) Seq.fill(n)(0L)
+      else DocumentStore.inParallel(endpoints.indices.map(i => () => {
+        val (c, b) = post(s"${endpoints(i)}/txn/${txns(i)}/abort", Array.emptyByteArray)
+        if (c != 200) throw new RuntimeException(s"HttpStore abort: HTTP $c $b")
+        b.trim.toLongOption.getOrElse(0L)
+      }))
+    DocumentStore.inParallel(frames.map { case (op, df) => () =>
+      val key = op match {
+        case "appendIdentifiers" => "document_uri"
+        case "appendFailures" => "msg_id"
+        case _ => "uri"
+      }
+      val shard = if (n == 1) lit(0) else pmod(crc32(col(key)), lit(n)).cast("int")
+      val urls = endpoints.indices.map(i => s"${endpoints(i)}/txn/${txns(i)}?op=$op")
+      df.select(shard, to_json(struct(df.columns.toIndexedSeq.map(col): _*)))
+        .foreachPartition { (rows: Iterator[Row]) =>
+          val bufs = Array.fill(n)(new StringBuilder)
+          def flush(s: Int): Unit = if (bufs(s).nonEmpty) {
+            val (c, b) = post(urls(s), bufs(s).toString.getBytes("UTF-8"))
+            if (c != 200) throw new RuntimeException(s"HttpStore stage: HTTP $c $b")
+            bufs(s).clear()
+          }
+          rows.foreach { r =>
+            val s = r.getInt(0)
+            bufs(s).append(r.getString(1)).append('\n')
+            if (bufs(s).length >= StageChunkChars) flush(s)
+          }
+          bufs.indices.foreach(flush)
+        }
+    })
+    val body = frames.map { case (op, df) => s"$op\t${df.schema.json}" }
+      .mkString("\n").getBytes("UTF-8")
+    DocumentStore.inParallel(endpoints.indices.map(i => () => {
+      val (c, b) = postCommit(
+        s"${endpoints(i)}/txn/${txns(i)}/commitBatch?epoch=${epochs(i)}", body)
+      if (c != 200) throw new RuntimeException(s"HttpStore $name commit on ${endpoints(i)}: HTTP $c $b")
+    }))
+    ()
+  }
 
   private def request(method: String, url: String,
       body: Option[Array[Byte]],

@@ -81,15 +81,11 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(p.toString), true)
 
-  /** Roll back swaps that crashed between their two renames — whole-table
-    * (`.old_t` present, live dir gone) and per-bucket (`.old_t_bNN`
-    * present, live `bucket=NN` gone): restore the surviving pre-swap
-    * state. Called before every read/write so a crashed store heals on
-    * first touch. */
+  /** Roll back per-bucket swaps that crashed between their two renames
+    * (`.old_t_bNN` present, live `bucket=NN` gone): restore the surviving
+    * pre-swap state. Called before every read/write so a crashed store
+    * heals on first touch. */
   private def recover(t: String): Unit = {
-    val old = Paths.get(s"$base/.old_$t")
-    if (!Files.exists(Paths.get(path(t))) && Files.exists(old))
-      Files.move(old, Paths.get(path(t)), StandardCopyOption.ATOMIC_MOVE)
     val prefix = s".old_${t}_b"
     val leftovers = {
       val s = Files.list(Paths.get(base))
@@ -132,12 +128,6 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     * those buckets. Untouched buckets are never read or written. */
   private def mergeBuckets(t: String, batch: DataFrame, keyCol: String)(
       merge: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
-    val dbg = System.getProperty("graft.store.debugRound") != null
-    var t0 = System.nanoTime()
-    def lap(phase: String): Unit = if (dbg) {
-      System.err.println(f"[merge:$t] $phase ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     recover(t)
     val n = bucketCountFor(t)
     // per-partition distinct, merged on the driver: one stage, where
@@ -147,7 +137,6 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
       batch.select(bucketOf(col(keyCol), n)).as[Long]
         .mapPartitions(_.toSet.iterator).collect().distinct.sorted
     }
-    lap("touched-collect")
     if (touched.isEmpty) return
 
     val live = Paths.get(path(t))
@@ -168,7 +157,6 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     merged.withColumn("bucket", bucketOf(col(keyCol), n))
       .repartition(col("bucket"))
       .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(next.toString)
-    lap("staged-write")
     Files.createDirectories(live)
     for (b <- touched) {
       val nextB = next.resolve(s"bucket=$b")
@@ -201,20 +189,12 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     * a partial round is the trait's documented crash exposure, converged
     * by redelivery. */
   override def applyEffects(b: EffectBatch): Unit = {
-    val debug = System.getProperty("graft.store.debugRound") != null
-    def traced(name: String, op: () => Unit): () => Unit =
-      if (!debug) op
-      else () => {
-        val t0 = System.nanoTime()
-        try op() finally System.err.println(
-          f"[round] $name start+0 took ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
     val ops: Seq[() => Unit] = Seq(
-      b.documents.map(df => traced("upsertDocuments", () => upsertDocuments(df))),
-      b.identifiers.map(df => traced("appendIdentifiers", () => appendIdentifiers(df))),
-      b.notifications.map(df => traced("appendNotifications", () => appendNotifications(df))),
-      b.properties.map(df => traced("upsertProperties", () => upsertProperties(df))),
-      b.assets.map(df => traced("appendAssets", () => appendAssets(df)))).flatten
+      b.documents.map(df => () => upsertDocuments(df)),
+      b.identifiers.map(df => () => appendIdentifiers(df)),
+      b.notifications.map(df => () => appendNotifications(df)),
+      b.properties.map(df => () => upsertProperties(df)),
+      b.assets.map(df => () => appendAssets(df))).flatten
     DocumentStore.inParallel(ops); ()
   }
 

@@ -149,27 +149,44 @@ class HttpStoreSpec extends SparkSpec {
     try {
       val http = HttpStore(spark, server.endpoint)
 
+      val failSchema = Seq(("x", "y", true)).toDF("msg_id", "error", "terminal").schema.json
+      def commit(txn: String, body: String): (Int, String) =
+        HttpStore.post(s"${server.endpoint}/txn/$txn/commitBatch", body.getBytes("UTF-8"))
+
       // unknown op → HTTP 500 → the client-side batch throws
-      val (code, body) = {
-        val txn = java.util.UUID.randomUUID().toString
-        HttpStore.post(s"${server.endpoint}/txn/$txn/commit?op=nonsense",
-          Seq(("x", "y")).toDF("msg_id", "error").schema.json.getBytes("UTF-8"))
-      }
-      assert(code == 500 && body.contains("unknown op"))
+      val (code, body) = commit(java.util.UUID.randomUUID().toString, s"nonsense\t$failSchema")
+      assert(code == 500 && body.contains("unknown batch op"), s"$code $body")
 
       // staged-but-never-committed rows are never applied
       val txn = java.util.UUID.randomUUID().toString
-      val (c2, _) = HttpStore.post(s"${server.endpoint}/txn/$txn",
-        """{"msg_id":"m1","error":"E","terminal":true}""".getBytes("UTF-8"))
-      assert(c2 == 200)
+      val failRow = """{"msg_id":"m1","error":"E","terminal":true}""".getBytes("UTF-8")
+      assert(HttpStore.post(s"${server.endpoint}/txn/$txn?op=appendFailures", failRow)._1 == 200)
       assert(inner.read("failures").isEmpty, "stage alone must not mutate the store")
+
+      // an untagged stage POST is refused, and its rows reach no commit
+      val untagged = java.util.UUID.randomUUID().toString
+      assert(HttpStore.post(s"${server.endpoint}/txn/$untagged", failRow)._1 == 500)
+      assert(commit(untagged, s"appendFailures\t$failSchema")._1 == 200)
+      assert(inner.read("failures").forall(_.isEmpty), "an untagged stage must apply nothing")
+
+      // a mixed body (setPublished commits only alone) applies nothing
+      val mixed = java.util.UUID.randomUUID().toString
+      val doc = Seq(("doc/mixed", "<x/>", "judgment", "m", "{}", true, "done"))
+        .toDF("uri", "xml", "doc_type", "annotation_message", "annotation_payload",
+          "automated", "upload_state")
+      val decision = Seq(("doc/mixed", true, "<x/>")).toDF("uri", "will_publish", "xml")
+      assert(HttpStore.post(s"${server.endpoint}/txn/$mixed?op=upsertDocuments",
+        doc.toJSON.collect().mkString("\n").getBytes("UTF-8"))._1 == 200)
+      assert(HttpStore.post(s"${server.endpoint}/txn/$mixed?op=setPublished",
+        decision.toJSON.collect().mkString("\n").getBytes("UTF-8"))._1 == 200)
+      val (cm, bm) = commit(mixed,
+        s"upsertDocuments\t${doc.schema.json}\nsetPublished\t${decision.schema.json}")
+      assert(cm == 500, s"$cm $bm")
+      assert(inner.read("documents").isEmpty, "a mixed commit must apply nothing")
 
       // a malformed commit (bad schema body) surfaces as a thrown failure
       val bad = intercept[RuntimeException] {
-        val txn2 = java.util.UUID.randomUUID().toString
-        val (c3, b3) = HttpStore.post(
-          s"${server.endpoint}/txn/$txn2/commit?op=appendFailures",
-          "not-a-schema".getBytes("UTF-8"))
+        val (c3, b3) = commit(java.util.UUID.randomUUID().toString, "appendFailures\tnot-a-schema")
         if (c3 != 200) throw new RuntimeException(s"HTTP $c3 $b3")
       }
       assert(bad.getMessage.contains("500"))

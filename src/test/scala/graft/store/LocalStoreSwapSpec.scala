@@ -4,37 +4,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.SparkSpec
 
-/** Pins the store's crash-safe table swap: a write that died between its
-  * two renames (live gone, `.old_t` holding the pre-swap state) heals on
-  * the next touch, restoring the previous state instead of reading empty
-  * and then destroying the only surviving copy. */
+/** Pins the store's crash-safe bucket swap: a MERGE that died between
+  * its two renames (live bucket gone, `.old_t_bNN` holding the pre-swap
+  * state) heals on the next touch, restoring the previous state instead
+  * of reading it as missing. */
 class LocalStoreSwapSpec extends SparkSpec {
   import spark.implicits._
-
-  test("crashed mid-swap store recovers the pre-swap state on next read") {
-    val base = Files.createTempDirectory("graft-swap").toString
-    val store = LocalStore(spark, base)
-    store.upsertDocuments(Seq(("doc/1", "<x/>", "judgment", "m", null: String, false, "inserted"))
-      .toDF("uri", "xml", "doc_type", "annotation_message", "annotation_payload",
-        "automated", "upload_state"))
-    assert(store.documents.count() == 1)
-
-    // simulate the crash window: live renamed away, the new state never
-    // committed (a half-written .next is also present)
-    Files.move(Paths.get(s"$base/documents"), Paths.get(s"$base/.old_documents"),
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.createDirectories(Paths.get(s"$base/.next_documents"))
-
-    // next touch heals: the pre-swap state is back, and a follow-up write
-    // (which previously would have deleted .old_documents) builds on it
-    assert(store.documents.count() == 1)
-    store.upsertDocuments(Seq(("doc/2", "<y/>", "judgment", "m", null: String, false, "inserted"))
-      .toDF("uri", "xml", "doc_type", "annotation_message", "annotation_payload",
-        "automated", "upload_state"))
-    val docs = store.documents.collect()
-    assert(docs.length == 2)
-    assert(docs.find(_.getAs[String]("uri") == "doc/1").get.getAs[Int]("version") == 1)
-  }
 
   private def docRow(uri: String, xml: String = "<x/>") =
     (uri, xml, "judgment", "m", null: String, false, "inserted")
@@ -90,12 +65,15 @@ class LocalStoreSwapSpec extends SparkSpec {
       Paths.get(s"$base/.old_documents_b$aBucket"), StandardCopyOption.ATOMIC_MOVE)
     Files.createDirectories(Paths.get(s"$base/.next_documents/bucket=$aBucket"))
 
-    // next read heals the bucket; a follow-up merge builds on it
+    // next read heals the bucket; a follow-up merge builds on it, and the
+    // leftover `.next_documents` does not break it
     assert(store.documents.count() == 100)
     store.upsertDocuments(Seq(docRow("doc/1", "<y/>")).toDF(docCols: _*))
     val docs = store.documents.collect()
     assert(docs.length == 100)
     assert(docs.find(_.getAs[String]("uri") == "doc/1").get.getAs[Int]("version") == 2)
+    assert(!Files.exists(Paths.get(s"$base/.next_documents")),
+      "the MERGE must clear a crashed attempt's staged .next dir")
   }
 
   test("a failing table write in applyEffects rethrows its own exception; the others land") {

@@ -62,6 +62,11 @@ class StaleCommitEpochSpec extends SparkSpec {
       val zombie = post(s"${server.endpoint}/txn/$id/commitBatch?epoch=0",
         s"appendNotifications\t$notifSchema")
       assert(zombie.statusCode() == 409, s"${zombie.statusCode()} ${zombie.body()}")
+      // an epoch-less commit counts as epoch 0 — also refused once an
+      // abort has superseded it
+      val epochless = post(s"${server.endpoint}/txn/$id/commitBatch",
+        s"appendNotifications\t$notifSchema")
+      assert(epochless.statusCode() == 409, s"${epochless.statusCode()} ${epochless.body()}")
       assert(inner.read("notifications").isEmpty,
         "a stale commit must not apply partial staging")
       // the live replay's commit (epoch 1) applies the re-staged rows
@@ -71,34 +76,6 @@ class StaleCommitEpochSpec extends SparkSpec {
       val rows = inner.read("notifications").get.collect()
       assert(rows.length == 1 && rows(0).getString(0) == "doc/new",
         s"the live attempt's rows must survive the zombie: ${rows.toSeq}")
-    } finally server.stop()
-  }
-
-  test("single-op commit path enforces the same epoch guard") {
-    val inner = LocalStore(spark,
-      Files.createTempDirectory("graft-epoch-store2").toString)
-    val server = new DocStoreServer(inner)
-    try {
-      val id = "zombie-commit-2"
-      assert(post(s"${server.endpoint}/txn/$id/abort", "").body() == "1")
-      // single-op commits read FLAT (untagged) staged parts
-      assert(post(s"${server.endpoint}/txn/$id",
-        notifRow("doc/live")).statusCode() == 200)
-      val zombie = post(
-        s"${server.endpoint}/txn/$id/commit?op=appendNotifications&epoch=0",
-        notifSchema)
-      assert(zombie.statusCode() == 409, s"${zombie.statusCode()} ${zombie.body()}")
-      assert(inner.read("notifications").isEmpty)
-      // an epoch-less commit (legacy client) is epoch 0 — also refused
-      // once an abort has superseded it
-      val legacy = post(
-        s"${server.endpoint}/txn/$id/commit?op=appendNotifications", notifSchema)
-      assert(legacy.statusCode() == 409, s"${legacy.statusCode()} ${legacy.body()}")
-      val live = post(
-        s"${server.endpoint}/txn/$id/commit?op=appendNotifications&epoch=1",
-        notifSchema)
-      assert(live.statusCode() == 200, live.body())
-      assert(inner.read("notifications").get.count() == 1)
     } finally server.stop()
   }
 
@@ -142,6 +119,23 @@ class StaleCommitEpochSpec extends SparkSpec {
       val rows = inner.read("notifications").get.collect()
       assert(rows.length == 1 && rows(0).getString(0) == "doc/real",
         s"scoped round must clear the crashed attempt and commit its own: ${rows.toSeq}")
+      // a single-op write rides the same protocol: the scope's second
+      // write, replayed by a fresh scoped instance, is acked by the ledger
+      val fails = Seq(("msg-16", "boom", true)).toDF("msg_id", "error", "terminal")
+      def replay(): Unit = {
+        val scoped = HttpStore(spark, server.endpoint).withBatchScope("batch-16")
+        scoped.applyEffects(EffectBatch(notifications = Some(
+          Seq(("doc/real", "new", "ref", true)).toDF("uri", "action", "payload", "delivered"))))
+        scoped.appendFailures(fails)
+      }
+      replay(); replay()
+      val failTxn = java.util.UUID.nameUUIDFromBytes(
+        "batch-16|appendFailures|1".getBytes("UTF-8")).toString
+      assert(Files.exists(java.nio.file.Paths.get(inner.base, "_txn_ledger", failTxn)),
+        "the scoped appendFailures commit must be in the ledger")
+      assert(inner.read("failures").get.count() == 1,
+        "a replayed scoped appendFailures must be acked, not appended twice")
+      assert(inner.read("notifications").get.count() == 1)
     } finally server.stop()
   }
 }
