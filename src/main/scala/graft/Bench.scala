@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.metrics.Ledger
+
 /** Per-round benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -49,6 +51,12 @@ import org.apache.spark.sql.SparkSession
   * min is the same merge rule make_floors.py uses). Suspects are then
   * re-evaluated against the floors: `"suspect"` is what REMAINS after
   * the second chance, `"rerun"` records the re-measured medians.
+  *
+  * Per-query job evidence: every run is tagged with its query name on a
+  * [[Ledger]]; `"jobs"` and `"shuffle_bytes"` (bytes written to shuffle)
+  * are those of the first successful warm run — the run `graft.Profile`
+  * prints. `"cpus"` stamps the core count, so a low-core capture
+  * describes itself.
   */
 object Bench {
   /** A warm median this many × its quiet floor is contention-suspect … */
@@ -67,24 +75,23 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.harnessCpus
     val reps = math.max(2, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "4").toInt)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM/codegen/noop-sink path AND each table's file listing +
-    // parquet footers, so the alphabetically-first query doesn't absorb
-    // one-time session and scan-setup cost
-    spark.range(1000).write.mode("overwrite").format("noop").save()
+    val spark = GraftSession.harness()
+    val ledger = new Ledger(spark)
+    // warm each table's file listing + parquet footers, so the
+    // alphabetically-first query doesn't absorb one-time scan-setup cost
     val t = graft.sql.Tables(spark, sfDir)
     Seq(t.region, t.nation, t.customer, t.supplier, t.part, t.orders,
       t.lineitem, t.events, t.documents, t.embeddings)
-      .foreach(df => df.write.mode("overwrite").format("noop").save())
+      .foreach(df => Ledger.materialize(df))
     val errors = scala.collection.mutable.ListBuffer.empty[String]
 
     val maxReps = math.max(reps,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_REPS", "12").toInt)
 
-    final case class QStat(first: Double, warmMedian: Double, spread: Double, warmReps: Int)
+    final case class QStat(first: Double, warmMedian: Double, spread: Double, warmReps: Int,
+        jobs: Int = -1, shuffleBytes: Long = -1L)
     /** the interquartile runs: drop the outer quarter from each end once
       * ≥4 reps exist (a raw max−min can never shrink by re-running) */
     def iqSpread(xs: Seq[Double]): Double = {
@@ -92,52 +99,55 @@ object Bench {
       val t = if (s.length >= 4) s.slice(s.length / 4, s.length - s.length / 4) else s
       t.max - t.min
     }
-    def timeQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Ledger.Run =
+      ledger.measure(name)(Ledger.materialize(fn(spark, sfDir)))
+    def recordErr(what: String, e: Throwable): Unit =
+      errors += s"$what: ${Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n').take(120)}"
+    /** One more warm wall of `name`, or None (error recorded as `what`). */
+    def retime(name: String, what: String): Option[Double] =
+      SparkEntry.queries.get(name).flatMap { fn =>
+        try Some(timeQuery(name, fn).wall)
+        catch { case e: Throwable => recordErr(what, e); None }
+      }
     // builder-side iteration only (driver sets no filter): time a named
     // subset without paying the full 180+-query sweep
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      def once(): Double = timeQuery(fn)
-      def recordErr(e: Throwable): Unit =
-        errors += s"$name: ${Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n').take(120)}"
+      def once(): Ledger.Run = timeQuery(name, fn)
       // per-rep isolation: a transient failure on a WARM rep must not
       // discard the evidence already gathered (first run + surviving warm
       // reps) — dropping the query entirely would make totals
       // non-comparable run to run, the exact artifact medians exist to fix
       val stat =
         try {
-          val first = once()
-          val warm = scala.collection.mutable.ArrayBuffer.empty[Double]
+          val first = once().wall
+          val warm = scala.collection.mutable.ArrayBuffer.empty[Ledger.Run]
+          def walls = warm.map(_.wall).toSeq
           var attempts = 1 // the first run
           def tryOnce(): Unit = {
             attempts += 1
             try warm += once()
-            catch { case e: Throwable => recordErr(e); () }
+            catch { case e: Throwable => recordErr(name, e) }
           }
           (1 until reps).foreach(_ => tryOnce())
           // contention re-runs: unstable numbers are re-measured until the
           // interquartile runs agree to within half the median (or the cap)
           while (warm.nonEmpty && attempts < maxReps &&
-              iqSpread(warm.toSeq) > 0.5 * median(warm.toSeq))
+              iqSpread(walls) > 0.5 * median(walls))
             tryOnce()
           // all warm reps failed: keep the first-run evidence but report NO
           // warm median (-1 sentinel) — passing the cold time off as a warm
           // median with spread 0 would fake both the number and its stability
           if (warm.isEmpty) QStat(first, -1.0, -1.0, 0)
-          else QStat(first, median(warm.toSeq), iqSpread(warm.toSeq), warm.length)
+          else QStat(first, median(walls), iqSpread(walls), warm.length,
+            warm.head.jobs.size, warm.head.shuffleWriteBytes)
         } catch {
-          case e: Throwable => recordErr(e); QStat(-1.0, -1.0, -1.0, 0)
+          case e: Throwable => recordErr(name, e); QStat(-1.0, -1.0, -1.0, 0)
         }
       name -> stat
     }
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-
     // suspect-floor cross-check against the committed quiet capture
     val floorsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FLOORS", "BENCH_floors.json")
     val floorsTxt =
@@ -167,25 +177,18 @@ object Bench {
     // remains is a real regression or a sustained machine stall.
     val RerunReps = 3
     val rerunMedians: Map[String, Double] = initialSuspects.flatMap { name =>
-      SparkEntry.queries.get(name).flatMap { fn =>
-        val times = (1 to RerunReps).flatMap { _ =>
-          try Some(timeQuery(fn))
-          catch { case e: Throwable =>
-            errors += s"$name (rerun): ${Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n').take(120)}"
-            None
-          }
-        }
-        if (times.isEmpty) None else Some(name -> median(times))
-      }
+      val times = (1 to RerunReps).flatMap(_ => retime(name, s"$name (rerun)"))
+      if (times.isEmpty) None else Some(name -> median(times))
     }.toMap
-    val merged = results.map { case (name, st) =>
-      rerunMedians.get(name) match {
-        case Some(m) if st.warmMedian >= 0 =>
-          name -> st.copy(warmMedian = math.min(st.warmMedian, m),
-            warmReps = st.warmReps + RerunReps)
+    /** `fresh` warm walls MIN-merged into the medians they re-measured. */
+    def minMerge(rs: Seq[(String, QStat)], fresh: Map[String, Double], reps: Int) = rs.map {
+      case (name, st) => fresh.get(name) match {
+        case Some(t) if st.warmMedian >= 0 =>
+          name -> st.copy(warmMedian = math.min(st.warmMedian, t), warmReps = st.warmReps + reps)
         case _ => name -> st
       }
     }
+    val merged = minMerge(results, rerunMedians, RerunReps)
     val suspects =
       if (initialSuspects.isEmpty) initialSuspects else floorSuspects(merged)
     val suspectJson = suspects.map(s => "\"" + s + "\"").mkString("[", ",", "]")
@@ -234,23 +237,9 @@ object Bench {
         if (inflated.isEmpty) continue = false
         else {
           passesRun += 1
-          val fresh = inflated.toSeq.sorted.flatMap { name =>
-            SparkEntry.queries.get(name).flatMap { fn =>
-              try Some(name -> timeQuery(fn))
-              catch { case e: Throwable =>
-                errors += s"$name (inflation): ${Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n').take(120)}"
-                None
-              }
-            }
-          }.toMap
-          converged = converged.map { case (name, st) =>
-            fresh.get(name) match {
-              case Some(t) if st.warmMedian >= 0 =>
-                name -> st.copy(warmMedian = math.min(st.warmMedian, t),
-                  warmReps = st.warmReps + 1)
-              case _ => name -> st
-            }
-          }
+          val fresh = inflated.toSeq.sorted
+            .flatMap(name => retime(name, s"$name (inflation)").map(name -> _)).toMap
+          converged = minMerge(converged, fresh, 1)
         }
       }
     }
@@ -265,20 +254,21 @@ object Bench {
 
     // headline numbers rest on the min-merged stats; errJson is built
     // AFTER the re-runs so their failures are not silently dropped
-    def obj(f: QStat => Double): String =
+    def obj(f: QStat => Any): String =
       converged.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     def tot(f: QStat => Double): Double =
       converged.collect { case (_, v) if f(v) >= 0 => f(v) }.sum
-    val errJson = errors.map(e => "\"" + esc(e) + "\"").mkString("[", ",", "]")
+    val errJson = errors.map(Verify.q).mkString("[", ",", "]")
 
     val json =
       s"""{"metric":"total_warm_median","value":${tot(_.warmMedian)},"unit":"sec",""" +
         s""""queries":${obj(_.warmMedian)},"first":${obj(_.first)},"spread":${obj(_.spread)},""" +
         s""""warm_reps":${obj(_.warmReps.toDouble)},""" +
-        s""""suspect":$suspectJson,"suspect_note":"${esc(floorNote)}","rerun":$rerunJson,""" +
+        s""""suspect":$suspectJson,"suspect_note":${Verify.q(floorNote)},"rerun":$rerunJson,""" +
         s""""inflated":$inflatedJson,"inflation_passes":$passesRun,"machine_factor":$machineFactorJson,""" +
         s""""floor_ratio":${ratioJson(converged)},""" +
-        s""""first_total":${tot(_.first)},"reps":$reps,"errors":$errJson,"sf":"$sfDir"}"""
+        s""""first_total":${tot(_.first)},"reps":$reps,"errors":$errJson,"sf":${Verify.q(sfDir)},""" +
+        s""""jobs":${obj(_.jobs)},"shuffle_bytes":${obj(_.shuffleBytes)},"cpus":$cpus}"""
     // the full JSON is also persisted to a file the archive picks up
     // whole (committed per round as BENCH_full.json)
     val out = java.nio.file.Paths.get(
@@ -298,7 +288,8 @@ object Bench {
         s""""unit":"sec","n_queries":${results.length},"first_total":${math.rint(tot(_.first) * 100) / 100},""" +
         s""""reps":$reps,"n_errors":${errors.length},"suspect":$suspectJson,"rerun":$rerunJson,""" +
         s""""inflated":$inflatedJson,"inflation_passes":$passesRun,"machine_factor":$machineFactorJson,""" +
-        s""""slowest":$slowest,"queries_full":"$out","sf":"$sfDir"}""")
+        s""""slowest":$slowest,"queries_full":${Verify.q(out.toString)},"sf":${Verify.q(sfDir)},""" +
+        s""""cpus":$cpus}""")
     // THE contract line — {"metric", "value", "unit", "queries", ..., "sf"}
     // — is printed LAST: the driver takes the last JSON line it can parse
     // from stdout, and it needs the full per-query map for its low-core
@@ -309,6 +300,7 @@ object Bench {
     // the queries map.)
     println(json)
     System.out.flush()
+    ledger.close()
     spark.stop()
   }
 }

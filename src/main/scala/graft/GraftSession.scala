@@ -44,10 +44,15 @@ object GraftSession {
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "60s")
 
-  /** Get-or-create with defaults; used by tests and the local tools. */
-  def get(master: String = "local[4]"): SparkSession = {
-    val s = builder(master).getOrCreate()
+  /** The harnesses' core count: `SPARK_GRAFT_CPUS`, default 32. */
+  def harnessCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The harnesses' session: `local[harnessCpus]`, WARN logging, and a
+    * noop write that warms the JVM, codegen and the sink before timing. */
+  def harness(): SparkSession = {
+    val s = builder(s"local[$harnessCpus]", harnessCpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    s.range(1000).write.mode("overwrite").format("noop").save()
     s
   }
 }

@@ -3,17 +3,19 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.store.{DocumentStore, LocalStore}
+import graft.metrics.{JobRecord, Ledger}
+import graft.store.{DocStoreServer, DocumentStore, HttpStore, LocalStore, ShardedWireStore}
 import graft.streaming.IngestStream
 
 /** End-to-end ingest throughput: drive [[IngestStream]] over N
   * golden-shaped TDR packages (real tarballs staged under a file: bucket,
   * real SQS-dialect messages through a file streaming source) into a
-  * [[LocalStore]] at local[32], and report docs/s — the number BASELINE.md
-  * sets against the reference's derived ceiling of O(10) docs/s across 25
-  * concurrent 256 MB Lambdas.
+  * [[LocalStore]] at local[`SPARK_GRAFT_CPUS`] (default 32), and report
+  * docs/s — the number BASELINE.md sets against the reference's derived
+  * ceiling of O(10) docs/s across 25 concurrent 256 MB Lambdas.
   *
   * Two timed runs isolate the bottleneck:
   *   - `full`: the whole pipeline into a LocalStore (fetch → tar gather →
@@ -22,9 +24,14 @@ import graft.streaming.IngestStream
   *     frame-forcing null sink (asset bytes still copied) — the delta
   *     names how much of the wall is the store MERGE vs the pipeline.
   *
-  * Prints one BENCH-style JSON line:
-  * {"metric":"ingest_docs_per_sec","value":...,"docs":N,"full_sec":...,
-  *  "null_store_sec":...,"bottleneck":"..."}. */
+  * After the full run it prints one `[ingest-bench]` line per call site
+  * (jobs and job-seconds, from a [[Ledger]]), then one BENCH-style JSON
+  * line: {"metric":"ingest_docs_per_sec","value":...,"docs":N,
+  * "full_sec":...,"null_store_sec":...,"bottleneck":"..."}.
+  *
+  * Usage: `IngestBench [n]`, `IngestBench n concurrent [streams]
+  * [roundSize]`, `IngestBench n sharded [streams] [shards] [roundSize]`
+  * (see [[wireRun]]). */
 object IngestBench {
 
   /** Table writes discarded after forcing the frame (the compute is paid,
@@ -41,32 +48,6 @@ object IngestBench {
     def appendAssets(rows: DataFrame): Unit = force(rows)
     def appendNotifications(rows: DataFrame): Unit = force(rows)
     def appendFailures(rows: DataFrame): Unit = force(rows)
-  }
-
-  /** Delegating store that accumulates wall seconds per operation — the
-    * bottleneck-naming instrument (printed after the full run). */
-  private final class TimingStore(inner: DocumentStore) extends DocumentStore {
-    val timings = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    private def timed[T](op: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      try body finally timings.merge(op, (System.nanoTime() - t0) / 1e9, _ + _)
-    }
-    def spark: SparkSession = inner.spark
-    // delegate the ROUND to the inner store so its overlapped apply is
-    // measured as deployed (per-op walls overlap, so the round is timed
-    // as one unit — the individual entries below only tick for ops
-    // called outside a round, e.g. appendFailures)
-    override def applyEffects(b: graft.store.EffectBatch): Unit =
-      timed("applyEffects(round)")(inner.applyEffects(b))
-    def read(t: String): Option[DataFrame] = timed(s"read($t)")(inner.read(t))
-    def upsertDocuments(u: DataFrame): Unit = timed("upsertDocuments")(inner.upsertDocuments(u))
-    def setPublished(d: DataFrame): Unit = timed("setPublished")(inner.setPublished(d))
-    def appendIdentifiers(r: DataFrame): Unit = timed("appendIdentifiers")(inner.appendIdentifiers(r))
-    def upsertProperties(r: DataFrame): Unit = timed("upsertProperties")(inner.upsertProperties(r))
-    def appendAssets(r: DataFrame): Unit = timed("appendAssets")(inner.appendAssets(r))
-    def appendNotifications(r: DataFrame): Unit = timed("appendNotifications")(inner.appendNotifications(r))
-    def appendFailures(r: DataFrame): Unit = timed("appendFailures")(inner.appendFailures(r))
-    def assetRoot: String = inner.assetRoot
   }
 
   /** Cite must be UNIQUE per ref: rounds after the first resolve NCNs
@@ -93,29 +74,37 @@ object IngestBench {
       s"$ref/doc.docx" -> s"docx bytes $ref ${"y" * 1000}",
       s"$ref/parser.log" -> "ok"))
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   private def sqsLine(msgId: String, ref: String): String = {
     val inner = s"""{"parameters": {"reference": "$ref", "originator": "TDR", """ +
       s""""s3Bucket": "b", "s3Key": "k/$ref.tar.gz"}}"""
-    val body = jsonStr(s"""{"Type": "Notification", "Message": ${jsonStr(inner)}}""")
+    val body = Verify.q(s"""{"Type": "Notification", "Message": ${Verify.q(inner)}}""")
     val record = s"""{"messageId": "$msgId", "eventSource": "aws:sqs", "body": $body}"""
-    s"""{"kind": "sqs", "record_json": ${jsonStr(record)}}"""
+    s"""{"kind": "sqs", "record_json": ${Verify.q(record)}}"""
   }
 
-  private def timedRun(spark: SparkSession, eventsDir: String, store: DocumentStore,
-      resolver: (String, String) => String): Double = {
-    val ckpt = Files.createTempDirectory("graft-ingest-bench-ckpt").toString
+  /** Streams the staged event files in `eventsDir` through
+    * [[IngestStream]] into `store`, one file per micro-batch round. */
+  private def startStream(spark: SparkSession, eventsDir: String, store: DocumentStore,
+      bucketStr: String): StreamingQuery = {
     val events = spark.readStream
       .schema(StructType(Seq(StructField("kind", StringType),
         StructField("record_json", StringType))))
-      .option("maxFilesPerTrigger", "1000000")
+      .option("maxFilesPerTrigger", "1")
       .json(eventsDir)
-    val t0 = System.nanoTime()
-    val q = IngestStream.start(events, store, ckpt, packageUri = resolver)
-    q.awaitTermination()
-    (System.nanoTime() - t0) / 1e9
+    IngestStream.start(events, store,
+      Files.createTempDirectory("graft-ingest-bench-ckpt").toString,
+      packageUri = (b: String, key: String) => s"file:$bucketStr/$b/$key")
+  }
+
+  private def timedRun(spark: SparkSession, eventsDir: String, store: DocumentStore,
+      bucketStr: String): Double =
+    Ledger.seconds(startStream(spark, eventsDir, store, bucketStr).awaitTermination())
+
+  /** A fresh file: bucket with the `b/k/` prefix the messages point at. */
+  private def bucket(): String = {
+    val b = Files.createTempDirectory("graft-ingest-bench-bucket")
+    Files.createDirectories(b.resolve("b/k"))
+    b.toString
   }
 
   /** Stage `n` tarballs (refs prefixed `REF-$tag`) under the shared
@@ -147,71 +136,23 @@ object IngestBench {
     eventsDir
   }
 
-  /** `concurrent` mode (BASELINE.md's multi-writer rows): `streams`
-    * independent streaming queries, each over its own slice of the
-    * packages, all writing through the WIRE protocol into ONE
-    * [[graft.store.DocStoreServer]] — the deployment shape where several
-    * ingest fleets share a document store. Reports combined docs/s;
-    * `MultiWriterStoreSpec` pins the correctness half (here the interest
-    * is throughput under commit contention: the server serializes commits
-    * behind its write lock, so the scaling row 1/2/3 streams locates the
-    * knee where the shared lock starts to bend the curve). */
-  private def concurrentRun(spark: SparkSession, bucketStr: String, n: Int,
-      streams: Int, roundSize: Int): Unit = {
-    val resolver = (b: String, key: String) => s"file:$bucketStr/$b/$key"
+  /** The wire modes (BASELINE.md's multi-writer and sharding rows):
+    * `streams` streaming queries over slices of `n` packages, `roundSize`
+    * per micro-batch round, writing through the wire protocol into one
+    * shared [[DocStoreServer]] via [[HttpStore]] (`concurrent`: commits
+    * queue on its write lock) or into `shards` servers via
+    * [[ShardedWireStore]], rows routed by uri hash (`sharded`). Both
+    * stores share one commit path. Requires every package to land as one
+    * document; returns the streams' wall seconds. */
+  def wireRun(spark: SparkSession, n: Int, streams: Int, shards: Int,
+      roundSize: Int): Double = {
     // tags must stay ALPHANUMERIC: the fixture's cite derives from the
     // ref's letter/digit codepoints, so a punctuation tag (the old
     // 'C'+i past 'Z') vanishes from the cite and two streams' refs
     // could collide into one NCN — an update instead of an insert,
     // breaking the doc-count invariant
     require(streams >= 1 && streams <= 99, s"streams must be 1..99, got $streams")
-    val per = n / streams
-    val dirs = (0 until streams).map { i =>
-      val slice = if (i == streams - 1) n - per * (streams - 1) else per
-      stage(spark, bucketStr, slice, f"S$i%02d", roundSize)
-    }
-    val inner = LocalStore(spark,
-      Files.createTempDirectory("graft-ingest-bench-wire-store").toString)
-    val server = new graft.store.DocStoreServer(inner)
-    try {
-      val t0 = System.nanoTime()
-      val qs = dirs.map { d =>
-        val events = spark.readStream
-          .schema(StructType(Seq(StructField("kind", StringType),
-            StructField("record_json", StringType))))
-          // one staged event file = one micro-batch round (round size is
-          // set at staging time via the 4th CLI arg)
-          .option("maxFilesPerTrigger", "1")
-          .json(d)
-        IngestStream.start(events, graft.store.HttpStore(spark, server.endpoint),
-          Files.createTempDirectory("graft-ingest-bench-wire-ckpt").toString,
-          packageUri = resolver)
-      }
-      qs.foreach(_.awaitTermination())
-      val sec = (System.nanoTime() - t0) / 1e9
-      val docs = inner.documents.count()
-      require(docs == n.toLong, s"expected $n documents, got $docs")
-      val rs = if (roundSize == Int.MaxValue) "all" else roundSize.toString
-      println(f"""{"metric":"ingest_docs_per_sec_concurrent","value":${n / sec}%.1f,""" +
-        f""""docs":$n,"streams":$streams,"round_size":"$rs","full_sec":$sec%.1f,""" +
-        f""""store":"wire(DocStoreServer)"}""")
-    } finally server.stop()
-  }
-
-  /** `sharded` mode — the 100 TB shape the r15 scaling table selected
-    * (writer count can't scale ONE store's write lock; sharding the
-    * store can): `streams` writer fleets × `shards` independent
-    * [[graft.store.DocStoreServer]]s, every row routed to its shard by
-    * uri hash through [[graft.store.ShardedWireStore]]. Against the
-    * `concurrent` rows (one shared server) the lock contention drops
-    * ~1/shards per shard AND each in-lock apply is ~shards× smaller —
-    * this mode measures how much of that shows up as combined docs/s on
-    * one machine (the cluster win is larger: shards live on separate
-    * hosts). */
-  private def shardedRun(spark: SparkSession, bucketStr: String, n: Int,
-      streams: Int, shards: Int, roundSize: Int): Unit = {
-    val resolver = (b: String, key: String) => s"file:$bucketStr/$b/$key"
-    require(streams >= 1 && streams <= 99, s"streams must be 1..99, got $streams")
+    val bucketStr = bucket()
     val per = n / streams
     val dirs = (0 until streams).map { i =>
       val slice = if (i == streams - 1) n - per * (streams - 1) else per
@@ -219,86 +160,74 @@ object IngestBench {
     }
     val inners = (0 until shards).map(i => LocalStore(spark,
       Files.createTempDirectory(s"graft-ingest-bench-shard$i").toString))
-    val servers = inners.map(new graft.store.DocStoreServer(_))
+    val servers = inners.map(new DocStoreServer(_))
     try {
-      val t0 = System.nanoTime()
-      val qs = dirs.map { d =>
-        val events = spark.readStream
-          .schema(StructType(Seq(StructField("kind", StringType),
-            StructField("record_json", StringType))))
-          .option("maxFilesPerTrigger", "1")
-          .json(d)
-        val store = graft.store.ShardedWireStore(spark, servers.map(_.endpoint))
-        IngestStream.start(events, store,
-          Files.createTempDirectory("graft-ingest-bench-shard-ckpt").toString,
-          packageUri = resolver)
+      val sec = Ledger.seconds {
+        val qs = dirs.map { d =>
+          val store =
+            if (shards == 1) HttpStore(spark, servers.head.endpoint)
+            else ShardedWireStore(spark, servers.map(_.endpoint))
+          startStream(spark, d, store, bucketStr)
+        }
+        qs.foreach(_.awaitTermination())
       }
-      qs.foreach(_.awaitTermination())
-      val sec = (System.nanoTime() - t0) / 1e9
       val docs = inners.map(_.documents.count()).sum
       require(docs == n.toLong, s"expected $n documents, got $docs")
-      val rs = if (roundSize == Int.MaxValue) "all" else roundSize.toString
-      println(f"""{"metric":"ingest_docs_per_sec_sharded","value":${n / sec}%.1f,""" +
-        f""""docs":$n,"streams":$streams,"shards":$shards,"round_size":"$rs",""" +
-        f""""full_sec":$sec%.1f,"store":"wire(ShardedWireStore x$shards)"}""")
+      sec
     } finally servers.foreach(_.stop())
   }
 
+  /** One line per call site, busiest first: its jobs and job-seconds. */
+  private def printSites(jobs: Seq[JobRecord]): Unit =
+    jobs.groupBy(_.site).toSeq.sortBy(-_._2.map(_.seconds).sum).foreach { case (site, js) =>
+      println(f"[ingest-bench] ${if (site.isEmpty) "(no graft frame)" else site}%-44s " +
+        f"${js.size}%5d jobs ${js.map(_.seconds).sum}%8.1f job-s")
+    }
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(2000)
-    val concurrent = args.lift(1).contains("concurrent")
-    val sharded = args.lift(1).contains("sharded")
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
+    val ledger = new Ledger(spark)
+    try args.lift(1) match {
+      case Some(mode @ ("concurrent" | "sharded")) =>
+        val sharded = mode == "sharded"
+        val streams = args.lift(2).map(_.toInt).getOrElse(2)
+        val shards = if (sharded) args.lift(3).map(_.toInt).getOrElse(2) else 1
+        val roundSize = args.lift(if (sharded) 4 else 3).map(_.toInt).getOrElse(Int.MaxValue)
+        val sec = wireRun(spark, n, streams, shards, roundSize)
+        printSites(ledger.drain())
+        val rs = if (roundSize == Int.MaxValue) "all" else roundSize.toString
+        val shardsField = if (sharded) s""""shards":$shards,""" else ""
+        val store = if (shards == 1) "DocStoreServer" else s"ShardedWireStore x$shards"
+        println(f"""{"metric":"ingest_docs_per_sec_$mode","value":${n / sec}%.1f,""" +
+          f""""docs":$n,"streams":$streams,$shardsField"round_size":"$rs",""" +
+          f""""full_sec":$sec%.1f,"store":"wire($store)"}""")
+      case _ =>
+        // stage N real tarballs under the file: bucket, generated in parallel
+        val bucketStr = bucket()
+        val eventsDir = stage(spark, bucketStr, n, "B")
+        val inner = LocalStore(spark,
+          Files.createTempDirectory("graft-ingest-bench-store").toString)
+        ledger.drain() // the staging jobs
+        val fullSec = timedRun(spark, eventsDir, inner, bucketStr)
+        printSites(ledger.drain())
+        val docs = inner.documents.count()
+        require(docs == n.toLong, s"expected $n documents, got $docs")
 
-    val bucket = Files.createTempDirectory("graft-ingest-bench-bucket")
-    Files.createDirectories(bucket.resolve("b/k"))
-    val bucketStr = bucket.toString
+        val nullSec = timedRun(spark, eventsDir, new NullStore(spark,
+          Files.createTempDirectory("graft-ingest-bench-null-assets").toString), bucketStr)
 
-    // warm the session (codegen, FS init) outside the timed runs
-    spark.range(1000).write.mode("overwrite").format("noop").save()
-
-    if (concurrent) {
-      concurrentRun(spark, bucketStr, n,
-        streams = args.lift(2).map(_.toInt).getOrElse(2),
-        roundSize = args.lift(3).map(_.toInt).getOrElse(Int.MaxValue))
+        val rate = n / fullSec
+        val mergeShare = (fullSec - nullSec) / fullSec
+        val bottleneck =
+          if (mergeShare > 0.5) "store MERGE (table writes dominate)"
+          else "pipeline (fetch + tar gather + asset copies dominate)"
+        println(f"""{"metric":"ingest_docs_per_sec","value":$rate%.1f,"docs":$n,""" +
+          f""""full_sec":$fullSec%.1f,"null_store_sec":$nullSec%.1f,""" +
+          f""""merge_share":$mergeShare%.2f,"bottleneck":"$bottleneck"}""")
+    } finally {
+      ledger.close()
       spark.stop()
-      return
     }
-    if (sharded) {
-      shardedRun(spark, bucketStr, n,
-        streams = args.lift(2).map(_.toInt).getOrElse(2),
-        shards = args.lift(3).map(_.toInt).getOrElse(2),
-        roundSize = args.lift(4).map(_.toInt).getOrElse(Int.MaxValue))
-      spark.stop()
-      return
-    }
-
-    // stage N real tarballs under the file: bucket, generated in parallel
-    val resolver = (b: String, key: String) => s"file:$bucketStr/$b/$key"
-    val eventsDir = stage(spark, bucketStr, n, "B")
-
-    val inner = LocalStore(spark,
-      Files.createTempDirectory("graft-ingest-bench-store").toString)
-    val fullStore = new TimingStore(inner)
-    val fullSec = timedRun(spark, eventsDir, fullStore, resolver)
-    val docs = fullStore.documents.count()
-    fullStore.timings.forEach { (op, s) =>
-      println(f"[ingest-bench] $op%-22s ${s}%.1f s")
-    }
-    require(docs == n.toLong, s"expected $n documents, got $docs")
-
-    val nullSec = timedRun(spark, eventsDir, new NullStore(spark,
-      Files.createTempDirectory("graft-ingest-bench-null-assets").toString), resolver)
-
-    val rate = n / fullSec
-    val mergeShare = (fullSec - nullSec) / fullSec
-    val bottleneck =
-      if (mergeShare > 0.5) "store MERGE (table writes dominate)"
-      else "pipeline (fetch + tar gather + asset copies dominate)"
-    println(f"""{"metric":"ingest_docs_per_sec","value":$rate%.1f,"docs":$n,""" +
-      f""""full_sec":$fullSec%.1f,"null_store_sec":$nullSec%.1f,""" +
-      f""""merge_share":$mergeShare%.2f,"bottleneck":"$bottleneck"}""")
-    spark.stop()
   }
 }

@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import scala.collection.mutable
+import graft.metrics.Ledger
 
 /** Optimization-round profiling harness (guide §1): run named queries
-  * once cold + once warm through the bench's noop sink with a listener
-  * recording per-job wall time and per-stage shuffle bytes, so the
-  * seconds inside a multi-stage query are attributable without the UI
+  * once cold + once warm through the bench's noop sink and print the
+  * [[Ledger]]'s record of every job of the warm run — wall time, stages,
+  * tasks, input and shuffle bytes, call site — so the seconds inside a
+  * multi-stage query are attributable without the UI
   * (spark.ui.enabled=false in the bench session).
   *
   * Usage: sbt "runMain graft.Profile q199_ivfpq_adc[,q156_modularity,...]"
@@ -18,64 +18,25 @@ object Profile {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(Seq("q93_pagerank"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).write.mode("overwrite").format("noop").save()
-
-    final case class JobRec(id: Int, desc: String, started: Long, var ended: Long = -1L,
-        var stages: Int = 0, var tasks: Int = 0,
-        var shufWrite: Long = 0L, var shufRead: Long = 0L, var input: Long = 0L)
-    val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
-    val stageToJob = mutable.HashMap.empty[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        jobs(e.jobId) = JobRec(e.jobId, desc, e.time)
-        e.stageIds.foreach(s => stageToJob(s) = e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
-        jobs.get(e.jobId).foreach(_.ended = e.time)
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = jobs.synchronized {
-        val si = e.stageInfo
-        stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
-          j.stages += 1
-          j.tasks += si.numTasks
-          j.shufWrite += si.taskMetrics.shuffleWriteMetrics.bytesWritten
-          j.shufRead += si.taskMetrics.shuffleReadMetrics.totalBytesRead
-          j.input += si.taskMetrics.inputMetrics.bytesRead
-        }
-      }
-    }
+    val spark = GraftSession.harness()
+    val ledger = new Ledger(spark)
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(s"== $name: NOT FOUND")
         case Some(fn) =>
           // cold rep to absorb codegen; the profiled rep is warm like the bench
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          jobs.synchronized { jobs.clear(); stageToJob.clear() }
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          // listener events are posted async; give the bus a moment to drain
-          // (listenerBus.waitUntilEmpty is private[spark])
-          Thread.sleep(1000)
-          spark.sparkContext.removeSparkListener(listener)
-          jobs.synchronized {
-            val recs = jobs.values.toSeq
-            val tot = recs.map(r => math.max(0L, r.ended - r.started)).sum / 1e3
-            println(f"== $name warm wall ${wall}%.2fs, ${recs.size} jobs, sum-of-jobs ${tot}%.2fs")
-            recs.foreach { r =>
-              val dur = math.max(0L, r.ended - r.started) / 1e3
-              println(f"  job ${r.id}%3d ${dur}%6.2fs stages=${r.stages}%2d tasks=${r.tasks}%4d " +
-                f"in=${r.input / 1024 / 1024}%4dMB sw=${r.shufWrite / 1024}%6dKB sr=${r.shufRead / 1024}%6dKB  ${r.desc.take(60)}")
-            }
+          Ledger.materialize(fn(spark, sfDir))
+          val run = ledger.measure(name)(Ledger.materialize(fn(spark, sfDir)))
+          println(f"== $name warm wall ${run.wall}%.2fs, ${run.jobs.size} jobs, " +
+            f"sum-of-jobs ${run.jobs.map(_.seconds).sum}%.2fs")
+          run.jobs.foreach { r =>
+            println(f"  job ${r.id}%3d ${r.seconds}%6.2fs stages=${r.stages}%2d tasks=${r.tasks}%4d " +
+              f"in=${r.inputBytes / 1024 / 1024}%4dMB sw=${r.shuffleWriteBytes / 1024}%6dKB " +
+              f"sr=${r.shuffleReadBytes / 1024}%6dKB  ${r.site}")
           }
       }
     }
+    ledger.close()
     spark.stop()
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.metrics.Ledger
+
 /** One-off empirical scale-curve measurement (SCALE.md): time the heavy
   * shuffle-bound queries at sf0.01, sf0.1, and a REPLICATED 10× of sf0.1,
   * and report the observed scaling exponents (slope of log t vs log n).
@@ -233,24 +235,7 @@ object Scale {
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val ev = spark.read.parquet(s"$src/events.parquet")
     val k = explode(sequence(lit(0), lit(Reps - 1))).as("k")
-
-    // Key-offset replication: each replica is a disconnected copy of the
-    // FK graph (every key column that participates in a timed query's
-    // join is offset by the same k·KeyOff, so joins never cross replicas).
-    def repKeys(table: String, keys: Seq[String]): Unit =
-      keys.foldLeft(spark.read.parquet(s"$src/$table.parquet").select(col("*"), k)) {
-        (d, c) => d.withColumn(c, col(c) + col("k") * lit(KeyOff))
-      }.drop("k").write.mode(SaveMode.Overwrite).parquet(s"$out/$table.parquet")
-    repKeys("orders", Seq("o_orderkey", "o_custkey"))
-    repKeys("lineitem", Seq("l_orderkey", "l_suppkey"))
-    repKeys("customer", Seq("c_custkey"))
-    repKeys("supplier", Seq("s_suppkey"))
-    // nation stays fixed under organic growth (customers multiply, the
-    // country list doesn't) — copy as-is for q110's customer->nation audit
-    spark.read.parquet(s"$src/nation.parquet")
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/nation.parquet")
-    spark.read.parquet(s"$src/part.parquet")
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/part.parquet")
+    replicateTradeGraph(spark, src, out, Reps)
     spark.read.parquet(s"$src/embeddings.parquet").select(col("*"), k)
       .withColumn("vec_id", col("vec_id") + col("k") * lit(KeyOff))
       .drop("k")
@@ -281,6 +266,28 @@ object Scale {
     done.createNewFile()
   }
 
+  /** Key-offset replication of the trade graph, `reps` copies: each
+    * replica is a disconnected copy of the FK graph (every key column that
+    * participates in a timed query's join is offset by the same k·KeyOff,
+    * so joins never cross replicas). nation and part stay fixed under
+    * organic growth (customers multiply, the country list and the brand
+    * domain don't) — copied as-is. */
+  private def replicateTradeGraph(spark: SparkSession, src: String, out: String,
+      reps: Int): Unit = {
+    val k = explode(sequence(lit(0), lit(reps - 1))).as("k")
+    def repKeys(table: String, keys: Seq[String]): Unit =
+      keys.foldLeft(spark.read.parquet(s"$src/$table.parquet").select(col("*"), k)) {
+        (d, c) => d.withColumn(c, col(c) + col("k") * lit(KeyOff))
+      }.drop("k").write.mode(SaveMode.Overwrite).parquet(s"$out/$table.parquet")
+    repKeys("orders", Seq("o_orderkey", "o_custkey"))
+    repKeys("lineitem", Seq("l_orderkey", "l_suppkey"))
+    repKeys("customer", Seq("c_custkey"))
+    repKeys("supplier", Seq("s_suppkey"))
+    for (t <- Seq("nation", "part"))
+      spark.read.parquet(s"$src/$t.parquet")
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/$t.parquet")
+  }
+
   // ------------------------------------------------------------ graph 100×
   /** 100× EDGE-COUNT decade for the iterative graph family (SCALE.md's
     * round-11 extension): replicate ONLY the trade-graph tables of sf0.1
@@ -300,19 +307,7 @@ object Scale {
   private def buildGraphReplica(spark: SparkSession, src: String, out: String): Unit = {
     val done = new java.io.File(s"$out/_BUILT_g100_v1")
     if (done.exists()) return
-    val k = explode(sequence(lit(0), lit(GraphReps - 1))).as("k")
-    def repKeys(table: String, keys: Seq[String]): Unit =
-      keys.foldLeft(spark.read.parquet(s"$src/$table.parquet").select(col("*"), k)) {
-        (d, c) => d.withColumn(c, col(c) + col("k") * lit(KeyOff))
-      }.drop("k").write.mode(SaveMode.Overwrite).parquet(s"$out/$table.parquet")
-    repKeys("orders", Seq("o_orderkey", "o_custkey"))
-    repKeys("lineitem", Seq("l_orderkey", "l_suppkey"))
-    repKeys("customer", Seq("c_custkey"))
-    repKeys("supplier", Seq("s_suppkey"))
-    spark.read.parquet(s"$src/nation.parquet")
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/nation.parquet")
-    spark.read.parquet(s"$src/part.parquet")
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/part.parquet")
+    replicateTradeGraph(spark, src, out, GraphReps)
     done.createNewFile()
   }
 
@@ -369,14 +364,7 @@ object Scale {
     buildDedupReplica(spark, "/root/testdata/sf0.1", hundredDir, 100)
     val dirs = Seq("sf0.1" -> oneDir,
       "10x" -> tenDir, "100x" -> hundredDir)
-    for (q <- DedupQueriesTimed) {
-      val ts = dirs.map { case (label, d) => label -> timeLong(spark, q, d) }
-      val m = ts.toMap
-      val e1 = math.log10(m("10x") / m("sf0.1"))
-      val e2 = math.log10(m("100x") / m("10x"))
-      println(f"$q%-24s " + ts.map { case (l, t) => f"$l=$t%.3fs" }.mkString(" ") +
-        f"  exp(0.1->10x)=$e1%.2f exp(10x->100x)=$e2%.2f")
-    }
+    decades(DedupQueriesTimed, dirs, Seq("0.1->10x", "10x->100x"))(timeLong(spark, _, _))
     // linear-fan-out observation: verified near-dup pairs per decade
     // (disjoint replicas ⇒ rows grow ~reps×, never quadratically)
     for ((label, d) <- dirs) {
@@ -385,16 +373,15 @@ object Scale {
     }
   }
 
+  /** One materialized run of query `name` over `dir`, in seconds. */
+  private def once(spark: SparkSession, name: String, dir: String): Double =
+    Ledger.materialize(SparkEntry.queries(name)(spark, dir))
+
   /** Runs-are-minutes tier: cold + 2 warm, MIN of the warm pair (noise
     * only inflates; the full-suite tiers keep their median-of-3). */
   private def timeLong(spark: SparkSession, name: String, dir: String): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once()
-    math.min(once(), once())
+    once(spark, name, dir)
+    math.min(once(spark, name, dir), once(spark, name, dir))
   }
 
   private def graph100(spark: SparkSession, tenXDir: String, out: String): Unit = {
@@ -402,14 +389,7 @@ object Scale {
     buildGraphReplica(spark, "/root/testdata/sf0.1", out)
     val dirs = Seq("sf0.1" -> "/root/testdata/sf0.1",
       "10x" -> tenXDir, "100x" -> out)
-    for (q <- GraphQueriesTimed) {
-      val ts = dirs.map { case (label, d) => label -> timeLong(spark, q, d) }
-      val m = ts.toMap
-      val e1 = math.log10(m("10x") / m("sf0.1"))
-      val e2 = math.log10(m("100x") / m("10x"))
-      println(f"$q%-24s " + ts.map { case (l, t) => f"$l=$t%.3fs" }.mkString(" ") +
-        f"  exp(0.1->10x)=$e1%.2f exp(10x->100x)=$e2%.2f")
-    }
+    decades(GraphQueriesTimed, dirs, Seq("0.1->10x", "10x->100x"))(timeLong(spark, _, _))
     // the broadcast→shuffle switch, observed: hinted BroadcastHashJoin
     // count in the initial plan drops when nodes cross the 1M threshold
     for ((label, d) <- Seq("10x" -> tenXDir, "100x" -> out)) {
@@ -421,14 +401,21 @@ object Scale {
     }
   }
 
-  private def time(spark: SparkSession, name: String, dir: String): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
+  /** Times each query at each (label, dir) decade and prints one line:
+    * the times, then the scaling exponent between consecutive decades
+    * (slope of log t vs log n, one decade apart), named by `expLabels`. */
+  private def decades(queries: Seq[String], dirs: Seq[(String, String)],
+      expLabels: Seq[String])(timer: (String, String) => Double): Unit =
+    for (q <- queries) {
+      val ts = dirs.map { case (label, d) => label -> timer(q, d) }
+      val exps = ts.map(_._2).sliding(2).map(p => math.log10(p(1) / p(0)))
+      println(f"$q%-24s " + ts.map { case (l, t) => f"$l=$t%.3fs" }.mkString(" ") + "  " +
+        expLabels.zip(exps.toSeq).map { case (l, e) => f"exp($l)=$e%.2f" }.mkString(" "))
     }
-    once() // cold: codegen + plan cache
-    Seq.fill(3)(once()).sorted.apply(1) // median of 3 warm
+
+  private def time(spark: SparkSession, name: String, dir: String): Double = {
+    once(spark, name, dir) // cold: codegen + plan cache
+    Seq.fill(3)(once(spark, name, dir)).sorted.apply(1) // median of 3 warm
   }
 
   // ------------------------------------------------------------ compaction
@@ -454,64 +441,33 @@ object Scale {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("compaction")) {
-      val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      compaction(spark, args.drop(1).headOption.getOrElse("/root/testdata/sf0.1"))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("dedup100")) {
-      val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      spark.range(1000).write.mode("overwrite").format("noop").save()
-      dedup100(spark,
-        args.drop(1).headOption.getOrElse("/tmp/graft_dedup10"),
-        args.drop(2).headOption.getOrElse("/tmp/graft_dedup100"))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("graph100build")) {
-      // replica build only (no timed sweep): the oracle-gate recipe needs
-      // just the directory (verify skill: Verify + check_oracle --subset)
-      val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      buildGraphReplica(spark, "/root/testdata/sf0.1",
-        args.drop(1).headOption.getOrElse("/tmp/graft_graph100"))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("graph100")) {
-      val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      spark.range(1000).write.mode("overwrite").format("noop").save()
-      graph100(spark,
-        args.drop(1).headOption.getOrElse("/tmp/graft_sf10x"),
-        args.drop(2).headOption.getOrElse("/tmp/graft_graph100"))
-      spark.stop()
-      return
-    }
-    val out = args.headOption.getOrElse("/tmp/graft_sf10x")
-    // optional 2nd arg (builder-side iteration): comma-separated subset
-    // of Queries to time instead of the full measured set
-    val only = args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).write.mode("overwrite").format("noop").save()
-    buildReplica(spark, "/root/testdata/sf0.1", out)
-
-    val dirs = Seq("sf0.01" -> "/root/testdata/sf0.01",
-      "sf0.1" -> "/root/testdata/sf0.1", "sf1x(10x0.1)" -> out)
-    val rows = Queries.filter(q => only.forall(_.contains(q))).map { q =>
-      q -> dirs.map { case (label, d) => label -> time(spark, q, d) }
-    }
-    rows.foreach { case (q, ts) =>
-      val m = ts.toMap
-      val e1 = math.log10(m("sf0.1") / m("sf0.01"))          // 0.01 -> 0.1
-      val e2 = math.log10(m("sf1x(10x0.1)") / m("sf0.1"))    // 0.1 -> 1x replica
-      println(f"$q%-24s " + ts.map { case (l, t) => f"$l=$t%.3fs" }.mkString(" ") +
-        f"  exp(0.01->0.1)=$e1%.2f exp(0.1->10x)=$e2%.2f")
-    }
-    spark.stop()
+    val spark = GraftSession.harness()
+    try args.headOption match {
+      case Some("compaction") =>
+        compaction(spark, args.drop(1).headOption.getOrElse("/root/testdata/sf0.1"))
+      case Some("dedup100") =>
+        dedup100(spark,
+          args.drop(1).headOption.getOrElse("/tmp/graft_dedup10"),
+          args.drop(2).headOption.getOrElse("/tmp/graft_dedup100"))
+      case Some("graph100build") =>
+        // replica build only (no timed sweep): the oracle-gate recipe needs
+        // just the directory (verify skill: Verify + check_oracle --subset)
+        buildGraphReplica(spark, "/root/testdata/sf0.1",
+          args.drop(1).headOption.getOrElse("/tmp/graft_graph100"))
+      case Some("graph100") =>
+        graph100(spark,
+          args.drop(1).headOption.getOrElse("/tmp/graft_sf10x"),
+          args.drop(2).headOption.getOrElse("/tmp/graft_graph100"))
+      case _ =>
+        val out = args.headOption.getOrElse("/tmp/graft_sf10x")
+        // optional 2nd arg (builder-side iteration): comma-separated subset
+        // of Queries to time instead of the full measured set
+        val only = args.drop(1).headOption.map(_.split(",").toSet)
+        buildReplica(spark, "/root/testdata/sf0.1", out)
+        val dirs = Seq("sf0.01" -> "/root/testdata/sf0.01",
+          "sf0.1" -> "/root/testdata/sf0.1", "sf1x(10x0.1)" -> out)
+        decades(Queries.filter(q => only.forall(_.contains(q))), dirs,
+          Seq("0.01->0.1", "0.1->10x"))(time(spark, _, _))
+    } finally spark.stop()
   }
 }

@@ -66,39 +66,20 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q51 dispatch runs zero extra Spark jobs once the window count is memoized") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    // listener delivery is async: wait until the count is stable
-    def settledJobs(): Int = {
-      var prev = -1; var cur = jobs.get(); var spins = 0
-      while (cur != prev && spins < 50) { prev = cur; Thread.sleep(100); cur = jobs.get(); spins += 1 }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def buildDelta(): Int = {
-        val before = settledJobs()
-        graft.SparkEntry.queries("q51_range_join")(spark, Sf0001)
-        settledJobs() - before
-      }
-      buildDelta() // warm-up: schema inference / memoization both settle
-      // steady state: two warm builds launch the same (baseline) jobs —
-      // the r12 verdict's per-invocation extra count pass is gone
-      val warm1 = buildDelta()
-      val warm2 = buildDelta()
-      assert(warm1 == warm2, s"warm builds not steady: $warm1 vs $warm2")
-      // forgetting the memo brings back the count action (AQE runs a
-      // count as ≥2 jobs — one per query stage — so assert presence,
-      // not an exact job count)
-      RelationalQueries.q51InvalidateWindowCounts()
-      val cold = buildDelta()
-      assert(cold > warm1,
-        s"cold dispatch should add the count job(s): warm=$warm1 cold=$cold")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def buildJobs(): Int = jobsDuring(graft.SparkEntry.queries("q51_range_join")(spark, Sf0001))
+    buildJobs() // warm-up: schema inference / memoization both settle
+    // steady state: two warm builds launch the same (baseline) jobs —
+    // the r12 verdict's per-invocation extra count pass is gone
+    val warm1 = buildJobs()
+    val warm2 = buildJobs()
+    assert(warm1 == warm2, s"warm builds not steady: $warm1 vs $warm2")
+    // forgetting the memo brings back the count action (AQE runs a
+    // count as ≥2 jobs — one per query stage — so assert presence,
+    // not an exact job count)
+    RelationalQueries.q51InvalidateWindowCounts()
+    val cold = buildJobs()
+    assert(cold > warm1,
+      s"cold dispatch should add the count job(s): warm=$warm1 cold=$cold")
   }
 
   test("q48 identifier fold plans broadcast for the warn dimension (no extra shuffle on the probe side)") {
