@@ -56,7 +56,9 @@ import graft.metrics.Ledger
   * [[Ledger]]; `"jobs"` and `"shuffle_bytes"` (bytes written to shuffle)
   * are those of the first successful warm run — the run `graft.Profile`
   * prints. `"cpus"` stamps the core count, so a low-core capture
-  * describes itself.
+  * describes itself. `"compiles"` (last) counts the classes Spark's code
+  * generator compiled during that warm run: 0 when its plans hit the
+  * generated-class cache.
   */
 object Bench {
   /** A warm median this many × its quiet floor is contention-suspect … */
@@ -91,7 +93,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_REPS", "12").toInt)
 
     final case class QStat(first: Double, warmMedian: Double, spread: Double, warmReps: Int,
-        jobs: Int = -1, shuffleBytes: Long = -1L)
+        jobs: Int = -1, shuffleBytes: Long = -1L, compiles: Long = -1L)
     /** the interquartile runs: drop the outer quarter from each end once
       * ≥4 reps exist (a raw max−min can never shrink by re-running) */
     def iqSpread(xs: Seq[Double]): Double = {
@@ -142,7 +144,7 @@ object Bench {
           // median with spread 0 would fake both the number and its stability
           if (warm.isEmpty) QStat(first, -1.0, -1.0, 0)
           else QStat(first, median(walls), iqSpread(walls), warm.length,
-            warm.head.jobs.size, warm.head.shuffleWriteBytes)
+            warm.head.jobs.size, warm.head.shuffleWriteBytes, warm.head.compiles)
         } catch {
           case e: Throwable => recordErr(name, e); QStat(-1.0, -1.0, -1.0, 0)
         }
@@ -268,7 +270,8 @@ object Bench {
         s""""inflated":$inflatedJson,"inflation_passes":$passesRun,"machine_factor":$machineFactorJson,""" +
         s""""floor_ratio":${ratioJson(converged)},""" +
         s""""first_total":${tot(_.first)},"reps":$reps,"errors":$errJson,"sf":${Verify.q(sfDir)},""" +
-        s""""jobs":${obj(_.jobs)},"shuffle_bytes":${obj(_.shuffleBytes)},"cpus":$cpus}"""
+        s""""jobs":${obj(_.jobs)},"shuffle_bytes":${obj(_.shuffleBytes)},"cpus":$cpus,""" +
+        s""""compiles":${obj(_.compiles)}}"""
     // the full JSON is also persisted to a file the archive picks up
     // whole (committed per round as BENCH_full.json)
     val out = java.nio.file.Paths.get(

@@ -9,6 +9,16 @@ import org.apache.spark.sql.SparkSession
   * the 200 default), AQE on (runtime coalescing + skew-join splitting),
   * UTC session time zone for oracle parity, micros parquet timestamps so
   * downstream readers (DuckDB/pyarrow) see the same instants.
+  *
+  * Spark's generated-class cache holds 1024 classes instead of 100. The
+  * cache is LRU, so a working set that cycles through more classes than it
+  * holds misses on every access and every warm round recompiles. Measured
+  * working sets: the `query_mix` workload's five queries use 317–340
+  * distinct classes; an `ingest_trickle` insert and reparse round about
+  * 190, and its failure paths about 75 more. 1024 holds both in one JVM.
+  * The cache is a static of the JVM, sized from the active session's
+  * conf when Spark first generates code: the value holds when this
+  * builder's session is the first in the JVM to run a query.
   */
 object GraftSession {
 
@@ -43,6 +53,9 @@ object GraftSession {
       // there is nothing to reschedule onto, so wait the stall out.
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "60s")
+      // every cache miss is a Janino compile: hold the engine's working
+      // set (see the scaladoc above)
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
 
   /** The harnesses' core count: `SPARK_GRAFT_CPUS`, default 32. */
   def harnessCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

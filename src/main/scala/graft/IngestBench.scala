@@ -24,9 +24,11 @@ import graft.streaming.IngestStream
   *     frame-forcing null sink (asset bytes still copied) — the delta
   *     names how much of the wall is the store MERGE vs the pipeline.
   *
-  * After the full run it prints one `[ingest-bench]` line per call site
-  * (jobs and job-seconds, from a [[Ledger]]), then one BENCH-style JSON
-  * line: {"metric":"ingest_docs_per_sec","value":...,"docs":N,
+  * After the full run it prints one `[ingest-bench] <site>` line per call
+  * site (jobs and job-seconds, from a [[Ledger]]) and, per timed run, an
+  * `[ingest-bench] compiles` line (the generated classes it compiled,
+  * [[Ledger.timed]]), then one BENCH-style JSON line:
+  * {"metric":"ingest_docs_per_sec","value":...,"docs":N,
   * "full_sec":...,"null_store_sec":...,"bottleneck":"..."}.
   *
   * Usage: `IngestBench [n]`, `IngestBench n concurrent [streams]
@@ -96,9 +98,13 @@ object IngestBench {
       packageUri = (b: String, key: String) => s"file:$bucketStr/$b/$key")
   }
 
-  private def timedRun(spark: SparkSession, eventsDir: String, store: DocumentStore,
-      bucketStr: String): Double =
-    Ledger.seconds(startStream(spark, eventsDir, store, bucketStr).awaitTermination())
+  /** Wall seconds of one stream run, after printing the classes it
+    * compiled under `run`. */
+  private def timedRun(run: String)(body: => Unit): Double = {
+    val (sec, compiles) = Ledger.timed(body)
+    println(f"[ingest-bench] compiles $run%-35s $compiles%5d generated classes")
+    sec
+  }
 
   /** A fresh file: bucket with the `b/k/` prefix the messages point at. */
   private def bucket(): String = {
@@ -162,7 +168,7 @@ object IngestBench {
       Files.createTempDirectory(s"graft-ingest-bench-shard$i").toString))
     val servers = inners.map(new DocStoreServer(_))
     try {
-      val sec = Ledger.seconds {
+      val sec = timedRun(s"wire x$shards") {
         val qs = dirs.map { d =>
           val store =
             if (shards == 1) HttpStore(spark, servers.head.endpoint)
@@ -209,13 +215,16 @@ object IngestBench {
         val inner = LocalStore(spark,
           Files.createTempDirectory("graft-ingest-bench-store").toString)
         ledger.drain() // the staging jobs
-        val fullSec = timedRun(spark, eventsDir, inner, bucketStr)
+        val fullSec = timedRun("full")(
+          startStream(spark, eventsDir, inner, bucketStr).awaitTermination())
         printSites(ledger.drain())
         val docs = inner.documents.count()
         require(docs == n.toLong, s"expected $n documents, got $docs")
 
-        val nullSec = timedRun(spark, eventsDir, new NullStore(spark,
-          Files.createTempDirectory("graft-ingest-bench-null-assets").toString), bucketStr)
+        val nullStore = new NullStore(spark,
+          Files.createTempDirectory("graft-ingest-bench-null-assets").toString)
+        val nullSec = timedRun("null_store")(
+          startStream(spark, eventsDir, nullStore, bucketStr).awaitTermination())
 
         val rate = n / fullSec
         val mergeShare = (fullSec - nullSec) / fullSec

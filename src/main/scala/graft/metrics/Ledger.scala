@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
@@ -76,11 +77,12 @@ final class Ledger(spark: SparkSession) extends SparkListener with AutoCloseable
     synchronized { val out = done.toList; done.clear(); out }
   }
 
-  /** Wall seconds of `body` and the records of the jobs it started
-    * (drained, so they leave the ledger). */
+  /** Wall seconds of `body`, the records of the jobs it started
+    * (drained, so they leave the ledger) and the classes compiled while
+    * it ran. */
   def measure(tag: String)(body: => Unit): Ledger.Run = {
-    val wall = Ledger.seconds(tagged(tag)(body))
-    Ledger.Run(wall, drain().filter(_.tag == tag))
+    val (wall, compiles) = Ledger.timed(tagged(tag)(body))
+    Ledger.Run(wall, drain().filter(_.tag == tag), compiles)
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -121,8 +123,10 @@ object Ledger {
   /** The local property [[Ledger.tagged]] sets. */
   val TagKey = "graft.ledger.tag"
 
-  /** A measured body: its wall seconds and its jobs. */
-  final case class Run(wall: Double, jobs: Seq[JobRecord]) {
+  /** A measured body: its wall seconds, its jobs, and the classes Spark's
+    * code generator compiled while it ran (0 when every plan it ran hit
+    * the generated-class cache). */
+  final case class Run(wall: Double, jobs: Seq[JobRecord], compiles: Long) {
     def shuffleWriteBytes: Long = jobs.map(_.shuffleWriteBytes).sum
   }
 
@@ -131,6 +135,17 @@ object Ledger {
     val t0 = System.nanoTime()
     body
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Wall seconds of `body` and the classes Spark's code generator
+    * compiled while it ran: a generated-class cache miss compiles one, a
+    * hit none. The count is the JVM's, so it includes whatever else
+    * compiles concurrently. */
+  def timed(body: => Unit): (Double, Long) = {
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = compiled
+    val wall = seconds(body)
+    (wall, compiled - before)
   }
 
   /** Materializes every row and column of `df` through the noop sink (a

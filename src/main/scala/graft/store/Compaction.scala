@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.metrics.Ledger
 import graft.sql.RelationalQueries
 
 /** EXECUTES q148's compaction manifest — the OPTIMIZE job the plan card
@@ -71,9 +72,7 @@ object Compaction {
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
       .toVector
     val bytes = parts.map(Files.size).sum
-    val t0 = System.nanoTime()
-    spark.read.parquet(dir).count()
-    val secs = (System.nanoTime() - t0) / 1e9
+    val secs = Ledger.seconds(spark.read.parquet(dir).count())
     (parts.size.toLong, bytes, secs)
   }
 
