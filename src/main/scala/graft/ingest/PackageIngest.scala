@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.model.IngestError
 import graft.store.DocumentStore
-import graft.tar.{TarMember, TarOps}
+import graft.tar.{PackageTooLargeException, TarMember, TarOps}
 import graft.metrics.Observe
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,12 +14,12 @@ import org.apache.spark.sql.functions._
   * EXACTLY one of `archive` (in-memory bytes — the common path) or
   * `archive_path` (an executor-local spill file for archives above the
   * streaming fetch's in-memory threshold — the reference's save-to-/tmp
-  * analogue, `messages.py:59-69`) is set. Spilled packages flow through
-  * the same gather/act phases via single-walk streaming member lookups
-  * ([[graft.tar.TarOps.streamFind]]/[[graft.tar.TarOps.streamLookup]]),
-  * so heap per package is bounded by its EXTRACTED members, never the
-  * archive. The path is only meaningful on the executor that fetched it;
-  * [[graft.streaming.IngestStream]] documents the locality contract. */
+  * analogue, `messages.py:59-69`) is set. Both flow through the same
+  * gather/act phases and the same bounded member walk
+  * ([[graft.tar.MemberReader]]); a spilled archive is never on heap, only
+  * the members its walks keep. The path is only meaningful on the
+  * executor that fetched it; [[graft.streaming.IngestStream]] documents
+  * the locality contract. */
 final case class RawPackage(
     consignment_ref: String,
     originator: String,
@@ -44,12 +44,12 @@ final case class GatheredPackage(
     error: String)
 
 /** The full gather phase (SURVEY.md O1 = S5–S9 + P2/P6/P8) over real
-  * archive bytes: each package is exploded ONCE in a JVM kernel (member
-  * lookups per `file_helpers.py:24-33,76-115`), then the typed decisions
-  * — metadata decode, best-XML fallback, doc-type classify, facet
-  * projection — run as columns. Narrow end to end: at 100 TB the archive
-  * scan never shuffles; only the small gathered projection moves on to
-  * resolution and the act phase.
+  * archive bytes: each package is read by bounded walks in a JVM kernel
+  * (member lookups per `file_helpers.py:24-33,76-115`), then the typed
+  * decisions — metadata decode, best-XML fallback, doc-type classify,
+  * facet projection — run as columns. Narrow end to end: at 100 TB the
+  * archive scan never shuffles; only the small gathered projection moves
+  * on to resolution and the act phase.
   *
   * `PackageIngestSpec` drives the reference's golden packages through
   * this end-to-end (the `tests/test_handler.py` equivalent, with
@@ -57,95 +57,81 @@ final case class GatheredPackage(
   */
 object PackageIngest {
 
-  /** JVM-side gather kernel for one package — SINGLE-PASS: explode once,
-    * look up the metadata / xml / parser.log members, record docx
-    * presence (the missing-key-vs-null distinction of
-    * `file_helpers.py:118-124`), AND park the asset members the act
-    * phase's byte-copy pass will need ([[graft.tar.MemberCache]], keyed
-    * by [[RawPackage.digest]]) so the archive is decompressed exactly
-    * once per package — the reference re-walks the tar per lookup
-    * (`file_helpers.py:27,79,87`); pre-kernel this engine exploded once
-    * for gather and once more for the asset copies.
+  /** JVM-side gather kernel for one package: look up the metadata / xml
+    * / parser.log members, record docx presence (the missing-key-vs-null
+    * distinction of `file_helpers.py:118-124`), AND park the asset members
+    * the act phase's byte-copy pass will need ([[graft.tar.MemberCache]],
+    * keyed by [[RawPackage.digest]]) — the reference re-walks the tar per
+    * lookup instead (`file_helpers.py:27,79,87`).
     *
-    * Spilled packages ([[RawPackage.archive_path]]) run the same
-    * decisions off TWO streaming walks of local disk (names +
-    * metadata/parser.log, then one combined walk for the metadata-named
-    * XML member AND the asset members), so a multi-GiB archive costs
-    * heap only for those members — and the asset pass no longer re-walks
-    * the spill file per member. */
+    * One code path; its only fork is what the first walk keeps. An
+    * in-memory archive keeps every member, so it is decompressed once. A
+    * spilled archive ([[RawPackage.archive_path]]) keeps metadata and
+    * parser.log, then a second walk keeps the members the metadata-named
+    * XML and the asset needles can match, so heap holds those members and
+    * never the archive. A walk past [[graft.tar.TarOps]]' bounds fails
+    * the package terminally as `PackageTooLargeException`. */
   def gather(p: RawPackage): GatheredPackage = {
-    def failed(err: String) = GatheredPackage(p.consignment_ref, p.originator,
-      p.tar_name, null, null, null, null, null,
-      source_filename_present = false, Seq.empty, err)
+    def failed(err: String, names: Seq[String] = Seq.empty) = GatheredPackage(
+      p.consignment_ref, p.originator, p.tar_name, null, null, null, null, null,
+      source_filename_present = false, names, err)
     def text(m: TarMember) = new String(m.bytes, UTF_8)
-
-    // walk 1 (in-memory: the ONLY walk): names + metadata + parser.log;
-    // the xml/asset lookup runs from the exploded list (in-memory) or a
-    // second combined streaming walk (spilled), once metadata names them
-    val gathered: (Seq[String], Option[String], Option[String],
-        (Option[String], Seq[String]) => (Option[String], Map[String, Array[Byte]])) =
-      try {
-        if (p.archive_path != null) {
-          def open() = new java.io.FileInputStream(p.archive_path)
-          val (ns, found) = TarOps.streamFind(open _, Seq("-metadata.json", "parser.log"))
-          (ns, found.get("-metadata.json").map(text), found.get("parser.log").map(text),
-            (xmlName: Option[String], assetNeedles: Seq[String]) => {
-              val (byContains, byExact) =
-                TarOps.streamResolve(open _, xmlName.toSeq, assetNeedles)
-              (xmlName.flatMap(byContains.get).map(text),
-                byExact.map { case (nd, m) => nd -> m.bytes })
-            })
-        } else {
-          val members = TarOps.explode(p.archive)
-          (members.map(_.name),
-            TarOps.findMember(members, "-metadata.json").map(text),
-            TarOps.findMember(members, "parser.log").map(text),
-            (xmlName: Option[String], assetNeedles: Seq[String]) =>
-              (xmlName.flatMap(n => TarOps.findMember(members, n)).map(text),
-                assetNeedles.flatMap(nd =>
-                  resolveAsset(members, nd).map(m => nd -> m.bytes)).toMap))
-        }
-      } catch {
-        case e: Exception =>
-          return failed(s"InvalidXMLException: unreadable archive: ${e.getMessage}")
+    // the act phase copies the tarball to `<assetRoot>/<uri>/<tar_name>`,
+    // and a V2 message's reference names it verbatim: a name that could
+    // leave that directory fails the package like an unsafe image name
+    if (!safeAssetName(p.tar_name)) return failed(IngestError.UnsafeAssetName.name)
+    val spilled = p.archive_path != null
+    def walk(keep: String => Boolean): Either[String, (Seq[String], Seq[TarMember])] =
+      try Right(walkArchive(p.archive, p.archive_path)(keep))
+      catch {
+        case _: PackageTooLargeException => Left(IngestError.PackageTooLarge.name)
+        case e: Exception => Left(s"InvalidXMLException: unreadable archive: ${e.getMessage}")
       }
-    val (names, metadataJsonOpt, parserLogOpt, resolve) = gathered
 
-    metadataJsonOpt match {
-      case None => failed("FileNotFoundException: metadata file not found").copy(member_names = names)
-      case Some(metadataJson) =>
-        val xmlName = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "xml")).flatten
-        val fname = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "filename"))
-        val images = jsonArray(metadataJson, Seq("parameters", "TRE", "payload", "images"))
-        // each image name becomes the asset destination
-        // `<assetRoot>/<uri>/<name>` in the act phase, where Hadoop `Path`
-        // resolves `..`: a name that could leave that directory fails the
-        // package here, before any member is resolved or byte written
-        if (!images.forall(safeAssetName))
-          return failed(IngestError.UnsafeAssetName.name).copy(member_names = names)
-        // the asset plan's src_member needles, derived HERE exactly as the
-        // act phase derives them (original_ref prefix — the tar's internal
-        // folder predates the S4 rewrite): parser.log, the source doc, and
-        // each image. Parked under the package digest for the byte-copy
-        // pass; a cache miss there falls back to re-exploding, so this is
-        // purely the fast path.
-        val assetNeedles: Seq[String] =
-          if (p.digest == null) Seq.empty
-          else Seq(s"${p.consignment_ref}/parser.log") ++
-            fname.flatten.map(f => s"${p.consignment_ref}/$f") ++
-            images.map(i => s"${p.consignment_ref}/$i")
-        val (xmlContent, assetMembers) = resolve(xmlName, assetNeedles)
-        if (p.digest != null) graft.tar.MemberCache.put(p.digest, assetMembers)
-        GatheredPackage(
-          p.consignment_ref, p.originator, p.tar_name,
-          metadataJson,
-          xmlName.orNull,
-          xmlContent.orNull,
-          parserLogOpt.orNull,
-          fname.flatten.orNull,
-          source_filename_present = fname.isDefined,
-          names, null)
+    val (names, first) =
+      walk(n => !spilled || n.contains("-metadata.json") || n.contains("parser.log")) match {
+        case Left(err) => return failed(err)
+        case Right(walked) => walked
+      }
+    val metadataJson = TarOps.findMember(first, "-metadata.json") match {
+      case None => return failed("FileNotFoundException: metadata file not found", names)
+      case Some(m) => text(m)
     }
+    val xmlName = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "xml")).flatten
+    val fname = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "filename"))
+    val images = jsonArray(metadataJson, Seq("parameters", "TRE", "payload", "images"))
+    // each image name becomes the asset destination
+    // `<assetRoot>/<uri>/<name>` in the act phase, where Hadoop `Path`
+    // resolves `..`: a name that could leave that directory fails the
+    // package here, before any member is resolved or byte written
+    if (!images.forall(safeAssetName)) return failed(IngestError.UnsafeAssetName.name, names)
+    // the asset plan's src_member needles, derived HERE exactly as the
+    // act phase derives them (original_ref prefix — the tar's internal
+    // folder predates the S4 rewrite): parser.log, the source doc, and
+    // each image. Parked under the package digest for the byte-copy pass.
+    val assetNeedles: Seq[String] =
+      if (p.digest == null) Seq.empty
+      else Seq(s"${p.consignment_ref}/parser.log") ++
+        fname.flatten.map(f => s"${p.consignment_ref}/$f") ++
+        images.map(i => s"${p.consignment_ref}/$i")
+    val needles = (xmlName.toSeq ++ assetNeedles).filter(_.nonEmpty)
+    val members =
+      if (!spilled || needles.isEmpty) first
+      else walk(n => needles.exists(nd => n.contains(nd))) match {
+        case Left(err) => return failed(err, names)
+        case Right((_, kept)) => kept
+      }
+    if (p.digest != null) graft.tar.MemberCache.put(p.digest,
+      assetNeedles.flatMap(nd => resolveAsset(members, nd).map(m => nd -> m.bytes)).toMap)
+    GatheredPackage(
+      p.consignment_ref, p.originator, p.tar_name,
+      metadataJson,
+      xmlName.orNull,
+      xmlName.flatMap(TarOps.findMember(members, _)).map(text).orNull,
+      TarOps.findMember(first, "parser.log").map(text).orNull,
+      fname.flatten.orNull,
+      source_filename_present = fname.isDefined,
+      names, null)
   }
 
   /** A package-supplied asset name that stays strictly inside its
@@ -157,9 +143,15 @@ object PackageIngest {
 
   /** The asset pass's member lookup contract: exact name first, then the
     * reference's last-substring match — shared by the gather-side cache
-    * population and the byte-copy fallback so they can never diverge. */
+    * population and the byte-copy miss path so they can never diverge. */
   private def resolveAsset(members: Seq[TarMember], needle: String): Option[TarMember] =
     members.find(_.name == needle).orElse(TarOps.findMember(members, needle))
+
+  /** One bounded walk ([[graft.tar.TarOps.select]]) of a package's archive,
+    * in memory or spilled. */
+  private def walkArchive(archive: Array[Byte], path: String)(keep: String => Boolean) =
+    if (path != null) TarOps.select(new java.io.FileInputStream(path), new java.io.File(path).length)(keep)
+    else TarOps.select(new java.io.ByteArrayInputStream(archive), archive.length)(keep)
 
   /** Streamed md5 of an executor-local spill file — the spilled analogue
     * of `md5(archive)` for the duplicate-delivery winner key. A Scala UDF
@@ -563,13 +555,14 @@ object PackageIngest {
     * `ingester.py:361-418` `save_files_to_s3`). The small plan is
     * BROADCAST to the executors holding the packages, so archive bytes
     * never shuffle — one extra narrow pass over the `binaryFile` scan.
-    * Each package's asset rows come out of the broadcast join
-    * consecutively, so a one-deep member cache explodes each tar once.
     *
-    * A null `src_member` copies the whole archive (the tarball row); a
-    * member row resolves exact-name first, then the reference's
-    * substring match (`tarfile.extractfile` is exact;
-    * [[graft.tar.TarOps.findMember]] mirrors the lookup helpers).
+    * A null `src_member` copies the whole archive (the tarball row). A
+    * member row takes the bytes gather parked in [[graft.tar.MemberCache]];
+    * only a cache miss walks the archive again, keeping the members whose
+    * name contains the needle, and resolves through the same contract as
+    * gather (exact name first, then the reference's substring match —
+    * `tarfile.extractfile` is exact; [[graft.tar.TarOps.findMember]]
+    * mirrors the lookup helpers).
     * parser.log rows only exist when the member does (the plan's filter =
     * the reference's `suppress(FileNotFoundException)`); a source/image
     * row whose member vanished is skipped rather than raising — the
@@ -593,8 +586,6 @@ object PackageIngest {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     joined.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      var cachedKey: String = null
-      var cachedMembers: Seq[TarMember] = null
       var sweptParent: String = null
       var prevDigest: String = null
       rows.foreach { r =>
@@ -617,25 +608,11 @@ object PackageIngest {
               try in.transferTo(out) finally in.close()
             }
           case null => Some(out => out.write(archive))
-          // member rows consult the gather walk's parked members first
-          // (content-addressed — see MemberCache): the common path never
-          // re-opens the archive. A member absent from a parked entry
-          // falls through to the archive walk below, so the handoff can
-          // only ever be a fast path, never a behavior change.
-          case m if digest != null &&
-              graft.tar.MemberCache.get(digest).exists(_.contains(m)) =>
-            graft.tar.MemberCache.get(digest).flatMap(_.get(m))
-              .map(bytes => (out: java.io.OutputStream) => out.write(bytes))
-          case m if spillPath != null =>
-            // member lookup = one streaming walk of the local spill file;
-            // members are small against the archive, so no cache needed
-            TarOps.streamLookup(() => new java.io.FileInputStream(spillPath), m)
-              .map(b => (out: java.io.OutputStream) => out.write(b))
           case m =>
-            val key = r.getAs[String]("consignment_ref") + "\\u0000" + r.getAs[String]("tar_name")
-            if (cachedKey != key) { cachedMembers = TarOps.explode(archive); cachedKey = key }
-            cachedMembers.find(_.name == m).orElse(TarOps.findMember(cachedMembers, m))
-              .map(mm => (out: java.io.OutputStream) => out.write(mm.bytes))
+            Option(digest).flatMap(graft.tar.MemberCache.get).flatMap(_.get(m))
+              .orElse(resolveAsset(
+                walkArchive(archive, spillPath)(_.contains(m))._2, m).map(_.bytes))
+              .map(bytes => (out: java.io.OutputStream) => out.write(bytes))
         }
         payload.foreach { writeTo =>
           val dest = new org.apache.hadoop.fs.Path(

@@ -24,6 +24,9 @@ object IngestError {
   case object CannotPublish extends IngestError("CannotPublishException", terminal = true)
   /** An image name in the package metadata would leave the asset directory. */
   case object UnsafeAssetName extends IngestError("UnsafeAssetNameException", terminal = true)
+  /** A package past the tar walk's member-count or declared-bytes bound
+    * ([[graft.tar.TarOps]]). */
+  case object PackageTooLarge extends IngestError("PackageTooLargeException", terminal = true)
   /** Unknown originator etc. — the reference raises bare RuntimeError. */
   case object Runtime extends IngestError("RuntimeError", terminal = true)
   /** Anything unrecognized: assume transient → retryable. */
@@ -33,7 +36,7 @@ object IngestError {
     S3HTTPError, MaximumRetriesExceeded, InvalidXML, InvalidMessage,
     ErrorLogWouldOverwritePublishedDocument, FileNotFound, DocxFilenameNotFound,
     DocumentInsertion, MultipleResolutionsFound, DocumentXMLNotYetInDatabase,
-    CannotPublish, UnsafeAssetName, Runtime)
+    CannotPublish, UnsafeAssetName, PackageTooLarge, Runtime)
 
   def fromName(n: String): IngestError =
     all.find(_.name == n).getOrElse(Unknown(n))

@@ -4,7 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import graft.tar.TarOps
+import graft.tar.{MemberReader, TarOps}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -36,8 +36,8 @@ import org.apache.spark.util.SerializableConfiguration
   *     archive is never split (tar has no random access);
   *   - **column pruning** ([[SupportsPushDownRequiredColumns]]): a query
   *     that never touches `content` — membership listings, size audits —
-  *     never materializes member bytes; the reader lets
-  *     `getNextEntry` skip entry payloads instead of buffering them
+  *     never materializes member bytes; the reader's
+  *     [[graft.tar.MemberReader]] skips payloads it is not asked for
   *     (`PackageTableSpec` pins the pruned scan schema);
   *   - **filter pushdown** ([[SupportsPushDownFilters]]): `EqualTo`/`In`/
   *     `StringStartsWith` on the ARCHIVE-level columns `pkg_name`/
@@ -204,7 +204,7 @@ object PackageAgg {
 /** Pushed-aggregate scan: identical archive admission/partitioning to
   * [[PackageScan]], but each partition emits ONE pre-aggregated row from
   * the tar-header walk (payloads are never touched — sizes come from the
-  * headers `getNextEntry` already parses). */
+  * headers [[graft.tar.MemberReader]] already parses). */
 class PackageAggScan(path: String, groups: Seq[String], funcs: Seq[PackageAgg],
     pushed: Array[Filter], conf: SerializableConfiguration, committedOnly: Boolean)
     extends PackageScan(path, StructType(Seq()), pushed, conf, committedOnly) {
@@ -237,47 +237,32 @@ class PackageAggScan(path: String, groups: Seq[String], funcs: Seq[PackageAgg],
 class PackageAggReaderFactory(groups: Seq[String], funcs: Seq[PackageAgg],
     conf: SerializableConfiguration) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PackageAggReader(
-      partition.asInstanceOf[PackagePartition].uri, groups, funcs, conf)
+    new PackageAggReader(partition.asInstanceOf[PackagePartition], groups, funcs, conf)
 }
 
 /** Walks the archive's tar HEADERS once and emits the single
-  * pre-aggregated row; `getNextEntry` skips entry payloads, so the bytes
-  * read are headers + (for gzip) the inflate cost — no member payload is
-  * ever materialized. */
-class PackageAggReader(uri: String, groups: Seq[String], funcs: Seq[PackageAgg],
+  * pre-aggregated row; payloads are skipped, so the bytes read are
+  * headers + (for gzip) the inflate cost — no member payload is ever
+  * materialized. */
+class PackageAggReader(part: PackagePartition, groups: Seq[String], funcs: Seq[PackageAgg],
     conf: SerializableConfiguration) extends PartitionReader[InternalRow] {
   private var done = false
   private var row: InternalRow = _
 
   override def next(): Boolean = {
     if (done) return false
-    val p = new Path(uri)
+    val p = new Path(part.uri)
     val tarName = p.getName
     val pkgName = PackageScan.pkgOf(tarName)
-    val fsIn = p.getFileSystem(conf.value).open(p)
+    val members = new MemberReader(p.getFileSystem(conf.value).open(p), part.length)
     var count = 0L; var sum = 0L
     var min = Long.MaxValue; var max = Long.MinValue
-    try {
-      val buffered = new java.io.BufferedInputStream(fsIn)
-      buffered.mark(2)
-      val m0 = buffered.read(); val m1 = buffered.read()
-      buffered.reset()
-      val in: java.io.InputStream =
-        if (m0 == 0x1f && m1 == 0x8b) new java.util.zip.GZIPInputStream(buffered)
-        else buffered
-      val tar = new org.apache.commons.compress.archivers.tar.TarArchiveInputStream(in)
-      var entry = tar.getNextEntry
-      while (entry != null) {
-        if (entry.isFile) {
-          val sz = entry.getSize
-          count += 1; sum += sz
-          if (sz < min) min = sz
-          if (sz > max) max = sz
-        }
-        entry = tar.getNextEntry
-      }
-    } finally fsIn.close()
+    try while (members.next()) {
+      val sz = members.size
+      count += 1; sum += sz
+      if (sz < min) min = sz
+      if (sz > max) max = sz
+    } finally members.close()
     val groupVals: Seq[Any] = groups.map {
       case "pkg_name" => UTF8String.fromString(pkgName)
       case "tar_name" => UTF8String.fromString(tarName)
@@ -426,7 +411,7 @@ class PackageScan(path: String, required: StructType, pushed: Array[Filter],
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    admitted.map { case (uri, _) => PackagePartition(uri): InputPartition }
+    admitted.map { case (uri, length) => PackagePartition(uri, length): InputPartition }
 
   /** The read-side dual of the writer's `RequiresDistributionAndOrdering`:
     * data is physically clustered one-archive-per-partition, so when the
@@ -450,7 +435,7 @@ class PackageScan(path: String, required: StructType, pushed: Array[Filter],
     new PackageReaderFactory(required.fieldNames, conf)
 }
 
-case class PackagePartition(uri: String) extends InputPartition with HasPartitionKey {
+case class PackagePartition(uri: String, length: Long) extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(PackageScan.pkgOf(new Path(uri).getName))))
@@ -459,56 +444,40 @@ case class PackagePartition(uri: String) extends InputPartition with HasPartitio
 class PackageReaderFactory(fields: Array[String], conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PackageReader(partition.asInstanceOf[PackagePartition].uri, fields, conf)
+    new PackageReader(partition.asInstanceOf[PackagePartition], fields, conf)
 }
 
 /** Streams one archive's members DIRECTLY off the filesystem input —
   * the archive is never buffered whole. When `content` is not in the
-  * required columns, member payloads are never materialized either:
-  * `getNextEntry` advances past each entry's data, so a listing query
-  * moves tar headers across the wire and nothing else. */
-class PackageReader(uri: String, fields: Array[String], conf: SerializableConfiguration)
+  * required columns, member payloads are never materialized either: the
+  * walk skips past each entry's data, so a listing query moves tar
+  * headers across the wire and nothing else. */
+class PackageReader(part: PackagePartition, fields: Array[String], conf: SerializableConfiguration)
     extends PartitionReader[InternalRow] {
   private val needContent = fields.contains("content")
-  private val p = new Path(uri)
+  private val p = new Path(part.uri)
   private val tarName = p.getName
-  private val pkgName = tarName.takeWhile(_ != '.')
-  private val fsIn = p.getFileSystem(conf.value).open(p)
-  private val tar = {
-    val buffered = new java.io.BufferedInputStream(fsIn)
-    buffered.mark(2)
-    val m0 = buffered.read(); val m1 = buffered.read()
-    buffered.reset()
-    val in: java.io.InputStream =
-      if (m0 == 0x1f && m1 == 0x8b) new java.util.zip.GZIPInputStream(buffered)
-      else buffered
-    new org.apache.commons.compress.archivers.tar.TarArchiveInputStream(in)
-  }
-  private var current: (String, Long, Array[Byte]) = _
+  private val pkgName = PackageScan.pkgOf(tarName)
+  private val members = new MemberReader(p.getFileSystem(conf.value).open(p), part.length)
+  private var content: Array[Byte] = _
 
-  override def next(): Boolean = {
-    var entry = tar.getNextEntry
-    while (entry != null && !entry.isFile) entry = tar.getNextEntry
-    if (entry == null) false
-    else {
-      current = (entry.getName, entry.getSize,
-        if (needContent) tar.readAllBytes() else null)
-      true
-    }
+  override def next(): Boolean = members.next() && {
+    content = if (needContent) members.bytes() else null
+    true
   }
 
   override def get(): InternalRow = {
     val values = fields.map {
       case "pkg_name" => UTF8String.fromString(pkgName)
       case "tar_name" => UTF8String.fromString(tarName)
-      case "member" => UTF8String.fromString(current._1)
-      case "member_size" => java.lang.Long.valueOf(current._2)
-      case "content" => current._3
+      case "member" => UTF8String.fromString(members.name)
+      case "member_size" => java.lang.Long.valueOf(members.size)
+      case "content" => content
     }
     new GenericInternalRow(values.asInstanceOf[Array[Any]])
   }
 
-  override def close(): Unit = tar.close()
+  override def close(): Unit = members.close()
 }
 
 /** Tiny newline-delimited manifest of committed archive names. */

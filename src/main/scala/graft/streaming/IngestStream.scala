@@ -43,10 +43,12 @@ object IngestStream {
     * executor that fetched them. Archives at or under
     * [[MaxInMemoryFetchKey]] ride in `archive`; larger ones SPILL to an
     * executor-local temp file (`archive_path`) — the /tmp analogue — so
-    * per-package heap is bounded by the threshold, not the archive (a
-    * fleet of near-2 GiB packages on one executor no longer OOMs; the
-    * old hard >2 GiB failure is gone entirely). A null archive+path with
-    * a non-null `error` records a failed download (retryable — the
+    * a spilled archive never sits on heap, whatever its size. Downstream,
+    * heap per package holds the members gather's walks keep, and every
+    * walk is bounded by [[graft.tar.TarOps]]' declared-bytes budget and
+    * member cap: a package past them fails terminally instead of
+    * inflating. A null archive+path with a non-null `error` records a
+    * failed download (retryable — the
     * reference's botocore ClientError is an unexpected exception,
     * eligible for redelivery). */
   final case class Fetched(msg_id: String, consignment_ref: String,
@@ -177,7 +179,7 @@ object IngestStream {
     val nFetchFailed = fetchedCounts("n_failed")
 
     try {
-      // taxonomy routing stays codegen'd: IngestError.all is a 12-element
+      // taxonomy routing stays codegen'd: IngestError.all is a short
       // static list, so `isin` beats a Scala UDF here
       val terminalNames = IngestError.all.filter(_.terminal).map(_.name)
       def failureMetric(df: DataFrame, terminal: Column): DataFrame =

@@ -1,24 +1,21 @@
 package graft.tar
 
 /** Process-wide, content-addressed handoff of ASSET members from the
-  * gather walk to the asset byte-copy pass — the single-pass gather
-  * kernel's bridge. [[graft.ingest.PackageIngest.gather]] has every
-  * member in hand after its one explode (the reference walks the tar
-  * once per lookup instead — `file_helpers.py:27,79,87`); it parks the
-  * few members the asset plan will need (source doc, parser.log,
-  * images) here, keyed by the package's md5 digest and by the exact
-  * `src_member` needle the plan will carry, and the byte-copy pass
-  * consumes them without re-opening the archive.
+  * gather walk to the asset byte-copy pass. [[graft.ingest.PackageIngest.gather]]
+  * already holds the members the asset plan will need (source doc,
+  * parser.log, images) after its walk; it parks them here, keyed by the
+  * package's md5 digest and by the exact `src_member` needle the plan will
+  * carry, and the byte-copy pass consumes them without re-opening the
+  * archive.
   *
   * Strictly an OPTIMIZATION, never a correctness dependency:
   *
   *   - content-addressed (md5 of the archive bytes), so a stale or
   *     colliding entry is not a reachable state — redelivered different
   *     bytes have a different digest;
-  *   - bounded (LRU by total member bytes, default 1 GiB, tunable via
-  *     `-Dgraft.tar.memberCacheBytes=`), and the byte-copy pass falls
-  *     back to exploding the archive on any miss — which is exactly the
-  *     pre-kernel behavior;
+  *   - bounded (LRU by total member bytes, 1 GiB), and on any miss the
+  *     byte-copy pass takes the member from one selective walk of the
+  *     archive instead;
   *   - process-local: on a multi-executor cluster the gather task and
   *     the byte-copy task for one package usually share an executor
   *     (both schedule process-local to the package's checkpointed
@@ -29,9 +26,7 @@ package graft.tar
   * occupancy is in-flight packages, not the whole batch. */
 object MemberCache {
 
-  val BudgetProp = "graft.tar.memberCacheBytes"
-  private def budget: Long =
-    java.lang.Long.getLong(BudgetProp, 1L << 30).longValue()
+  private val Budget = 1L << 30
 
   private final case class Entry(map: Map[String, Array[Byte]], bytes: Long)
 
@@ -43,12 +38,12 @@ object MemberCache {
     * the budget is not cached at all (the miss path handles it). */
   def put(digest: String, map: Map[String, Array[Byte]]): Unit = synchronized {
     val bytes = map.valuesIterator.map(_.length.toLong).sum + 64L
-    if (bytes > budget) return
+    if (bytes > Budget) return
     val old = entries.put(digest, Entry(map, bytes))
     if (old != null) total -= old.bytes
     total += bytes
     val it = entries.entrySet().iterator()
-    while (total > budget && it.hasNext) {
+    while (total > Budget && it.hasNext) {
       val e = it.next()
       if (e.getKey != digest) { // never evict the entry just parked
         total -= e.getValue.bytes
@@ -65,9 +60,4 @@ object MemberCache {
     val old = entries.remove(digest)
     if (old != null) total -= old.bytes
   }
-
-  /** Test seams. */
-  private[graft] def clear(): Unit = synchronized { entries.clear(); total = 0L }
-  private[graft] def size: Int = synchronized(entries.size())
-  private[graft] def totalBytes: Long = synchronized(total)
 }

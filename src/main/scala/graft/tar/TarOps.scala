@@ -1,6 +1,6 @@
 package graft.tar
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPInputStream
 
@@ -17,19 +17,81 @@ import org.apache.commons.compress.compressors.gzip.{
 /** One member of an exploded archive. */
 final case class TarMember(name: String, size: Long, bytes: Array[Byte])
 
+/** A package crossed one of [[TarOps]]' bounds. Its bare class name is the
+  * terminal taxonomy entry [[graft.model.IngestError.PackageTooLarge]]. */
+final class PackageTooLargeException(message: String) extends java.io.IOException(message)
+
+/** Cursor over the regular members of one tar or tar.gz stream — the one
+  * walk every package reader shares (gather, the asset copy, the
+  * `graftpkg` source). [[next]] parses a header and checks
+  * [[TarOps]]' bounds before the member's payload is read or skipped;
+  * [[bytes]] reads the payload only when the caller asks, and a member
+  * never read is skipped by the next header parse. Closes `raw`. */
+final class MemberReader(raw: InputStream, archiveLength: Long) extends java.io.Closeable {
+  private val tar =
+    try new TarArchiveInputStream(TarOps.decompressed(raw))
+    catch { case e: Throwable => raw.close(); throw e }
+  private val budget = math.max(TarOps.MinDeclaredBytes, TarOps.BombRatio * archiveLength)
+  private var entries = 0
+  private var declared = 0L
+  private var entry: TarArchiveEntry = _
+
+  /** Advances to the next regular member; false past the last one. */
+  def next(): Boolean = {
+    do {
+      entry = tar.getNextEntry
+      if (entry != null) {
+        entries += 1
+        declared += entry.getSize
+        if (entries > TarOps.MaxMembers)
+          throw new PackageTooLargeException(s"more than ${TarOps.MaxMembers} members")
+        if (declared > budget)
+          throw new PackageTooLargeException(
+            s"members declare over $budget bytes (archive $archiveLength bytes) at ${entry.getName}")
+      }
+    } while (entry != null && !entry.isFile)
+    entry != null
+  }
+
+  def name: String = entry.getName
+  def size: Long = entry.getSize
+
+  /** The current member's payload. */
+  def bytes(): Array[Byte] = {
+    if (size > TarOps.MaxArrayBytes)
+      throw new PackageTooLargeException(s"member $name declares $size bytes")
+    val buf = new Array[Byte](size.toInt)
+    val n = tar.readNBytes(buf, 0, buf.length)
+    if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n)
+  }
+
+  override def close(): Unit = tar.close()
+}
+
 /** Tar(.gz) pack/explode primitives (SURVEY.md S5/S6).
   *
   * The reference opens packages record-at-a-time with Python `tarfile.open
   * (mode="r")` and rescans the member list for every lookup
   * (`/root/reference/src/ds_caselaw_ingester/file_helpers.py:27,79,87`).
-  * Here an archive is exploded ONCE into (member, bytes) rows inside the
-  * scan stage — a narrow per-row `flatMap`, so at 100 TB each package is
-  * decompressed exactly once on whichever executor holds its `binaryFile`
-  * split, and no shuffle ever carries archive bytes twice.
+  * Here every read is one [[MemberReader]] walk that keeps what the caller
+  * selects, and lookups run over the kept members through the two
+  * contracts: [[findMember]] (last substring match) and
+  * `PackageIngest.resolveAsset` (exact name first, then last substring
+  * match).
   *
-  * Like `tarfile.open(mode="r")`, [[explode]] auto-detects gzip vs plain
-  * tar by the 2-byte gzip magic (two of the reference's golden fixtures are
+  * Like `tarfile.open(mode="r")`, a walk auto-detects gzip vs plain tar by
+  * the 2-byte gzip magic (two of the reference's golden fixtures are
   * uncompressed tars with a `.tar.gz` name).
+  *
+  * Bounds, checked from each header before its payload is read or
+  * skipped, fail the walk with [[PackageTooLargeException]]:
+  *   - the package's running declared member bytes may not pass
+  *     `max(64 MiB, 100 × archive length)` — a decompression bomb is
+  *     defined by its ratio (Apache POI's `ZipSecureFile` uses the same
+  *     1:100), and the budget is computed from the input, so no option
+  *     sets it;
+  *   - at most [[MaxMembers]] entries;
+  *   - a payload is read only if it fits one Java array.
   *
   * [[pack]] is the test/fixture-side inverse; every header field that
   * varies run-to-run (mtime, uid, gid, gzip OS/mtime) is pinned so packing
@@ -38,51 +100,40 @@ final case class TarMember(name: String, size: Long, bytes: Array[Byte])
   */
 object TarOps {
 
-  private val GzipMagic0 = 0x1f.toByte
-  private val GzipMagic1 = 0x8b.toByte
+  val MaxMembers = 10000
+  private[tar] val MinDeclaredBytes: Long = 64L << 20
+  private[tar] val BombRatio = 100L
+  private[tar] val MaxArrayBytes = Int.MaxValue - 8L
+
+  /** `raw`, gunzipped when it starts with the gzip magic. */
+  private[tar] def decompressed(raw: InputStream): InputStream = {
+    val buffered = new BufferedInputStream(raw, 1 << 16)
+    buffered.mark(2)
+    val m0 = buffered.read(); val m1 = buffered.read()
+    buffered.reset()
+    if (m0 == 0x1f && m1 == 0x8b) new GZIPInputStream(buffered) else buffered
+  }
+
+  /** One bounded walk of `in`, an archive of `archiveLength` bytes
+    * (closed on return): every regular member's name, and the members
+    * whose name `keep` accepts with their payloads read. */
+  def select(in: InputStream, archiveLength: Long)(keep: String => Boolean):
+      (Seq[String], Seq[TarMember]) = {
+    val members = new MemberReader(in, archiveLength)
+    try {
+      val names = Seq.newBuilder[String]
+      val kept = Seq.newBuilder[TarMember]
+      while (members.next()) {
+        names += members.name
+        if (keep(members.name)) kept += TarMember(members.name, members.size, members.bytes())
+      }
+      (names.result(), kept.result())
+    } finally members.close()
+  }
 
   /** Explode a tar or tar.gz byte array into its regular-file members. */
-  def explode(archive: Array[Byte]): Seq[TarMember] = {
-    val raw: InputStream = new ByteArrayInputStream(archive)
-    val in: InputStream =
-      if (archive.length >= 2 && archive(0) == GzipMagic0 && archive(1) == GzipMagic1)
-        new GZIPInputStream(raw)
-      else raw
-    val tar = new TarArchiveInputStream(in)
-    try {
-      val out = Seq.newBuilder[TarMember]
-      var entry = tar.getNextEntry
-      while (entry != null) {
-        if (entry.isFile) {
-          out += TarMember(entry.getName, entry.getSize, tar.readAllBytes())
-        }
-        entry = tar.getNextEntry
-      }
-      out.result()
-    } finally tar.close()
-  }
-
-  /** Header-only walk: (name, size) per regular member. Payloads are
-    * skipped by `getNextEntry`, never buffered — the in-memory analogue
-    * of the `graftpkg` DSv2 reader's streaming listing path
-    * ([[graft.sources.PackageReader]]). */
-  def listMembers(archive: Array[Byte]): Seq[(String, Long)] = {
-    val raw: InputStream = new ByteArrayInputStream(archive)
-    val in: InputStream =
-      if (archive.length >= 2 && archive(0) == GzipMagic0 && archive(1) == GzipMagic1)
-        new GZIPInputStream(raw)
-      else raw
-    val tar = new TarArchiveInputStream(in)
-    try {
-      val out = Seq.newBuilder[(String, Long)]
-      var entry = tar.getNextEntry
-      while (entry != null) {
-        if (entry.isFile) out += ((entry.getName, entry.getSize))
-        entry = tar.getNextEntry
-      }
-      out.result()
-    } finally tar.close()
-  }
+  def explode(archive: Array[Byte]): Seq[TarMember] =
+    select(new ByteArrayInputStream(archive), archive.length)(_ => true)._2
 
   /** Open a deterministic tar.gz stream over `os` — the streaming form of
     * [[pack]] (same pinned gzip/header fields, so the bytes are identical
@@ -125,118 +176,9 @@ object TarOps {
   def packStrings(members: Seq[(String, String)]): Array[Byte] =
     pack(members.map { case (n, s) => (n, s.getBytes(UTF_8)) })
 
-  /** Gzip-detecting tar stream over an arbitrary input — the shared
-    * open-an-archive front door for the streaming (spilled / off-heap)
-    * paths. Caller closes the returned stream. */
-  def openStream(raw: InputStream): TarArchiveInputStream = {
-    val buffered = new java.io.BufferedInputStream(raw)
-    buffered.mark(2)
-    val m0 = buffered.read(); val m1 = buffered.read()
-    buffered.reset()
-    val in: InputStream =
-      if (m0 == (GzipMagic0 & 0xff) && m1 == (GzipMagic1 & 0xff))
-        new GZIPInputStream(buffered)
-      else buffered
-    new TarArchiveInputStream(in)
-  }
-
-  /** Streaming analogue of [[explode]]+[[findMember]] for spilled
-    * archives: ONE walk collecting every regular-member name plus, for
-    * each needle, the LAST member whose name contains it (findMember's
-    * substring contract). Memory is bounded by the extracted members —
-    * non-matching payloads are skipped by `getNextEntry`, never
-    * buffered. */
-  def streamFind(open: () => InputStream, needles: Seq[String]):
-      (Seq[String], Map[String, TarMember]) = {
-    val tar = openStream(open())
-    try {
-      val names = Seq.newBuilder[String]
-      var found = Map.empty[String, TarMember]
-      var entry = tar.getNextEntry
-      while (entry != null) {
-        if (entry.isFile) {
-          val name = entry.getName
-          names += name
-          val hits = needles.filter(nd => nd != null && nd.nonEmpty && name.contains(nd))
-          if (hits.nonEmpty) {
-            val m = TarMember(name, entry.getSize, tar.readAllBytes())
-            hits.foreach(nd => found += nd -> m) // later matches overwrite: LAST wins
-          }
-        }
-        entry = tar.getNextEntry
-      }
-      (names.result(), found)
-    } finally tar.close()
-  }
-
-  /** ONE streaming walk resolving two needle families at once — the
-    * spilled-archive half of the single-pass gather kernel:
-    *
-    *   - `containsNeedles` resolve like [[streamFind]]/[[findMember]]
-    *     (LAST member whose name contains the needle) — the metadata/XML
-    *     lookup contract;
-    *   - `exactFirstNeedles` resolve like the asset pass's
-    *     [[streamLookup]] (exact-name match pins FIRST; otherwise the
-    *     last substring match).
-    *
-    * Memory is bounded by the matched members; non-matching payloads are
-    * skipped, never buffered. */
-  def streamResolve(open: () => InputStream, containsNeedles: Seq[String],
-      exactFirstNeedles: Seq[String]): (Map[String, TarMember], Map[String, TarMember]) = {
-    val cn = containsNeedles.filter(nd => nd != null && nd.nonEmpty)
-    val en = exactFirstNeedles.filter(nd => nd != null && nd.nonEmpty)
-    if (cn.isEmpty && en.isEmpty) return (Map.empty, Map.empty)
-    val tar = openStream(open())
-    try {
-      var contains = Map.empty[String, TarMember]
-      var exact = Map.empty[String, TarMember]
-      var pinned = Set.empty[String] // exact-name hits stop updating
-      var entry = tar.getNextEntry
-      while (entry != null) {
-        if (entry.isFile) {
-          val name = entry.getName
-          val cHits = cn.filter(name.contains(_))
-          val eHits = en.filter(nd => !pinned(nd) && (nd == name || name.contains(nd)))
-          if (cHits.nonEmpty || eHits.nonEmpty) {
-            val m = TarMember(name, entry.getSize, tar.readAllBytes())
-            cHits.foreach(nd => contains += nd -> m) // later matches win
-            eHits.foreach { nd =>
-              exact += nd -> m
-              if (nd == name) pinned += nd
-            }
-          }
-        }
-        entry = tar.getNextEntry
-      }
-      (contains, exact)
-    } finally tar.close()
-  }
-
-  /** Streaming analogue of the asset pass's member lookup: FIRST
-    * exact-name match wins; otherwise the last substring match. One walk,
-    * memory bounded by the matched member. */
-  def streamLookup(open: () => InputStream, member: String): Option[Array[Byte]] = {
-    val tar = openStream(open())
-    try {
-      var exact: Array[Byte] = null
-      var substr: Array[Byte] = null
-      var entry = tar.getNextEntry
-      while (entry != null && exact == null) {
-        if (entry.isFile) {
-          val name = entry.getName
-          if (name == member) exact = tar.readAllBytes()
-          else if (member != null && member.nonEmpty && name.contains(member))
-            substr = tar.readAllBytes()
-        }
-        entry = tar.getNextEntry
-      }
-      Option(exact).orElse(Option(substr))
-    } finally tar.close()
-  }
-
-  /** First member whose name contains `needle`, if any — the reference's
-    * substring-match lookup (`file_helpers.py:27-29,79-81,87-89`). The
-    * reference keeps the LAST match (its loop overwrites); so do we. */
+  /** Last member whose name contains `needle`, if any — the reference's
+    * substring-match lookup (`file_helpers.py:27-29,79-81,87-89`); its
+    * loop overwrites, so the LAST match wins. */
   def findMember(members: Seq[TarMember], needle: String): Option[TarMember] =
     if (needle == null || needle.isEmpty) None
     else members.filter(_.name.contains(needle)).lastOption

@@ -458,4 +458,50 @@ class PackageIngestSpec extends SparkSpec {
         "the overwritten tarball must read back through the checksummed FS as the winner's bytes")
     }
   }
+
+  test("gather: in-memory and spilled walks agree on an adversarial member order") {
+    // the two lookup contracts, under every order that can split them:
+    //   - findMember (metadata, xml, gather's parser.log): LAST substring match;
+    //   - resolveAsset (parked asset members): exact name FIRST, else the
+    //     last substring match.
+    val metadata =
+      """{"parameters": {"TRE": {"reference": "TRE-R", "payload": {
+        |  "filename": "doc.docx", "xml": "doc.xml", "metadata": "TRE-R-metadata.json",
+        |  "images": ["image1.png"], "log": "parser.log"}}}}""".stripMargin
+    val archive = graft.tar.TarOps.packStrings(Seq(
+      "R/stale-metadata.json" -> """{"parameters": {}}""",
+      "R/parser.log" -> "log exact",
+      "R/old/R/image1.png" -> "image by substring", // before the exact name
+      "R/image1.png" -> "image exact",
+      "R/doc.docx" -> "docx first",                 // a duplicated name
+      "R/doc.xml" -> "<a>first xml</a>",
+      "R/TRE-R-metadata.json" -> metadata,          // the second -metadata.json
+      "R/doc.docx" -> "docx second",
+      "R/copy/doc.xml" -> "<a>last xml</a>",
+      "R/x/R/parser.log" -> "log by substring"))
+    val spill = Files.createTempFile("graft-gather-spill", ".tar.gz")
+    Files.write(spill, archive)
+
+    def parked(digest: String): Map[String, String] =
+      try graft.tar.MemberCache.get(digest).get.map { case (k, v) => k -> new String(v, "UTF-8") }
+      finally graft.tar.MemberCache.remove(digest)
+    val inMemory = PackageIngest.gather(RawPackage("R", "TDR", "R.tar.gz", archive, null, "d-mem"))
+    val inMemoryParked = parked("d-mem")
+    val spilled = PackageIngest.gather(
+      RawPackage("R", "TDR", "R.tar.gz", null, spill.toString, "d-spill"))
+    val spilledParked = parked("d-spill")
+    Files.delete(spill)
+
+    assert(inMemory == spilled)
+    assert(inMemoryParked == spilledParked)
+    assert(inMemory.error == null)
+    assert(inMemory.metadata_json == metadata)
+    assert(inMemory.xml_content == "<a>last xml</a>")
+    assert(inMemory.parser_log == "log by substring")
+    assert(inMemory.member_names.length == 10)
+    assert(inMemoryParked == Map(
+      "R/parser.log" -> "log exact",
+      "R/doc.docx" -> "docx first",
+      "R/image1.png" -> "image exact"))
+  }
 }

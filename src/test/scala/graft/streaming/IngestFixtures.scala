@@ -28,7 +28,11 @@ object IngestFixtures {
   /** A complete synthetic TDR package: metadata (TRE payload + PARSER cite
     * + TDR section), judgment XML, docx, parser.log — enough to drive every
     * act-phase effect. */
-  def tdrArchive(ref: String, cite: String, images: Seq[String] = Nil): Array[Byte] = {
+  def tdrArchive(ref: String, cite: String, images: Seq[String] = Nil): Array[Byte] =
+    TarOps.packStrings(tdrMembers(ref, cite, images))
+
+  /** [[tdrArchive]]'s (name, text) members, for specs that pack extra ones. */
+  def tdrMembers(ref: String, cite: String, images: Seq[String] = Nil): Seq[(String, String)] = {
     val metadata =
       s"""{"parameters": {"TRE": {"reference": "TRE-$ref", "payload": {
          |  "filename": "doc.docx", "xml": "doc.xml", "metadata": "TRE-$ref-metadata.json",
@@ -37,12 +41,12 @@ object IngestFixtures {
          |  "TDR": {"Source-Organization": "MoJ", "Contact-Name": "Jo Doe",
          |    "Contact-Email": "jo@example.com", "Internal-Sender-Identifier": "$ref",
          |    "Consignment-Completed-Datetime": "2024-01-01T00:00:00Z"}}}""".stripMargin
-    TarOps.packStrings(Seq(
+    Seq(
       s"$ref/TRE-$ref-metadata.json" -> metadata,
       s"$ref/doc.xml" -> s"<akomaNtoso><judgment>body of $ref</judgment></akomaNtoso>",
       s"$ref/doc.docx" -> s"docx bytes $ref",
       s"$ref/parser.log" -> "ok") ++
-      images.map(i => s"$ref/$i" -> s"image bytes $i"))
+      images.map(i => s"$ref/$i" -> s"image bytes $i")
   }
 
   /** Stage archives under a temp bucket root at `<root>/b/k/<ref>.tar.gz`

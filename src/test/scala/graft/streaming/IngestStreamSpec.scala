@@ -32,6 +32,9 @@ class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val goldenFixtures =
     Paths.get("/root/reference/aws_examples/s3/te-editorial-out-int")
 
+  /** In-memory fetch threshold (bytes) the spilled-path specs set. */
+  private val SpillThreshold = 256L
+
   test("streaming ingest: unknown originator fails into the DLQ as redeliverable, store untouched") {
     implicit val sqlCtx = spark.sqlContext
     val store = LocalStore(spark, Files.createTempDirectory("graft-orig-stream").toString)
@@ -190,46 +193,50 @@ class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("spilled fetch: archives above the in-memory threshold stream via local disk, tables stay byte-identical") {
-    assume(Files.exists(goldenFixtures), "reference fixtures not present")
     implicit val sqlCtx = spark.sqlContext
-    val archive = Files.readAllBytes(goldenFixtures.resolve("TDR-2022-DNWR.tar.gz"))
-    assert(archive.length > 1024,
-      "fixture must exceed the test threshold so the spill branch is the one exercised")
+    // an in-test package always runs; the golden one where it is present
+    val inputs = Seq("REF-S" -> tdrArchive("REF-S", "[2024] EWHC 15 (KB)", images = Seq("image1.png"))) ++
+      Seq(goldenFixtures.resolve("TDR-2022-DNWR.tar.gz")).filter(Files.exists(_))
+        .map(p => "TDR-2022-DNWR" -> Files.readAllBytes(p))
+    for ((ref, archive) <- inputs) {
+      assert(archive.length > SpillThreshold,
+        s"$ref must exceed the test threshold so the spill branch is the one exercised")
 
-    // 1 KiB threshold: EVERY package takes the spill path — fetch streams
-    // to executor-local disk, gather runs off streaming member walks, the
-    // asset pass streams the tarball copy; heap never holds the archive
-    spark.conf.set(IngestStream.MaxInMemoryFetchKey, "1024")
-    try {
+      // the test threshold sends EVERY package down the spill path — fetch
+      // streams to executor-local disk, gather runs off two bounded walks,
+      // the asset pass streams the tarball copy; heap never holds the archive
+      spark.conf.set(IngestStream.MaxInMemoryFetchKey, SpillThreshold.toString)
       val spillStore = LocalStore(spark, Files.createTempDirectory("graft-spill-stream").toString)
-      val ckpt = Files.createTempDirectory("graft-spill-ckpt").toString
-      val source = MemoryStream[(String, String)]
-      source.addData(sqs("msg-spill-1", v2Inner("TDR-2022-DNWR")))
-      val q = IngestStream.start(source.toDS().toDF("kind", "record_json"), spillStore, ckpt,
-        packageUri = stage("TDR-2022-DNWR" -> archive))
-      q.awaitTermination()
+      try {
+        val ckpt = Files.createTempDirectory("graft-spill-ckpt").toString
+        val source = MemoryStream[(String, String)]
+        source.addData(sqs(s"msg-spill-$ref", v2Inner(ref)))
+        val q = IngestStream.start(source.toDS().toDF("kind", "record_json"), spillStore, ckpt,
+          packageUri = stage(ref -> archive))
+        q.awaitTermination()
+      } finally spark.conf.unset(IngestStream.MaxInMemoryFetchKey)
 
       val batchStore = LocalStore(spark, Files.createTempDirectory("graft-spill-batch").toString)
-      PackageIngest.ingest(spark,
-        Seq(RawPackage("TDR-2022-DNWR", "TDR", "TDR-2022-DNWR.tar.gz", archive)), batchStore)
+      PackageIngest.ingest(spark, Seq(RawPackage(ref, "TDR", s"$ref.tar.gz", archive)), batchStore)
 
+      assert(spillStore.documents.count() == 1, ref)
       for (t <- Seq("documents", "identifiers", "properties", "notifications", "assets")) {
         val s = spillStore.read(t).get.collect().map(_.toString).sorted.toSeq
         val b = batchStore.read(t).get.collect().map(_.toString).sorted.toSeq
-        assert(s == b, s"table $t diverges between spilled-stream and batch paths")
+        assert(s == b, s"$ref: table $t diverges between spilled-stream and batch paths")
       }
       // performed asset bytes too — including the whole-archive tarball
       // copy, which on the spill path streams disk→store
       def assetFiles(root: String): Map[String, Seq[Byte]] = {
         val base = Paths.get(root)
-        import scala.jdk.CollectionConverters._
-        Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
-          .map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq)
+        regularFiles(base).map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq)
           .filter(_._1.contains("/"))
           .toMap
       }
-      assert(assetFiles(spillStore.assetRoot) == assetFiles(batchStore.assetRoot))
-    } finally spark.conf.unset(IngestStream.MaxInMemoryFetchKey)
+      val spilledAssets = assetFiles(spillStore.assetRoot)
+      assert(spilledAssets.keys.exists(_.endsWith("/image1.png")), s"$ref: ${spilledAssets.keys}")
+      assert(spilledAssets == assetFiles(batchStore.assetRoot), ref)
+    }
   }
 
   test("redrive policy: a poison retryable message parks terminal after maxReceives") {
@@ -427,25 +434,79 @@ class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(store.documents.count() == 1)
   }
 
-  test("hostile package: an image name climbing out of the asset root fails terminally at gather") {
-    val storeDir = Files.createTempDirectory("graft-traversal")
+  /** Ingests one message for `archive` (spilled when `spillAt` is set)
+    * and asserts the package lands as one terminal `error` row, with no
+    * document, no asset file, and no file outside the asset root. */
+  private def assertRejected(ref: String, archive: Array[Byte], error: String,
+      spillAt: Option[Long] = None): Unit = {
+    val storeDir = Files.createTempDirectory("graft-hostile")
     val store = LocalStore(spark, storeDir.toString)
-    // `<assetRoot>/<uri>/../../escaped.png` is the store directory itself
-    val resolver = stage("REF-T" -> tdrArchive("REF-T", "[2024] EWHC 14 (KB)",
-      images = Seq("image1.png", "../../escaped.png")))
-    IngestStream.processBatch(store, packageUri = resolver)(
-      Seq(sqs("msg-t", v2Inner("REF-T"))).toDF("kind", "record_json"), 0L)
+    spillAt.foreach(n => spark.conf.set(IngestStream.MaxInMemoryFetchKey, n.toString))
+    try IngestStream.processBatch(store, packageUri = stage(ref -> archive))(
+      Seq(sqs(s"msg-$ref", v2Inner(ref))).toDF("kind", "record_json"), 0L)
+    finally spark.conf.unset(IngestStream.MaxInMemoryFetchKey)
 
-    assert(failureRows(store) == Seq(("msg-t", "UnsafeAssetNameException", true)))
-    assert(store.documents.count() == 0)
+    assert(failureRows(store) == Seq((s"msg-$ref", error, true)), ref)
+    assert(store.documents.count() == 0, ref)
     val root = Paths.get(store.assetRoot)
-    val walk = Files.walk(storeDir)
-    val outside = try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.filter(f => Files.isRegularFile(f) && !f.startsWith(root))
-        .filter(_.getFileName.toString.contains("escaped")).toList
-    } finally walk.close()
-    assert(outside.isEmpty, s"files written outside the asset root: $outside")
+    assert(regularFiles(root).isEmpty, s"$ref: asset files written")
+    val outside = regularFiles(storeDir).filter(_.getFileName.toString.contains("escaped"))
+    assert(outside.isEmpty, s"$ref: files written outside the asset root: $outside")
+  }
+
+  private def regularFiles(dir: java.nio.file.Path): List[java.nio.file.Path] =
+    if (!Files.exists(dir)) Nil
+    else {
+      val walk = Files.walk(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      } finally walk.close()
+    }
+
+  test("hostile package: an image name climbing out of the asset root fails terminally at gather") {
+    // `<assetRoot>/<uri>/../../escaped*` is the store directory itself:
+    // once through an image name, once through a V2 reference, which
+    // names the tarball copy `<ref>.tar.gz` verbatim
+    assertRejected("REF-T", tdrArchive("REF-T", "[2024] EWHC 14 (KB)",
+      images = Seq("image1.png", "../../escaped.png")), "UnsafeAssetNameException")
+    assertRejected("../../escaped-R", tdrArchive("../../escaped-R", "[2024] EWHC 16 (KB)",
+      images = Seq("image1.png")), "UnsafeAssetNameException")
+  }
+
+  test("hostile package: a decompression bomb or a member flood fails terminally before inflating") {
+    // a good tdrArchive with `extra` members streamed after it
+    def tdrArchiveWith(ref: String)(
+        extra: org.apache.commons.compress.archivers.tar.TarArchiveOutputStream => Unit) = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val tar = TarOps.packStream(bos)
+      try {
+        tdrMembers(ref, "[2024] EWHC 20 (KB)").foreach { case (n, t) =>
+          TarOps.writeEntry(tar, n, t.getBytes("UTF-8"))
+        }
+        extra(tar)
+      } finally tar.close()
+      bos.toByteArray
+    }
+    // 128 MiB of zeros as one unreferenced member: ~130 KB of gzip,
+    // streamed in 64 KiB writes so the bomb is never one allocated array
+    def bomb(ref: String) = tdrArchiveWith(ref) { tar =>
+      val e = new org.apache.commons.compress.archivers.tar.TarArchiveEntry(s"$ref/zeros.bin")
+      e.setSize(128L << 20)
+      tar.putArchiveEntry(e)
+      val zeros = new Array[Byte](64 << 10)
+      for (_ <- 0 until 2048) tar.write(zeros)
+      tar.closeArchiveEntry()
+    }
+    val inMemory = bomb("REF-BOMB")
+    assert(inMemory.length < (1 << 20), s"the bomb's archive is ${inMemory.length} bytes")
+    assertRejected("REF-BOMB", inMemory, "PackageTooLargeException")
+    assertRejected("REF-BOMB-S", bomb("REF-BOMB-S"), "PackageTooLargeException",
+      spillAt = Some(SpillThreshold))
+    val flood = tdrArchiveWith("REF-FLOOD") { tar =>
+      for (i <- 0 to TarOps.MaxMembers) TarOps.writeEntry(tar, s"REF-FLOOD/empty-$i", Array.empty)
+    }
+    assertRejected("REF-FLOOD", flood, "PackageTooLargeException")
   }
 
   /** Runs `body` and returns the executed plans of its `localCheckpoint`

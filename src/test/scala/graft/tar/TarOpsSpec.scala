@@ -108,19 +108,38 @@ class TarOpsSpec extends SparkSpec {
     assert(TarOps.findMember(ms, "parser.log").isDefined)
   }
 
-  test("listMembers (header-only walk) agrees with explode on every golden archive") {
-    assume(Files.exists(fixtures), "reference fixtures not present")
-    val archives = java.nio.file.Files.list(fixtures).iterator()
-    var checked = 0
-    archives.forEachRemaining { p =>
-      if (p.toString.endsWith(".tar.gz")) {
-        val bytes = Files.readAllBytes(p)
-        val listed = TarOps.listMembers(bytes)
-        val full = TarOps.explode(bytes).map(m => (m.name, m.size))
-        assert(listed == full, s"$p: header walk diverged from explode")
-        checked += 1
-      }
+  test("header-only walk: names and sizes without payload reads equal explode, gzip and plain tar") {
+    val plain = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val tar = new org.apache.commons.compress.archivers.tar.TarArchiveOutputStream(bos)
+      tar.putArchiveEntry(new org.apache.commons.compress.archivers.tar.TarArchiveEntry("plain/"))
+      tar.closeArchiveEntry()
+      TarOps.writeEntry(tar, "plain/a.txt", "plain tar".getBytes(UTF_8))
+      TarOps.writeEntry(tar, "plain/empty", Array.empty)
+      tar.close()
+      bos.toByteArray
     }
-    assert(checked > 0)
+    val inTest = Seq(
+      "gzip" -> TarOps.packStrings(Seq("R/x-metadata.json" -> "{}", "R/doc.xml" -> "<a/>",
+        "R/empty" -> "", "R/parser.log" -> "log")),
+      "plain" -> plain)
+    val golden =
+      if (!Files.exists(fixtures)) Nil
+      else {
+        import scala.jdk.CollectionConverters._
+        val listing = Files.list(fixtures)
+        try listing.iterator().asScala.filter(_.toString.endsWith(".tar.gz")).toList
+          .map(p => p.toString -> Files.readAllBytes(p))
+        finally listing.close()
+      }
+    for ((label, bytes) <- inTest ++ golden) {
+      val members = new MemberReader(new java.io.ByteArrayInputStream(bytes), bytes.length)
+      val listed = try Iterator.continually(members.next()).takeWhile(identity)
+        .map(_ => (members.name, members.size)).toList
+      finally members.close()
+      val full = TarOps.explode(bytes).map(m => (m.name, m.size))
+      assert(listed.nonEmpty && listed == full, s"$label: header walk diverged from explode")
+    }
+    assert(TarOps.explode(plain).map(_.name) == Seq("plain/a.txt", "plain/empty"))
   }
 }
