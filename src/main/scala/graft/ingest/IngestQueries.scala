@@ -8,13 +8,16 @@ import org.apache.spark.sql.functions._
   * J4, W3–W10): scalar transforms, publish/email routing matrices, version
   * annotation + property-store projection, and the asset-copy plan. Each
   * query derives its inputs deterministically from `documents` so the
-  * DuckDB oracle can enumerate the same truth table.
+  * DuckDB oracle can enumerate the same truth table — over the decision
+  * functions the act phase ([[PackageIngest]]) itself calls.
   *
   * Everything here is a narrow per-row projection (scan-stage, codegen'd,
   * shuffle-free except the presentation sort) — at 100 TB these decisions
   * ride along with the package scan for free.
   */
 object IngestQueries {
+
+  private val NoDocx = "_nodocx" // the tarball's rename without a source doc
 
   // ---------------------------------------------------------------- q31
   /** P1/P5/P2/P7 scalar pack over a derived truth table: bool parsing
@@ -47,7 +50,7 @@ object IngestQueries {
         ScalarOps.parseBool(boolIn, default = false).as("bool_default_false"),
         ScalarOps.parseBool(boolIn, default = true).as("bool_default_true"),
         ScalarOps.parseBoolWarn(boolIn).as("bool_warn"),
-        ScalarOps.modifyFilename(filename, "_nodocx").as("nodocx_filename"),
+        ScalarOps.modifyFilename(filename, NoDocx).as("nodocx_filename"),
         ScalarOps.trimmedUri(rawUri).as("trimmed_uri"),
         ScalarOps.extension(sourceName).as("ext"),
         ScalarOps.flatUri(concat(lit("ew/ca/2024/"), id)).as("flat_uri"))
@@ -111,6 +114,35 @@ object IngestQueries {
       .when(originator === "TDR", when(exists, lit("updated")).otherwise(lit("new")))
       .otherwise(lit(null))
 
+  /** J4 upload state: an update when the uri resolved to a stored
+    * document, an insert otherwise (`ingester.py:459-483`). */
+  def uploadState(exists: Column): Column =
+    when(exists, lit("updated")).otherwise(lit("inserted"))
+
+  /** `send_email` and `will_publish` both raise RuntimeError on an
+    * unrecognized originator (ingester.py:440,457): that error unless
+    * `error` is already set. A NULL originator needs the isNull arm, as
+    * `!isin(...)` alone is NULL and would fall through the `when`. */
+  def originatorGuard(error: Column, originator: Column): Column =
+    when(error.isNull && (originator.isNull || !originator.isin("TDR", "FCL", "FCL S3")),
+      concat(lit("RuntimeError: Didn't recognise originator "), coalesce(originator, lit("null"))))
+      .otherwise(error)
+
+  /** W10 guard before any effect (exceptions.py:26): an error-log package
+    * must not overwrite a published document. */
+  def errorLogOverPublished(docType: Column, exists: Column, published: Column): Column =
+    docType === "parserLog" && exists && published
+
+  /** W10 guard after the write effects (ingester.py:568-570): publishing
+    * raises; the engine models parserLog documents as unpublishable. */
+  def cannotPublish(willPublish: Column, docType: Column): Column =
+    willPublish && docType === "parserLog"
+
+  /** The decision the document MERGE folds as `coalesce(decision, flag)`:
+    * null for a publish that raises (publish failed, unpublish not run). */
+  def publishDecision(willPublish: Column, docType: Column): Column =
+    when(cannotPublish(willPublish, docType), lit(null).cast("boolean")).otherwise(willPublish)
+
   def annotationMessage(isTdr: Column, exists: Column): Column =
     when(isTdr && exists, lit("Updated document submitted by TDR user"))
       .when(isTdr && !exists, lit("New document submitted by TDR user"))
@@ -150,7 +182,7 @@ object IngestQueries {
         action.as("email_action"),
         emailDelivered(action, isProd).as("email_delivered"),
         annotationMessage(isTdr, exists).as("annotation_message"),
-        when(exists, lit("updated")).otherwise(lit("inserted")).as("upload_state"),
+        uploadState(exists).as("upload_state"),
         when(originator === "MYSTERY", lit("RuntimeError")).otherwise(lit(null)).as("error"))
       .orderBy(col("doc_id"))
   }
@@ -403,38 +435,46 @@ object IngestQueries {
     * `_nodocx` when the package has no source document,
     * `ingester.py:361-381`), source doc under the flattened-URI name with
     * its extension preserved (`:383-394`, pinned `tests/test_main.py:84-97`),
-    * parser.log (suppressed when missing, `:396-405`), and one row per
-    * image (`:407-418`). */
-  def q35AssetPlan(spark: SparkSession, dir: String): DataFrame = {
+    * parser.log (only when the package has one, `:396-405`), and one row
+    * per image (`:407-418`): (uri, asset_type, dest_filename, src_member)
+    * + `keep` rows from (uri, original_ref, tar_name, source_filename,
+    * has_parser_log, images). `src_member` is null for the whole-archive
+    * tarball row, else keyed by the ORIGINAL consignment ref — the tar's
+    * folder predates the S4 rewrite (ingester.py:389,400,413). */
+  def assetPlan(pkgs: DataFrame, keep: Column*): DataFrame = {
     import ScalarOps._
+    def rows(df: DataFrame, assetType: String, dest: Column, member: Column) =
+      df.select(Seq(col("uri"), lit(assetType).as("asset_type"), dest.as("dest_filename"),
+        member.as("src_member")) ++ keep: _*)
+    def inPackage(name: Column) = concat(col("original_ref"), lit("/"), name)
+    rows(pkgs, "tarball",
+        when(col("source_filename").isNull, modifyFilename(col("tar_name"), NoDocx))
+          .otherwise(col("tar_name")),
+        lit(null).cast("string"))
+      .unionByName(rows(pkgs.filter(col("source_filename").isNotNull), "source",
+        concat(flatUri(col("uri")), lit("."), extension(col("source_filename"))),
+        inPackage(col("source_filename"))))
+      .unionByName(rows(pkgs.filter(col("has_parser_log")), "parser_log",
+        lit("parser.log"), inPackage(lit("parser.log"))))
+      .unionByName(rows(pkgs.withColumn("image", explode(coalesce(col("images"), array()))),
+        "image", col("image"), inPackage(col("image"))))
+  }
+
+  def q35AssetPlan(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables(spark, dir).documents.select(col("doc_id"))
     val id = col("doc_id").cast("string")
-    val uri = concat(lit("doc/"), id)
     val ref = concat(lit("REF-"), id)
     val sourceName = when(col("doc_id") % 5 === 0, lit(null)) // reparse: no docx
       .otherwise(concat(lit("file"), id, when(col("doc_id") % 2 === 0, lit(".PDF")).otherwise(lit(".docx"))))
-    val tarName = concat(ref, lit(".tar.gz"))
-    val hasLog = col("doc_id") % 11 =!= 0
     val images = when(col("doc_id") % 3 === 0, array().cast("array<string>"))
       .when(col("doc_id") % 3 === 1, array(lit("image1.png")))
       .otherwise(array(lit("image1.png"), lit("image2.jpg")))
 
-    val base = d.select(col("doc_id"), uri.as("uri"), sourceName.as("src"), tarName.as("tar"),
-      hasLog.as("has_log"), images.as("images"))
-
-    val tarRows = base.select(col("doc_id"), col("uri"), lit("tarball").as("asset_type"),
-      when(col("src").isNull, modifyFilename(col("tar"), "_nodocx")).otherwise(col("tar"))
-        .as("dest_filename"))
-    val srcRows = base.filter(col("src").isNotNull)
-      .select(col("doc_id"), col("uri"), lit("source").as("asset_type"),
-        concat(flatUri(col("uri")), lit("."), extension(col("src"))).as("dest_filename"))
-    val logRows = base.filter(col("has_log"))
-      .select(col("doc_id"), col("uri"), lit("parser_log").as("asset_type"),
-        lit("parser.log").as("dest_filename"))
-    val imgRows = base.select(col("doc_id"), col("uri"), lit("image").as("asset_type"),
-      explode(col("images")).as("dest_filename"))
-
-    tarRows.union(srcRows).union(logRows).union(imgRows)
+    val pkgs = d.select(col("doc_id"), concat(lit("doc/"), id).as("uri"), ref.as("original_ref"),
+      concat(ref, lit(".tar.gz")).as("tar_name"), sourceName.as("source_filename"),
+      (col("doc_id") % 11 =!= 0).as("has_parser_log"), images.as("images"))
+    assetPlan(pkgs, col("doc_id"))
+      .select(col("doc_id"), col("uri"), col("asset_type"), col("dest_filename"))
       .orderBy(col("doc_id"), col("asset_type"), col("dest_filename"))
   }
 

@@ -194,9 +194,9 @@ object Messages {
   /** W11 batch-failure report over the q29 event mix: only failed records
     * that arrived via SQS carry a reportable id (`batchItemFailures`,
     * `lambda_function.py:131-137`); SNS failures vanish (at-most-once).
-    * The `terminal` flag is the O3 taxonomy routing
-    * ([[graft.model.IngestError]]) as a column — terminal errors go to
-    * the DLQ once, retryables are eligible for redelivery. */
+    * The `terminal` flag is the O3 taxonomy routing the streaming shell
+    * applies ([[graft.model.IngestError.terminal]]) — terminal errors go
+    * to the DLQ once, retryables are eligible for redelivery. */
   def q42FailureReport(spark: SparkSession, dir: String): DataFrame = {
     // STRUCTURAL decode barrier: the eager localCheckpoint cuts the
     // lineage, so predicate pushdown CANNOT substitute the double-JSON
@@ -214,11 +214,10 @@ object Messages {
     val decoded = decodedEvents(spark, dir)
       .select("doc_id", "msg_id", "error")
       .localCheckpoint(true)
-    val terminalNames = graft.model.IngestError.all.filter(_.terminal).map(_.name)
     decoded
       .filter(col("error").isNotNull && col("msg_id").isNotNull)
       .select(col("doc_id"), col("msg_id"), col("error"),
-        col("error").isin(terminalNames: _*).as("terminal"))
+        graft.model.IngestError.terminal(col("error")).as("terminal"))
       .orderBy(col("doc_id"))
   }
 

@@ -2,6 +2,8 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import graft.model.IngestError
 import graft.store.DocumentStore
 import graft.tar.{PackageTooLargeException, TarMember, TarOps}
@@ -97,9 +99,23 @@ object PackageIngest {
       case None => return failed("FileNotFoundException: metadata file not found", names)
       case Some(m) => text(m)
     }
-    val xmlName = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "xml")).flatten
-    val fname = jsonField(metadataJson, Seq("parameters", "TRE", "payload", "filename"))
-    val images = jsonArray(metadataJson, Seq("parameters", "TRE", "payload", "images"))
+    // one parse serves every payload lookup; metadata that is not JSON
+    // fails this package alone, retryable as the reference's unexpected
+    // `json.loads` error is
+    val payload = try Seq("parameters", "TRE", "payload")
+        .foldLeft(metadataMapper.readTree(metadataJson))((n, k) => if (n == null) null else n.get(k))
+      catch {
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          val at = Option(e.getLocation).fold("")(l => s": line ${l.getLineNr} column ${l.getColumnNr}")
+          return failed(s"JSONDecodeError: ${e.getOriginalMessage}$at", names)
+      }
+    // outer Option = key present; inner = non-null value
+    def field(k: String) = Option(payload).filter(_.has(k)).map(_.get(k))
+      .map(v => if (v.isNull) None else Some(v.asText()))
+    val xmlName = field("xml").flatten
+    val fname = field("filename")
+    val images = Option(payload).flatMap(p => Option(p.get("images"))).filter(_.isArray)
+      .fold(Seq.empty[String])(_.elements().asScala.filter(!_.isNull).map(_.asText()).toSeq)
     // each image name becomes the asset destination
     // `<assetRoot>/<uri>/<name>` in the act phase, where Hadoop `Path`
     // resolves `..`: a name that could leave that directory fails the
@@ -141,6 +157,10 @@ object PackageIngest {
     !name.startsWith("/") && !name.exists(Character.isISOControl) &&
       name.split("/", -1).forall(seg => seg.nonEmpty && seg != "." && seg != "..")
 
+  /** [[safeAssetName]] over a resolved uri column (null passes: only an
+    * errored row has no uri). */
+  private val safeUri = udf((uri: String) => uri == null || safeAssetName(uri))
+
   /** The asset pass's member lookup contract: exact name first, then the
     * reference's last-substring match — shared by the gather-side cache
     * population and the byte-copy miss path so they can never diverge. */
@@ -171,38 +191,8 @@ object PackageIngest {
       md.digest().map("%02x".format(_)).mkString
     })
 
-  /** Minimal JSON path lookup (jackson ships with Spark). Outer Option =
-    * key present; inner = non-null value. */
-  private def jsonField(json: String, path: Seq[String]): Option[Option[String]] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    var node = mapper.readTree(json)
-    for (p <- path.dropRight(1)) {
-      node = if (node == null) null else node.get(p)
-      if (node == null) return None
-    }
-    if (node == null || !node.has(path.last)) None
-    else {
-      val v = node.get(path.last)
-      if (v.isNull) Some(None) else Some(Some(v.asText()))
-    }
-  }
-
-  /** String-array JSON path lookup (missing/non-array → empty) — the
-    * gather-side twin of the act phase's `params.TRE.payload.images`
-    * projection. */
-  private def jsonArray(json: String, path: Seq[String]): Seq[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    var node = mapper.readTree(json)
-    for (p <- path) {
-      node = if (node == null) null else node.get(p)
-      if (node == null) return Seq.empty
-    }
-    if (!node.isArray) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      node.elements().asScala.filter(e => !e.isNull).map(_.asText()).toSeq
-    }
-  }
+  /** Metadata parser (jackson ships with Spark); thread-safe once built. */
+  private val metadataMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Gathered packages as a DataFrame with the column-level decisions
     * applied: metadata decode (`MetadataSchema`), best-XML fallback,
@@ -382,25 +372,18 @@ object PackageIngest {
       .join(broadcast(pubDim), col("uri") === col("pub_uri"), "left")
       .withColumn("published", coalesce(col("is_published"), lit(false)))
       .drop("pub_uri", "is_published")
-      // W10 guard: an error-log package must not clobber a published
-      // document (exceptions.py:26) — it fails terminally instead, before
-      // any effect runs
-      .withColumn("error",
-        when(col("error").isNull && col("doc_type") === "parserLog" &&
-            col("exists_in_db") && col("published"),
-          lit("ErrorLogWouldOverwritePublishedDocument")).otherwise(col("error")))
-      // unknown-originator guard: `send_email` and `will_publish` BOTH
-      // raise RuntimeError on an unrecognized originator
-      // (ingester.py:440,457) — the package fails rather than silently
-      // carrying a null will_publish through the effects. A NULL
-      // originator must hit the guard too: `!isin(...)` alone is NULL for
-      // null input and would fall through the `when`
-      .withColumn("error",
-        when(col("error").isNull &&
-            (col("originator").isNull || !col("originator").isin("TDR", "FCL", "FCL S3")),
-          concat(lit("RuntimeError: Didn't recognise originator "),
-            coalesce(col("originator"), lit("null"))))
-          .otherwise(col("error")))
+      // the asset copies write under `<assetRoot>/<uri>/`, where Hadoop
+      // `Path` resolves `..`: a resolved uri (an identifier row's
+      // document_uri) that could leave the asset root fails the package
+      // like an unsafe image name
+      .withColumn("error", when(col("error").isNull && !safeUri(col("uri")),
+        lit(IngestError.UnsafeAssetName.name)).otherwise(col("error")))
+      // the W10 guard and the unknown-originator guard fail a package
+      // before any effect runs
+      .withColumn("error", when(col("error").isNull &&
+          IngestQueries.errorLogOverPublished(col("doc_type"), col("exists_in_db"), col("published")),
+        lit(IngestError.ErrorLogWouldOverwritePublishedDocument.name)).otherwise(col("error")))
+      .withColumn("error", IngestQueries.originatorGuard(col("error"), col("originator")))
       .localCheckpoint(true)
 
     try {
@@ -409,14 +392,12 @@ object PackageIngest {
       // W10 decision columns (used by effects 1 and 6): every successful
       // ingest ends by either publishing or unpublishing its document
       // (ingester.py:565-575); the FCL-reparse branch consults the
-      // PRE-batch published state joined into `resolved` above. Publishing
-      // an unpublishable document raises CannotPublishException AFTER the
-      // write effects ran (ingester.py:568-570) — the engine models
-      // parserLog documents as unpublishable; a null decision leaves the
-      // stored flag untouched (publish failed, unpublish not run).
+      // PRE-batch published state joined into `resolved` above. A publish
+      // that raises CannotPublishException does so AFTER the write effects
+      // ran (ingester.py:568-570), and its null decision leaves the stored
+      // flag untouched.
       val willPublish = IngestQueries.willPublish(col("originator"), col("auto_publish"),
         col("exists_in_db"), col("published"))
-      val cannotPublish = willPublish && col("doc_type") === "parserLog"
 
       // 1. document MERGE (W1/J4) with the full P3 version-annotation
       //    payload (ingester.py:76-97). The publish/unpublish effect (W10,
@@ -432,22 +413,16 @@ object PackageIngest {
           col("params.TDR")("Contact-Name"), col("params.TDR")("Contact-Email"),
           lit(requestId)).as("annotation_payload"),
         col("auto_publish").as("automated"),
-        when(col("exists_in_db"), lit("updated")).otherwise(lit("inserted")).as("upload_state"),
-        when(cannotPublish, lit(null).cast("boolean")).otherwise(willPublish).as("will_publish")))
+        IngestQueries.uploadState(col("exists_in_db")).as("upload_state"),
+        IngestQueries.publishDecision(willPublish, col("doc_type")).as("will_publish")))
 
       // 2. identifiers (W2): judgments/press summaries with an NCN, plus
       //    each document's own URI as a slug row — the J1 substrate
       //    MarkLogic provides implicitly (a document is addressable by its
       //    URI slug), which lets a parser-URI reparse find its document
-      val ncnRows = ok
-        .filter(col("ncn").isNotNull && col("doc_type").isin("judgment", "pressSummary"))
-        .select(col("uri").as("document_uri"), lit("value").as("id_kind"),
-          col("ncn").as("id_value"),
-          when(col("doc_type") === "judgment", lit("ukncn")).otherwise(lit("ukncn-summary"))
-            .as("id_type"))
       val slugRows = ok.select(col("uri").as("document_uri"), lit("slug").as("id_kind"),
         col("uri").as("id_value"), lit(null).cast("string").as("id_type"))
-      val idFrame = ncnRows.unionByName(slugRows)
+      val idFrame = Resolution.ncnRows(ok).unionByName(slugRows)
 
       // 3. notifications (W9): `delivered` records whether the reference's
       //    sender would actually send — false outside prod (the ROLLBAR_ENV
@@ -471,36 +446,14 @@ object PackageIngest {
         col("params.TDR")("Consignment-Completed-Datetime").as("tdr_consignment_completed_datetime"),
         col("params.PARSER.parser_run_id").as("parser_run_id")))
 
-      // 5. asset copies (W5–W8): tarball (+_nodocx), source doc (flattened
-      //    uri + preserved extension), parser.log, images. Member SOURCE
-      //    paths (`src_member`) are keyed by the ORIGINAL consignment ref —
-      //    the tar's internal folder predates the S4 rewrite
-      //    (ingester.py:389,400,413 use the pre-update reference).
-      //    `original_ref`/`tar_name` ride along as the join key back to the
-      //    archive bytes for the byte-copy pass below; the stored plan
-      //    table drops them.
-      val planKey = Seq(col("original_ref"), col("tar_name"))
-      val tarRow = ok.select(col("uri") +: lit("tarball").as("asset_type") +:
-        when(col("source_filename").isNull, ScalarOps.modifyFilename(col("tar_name"), "_nodocx"))
-          .otherwise(col("tar_name")).as("dest_filename") +:
-        lit(null).cast("string").as("src_member") +: planKey: _*) // whole archive, not a member
-      val srcRow = ok.filter(col("source_filename").isNotNull)
-        .select(col("uri") +: lit("source").as("asset_type") +:
-          concat(ScalarOps.flatUri(col("uri")), lit("."),
-            ScalarOps.extension(col("source_filename"))).as("dest_filename") +:
-          concat(col("original_ref"), lit("/"), col("source_filename")).as("src_member") +:
-          planKey: _*)
-      val logRow = ok.filter(exists(col("member_names"), n => n.contains("parser.log")))
-        .select(col("uri") +: lit("parser_log").as("asset_type") +:
-          lit("parser.log").as("dest_filename") +:
-          concat(col("original_ref"), lit("/parser.log")).as("src_member") +: planKey: _*)
-      val imgRows = ok
-        .select(col("uri"), lit("image").as("asset_type"), col("original_ref"), col("tar_name"),
-          explode(coalesce(col("params.TRE.payload.images"), array())).as("dest_filename"))
-        .select(col("uri") +: col("asset_type") +: col("dest_filename") +:
-          concat(col("original_ref"), lit("/"), col("dest_filename")).as("src_member") +:
-          planKey: _*)
-      val assetPlan = tarRow.unionByName(srcRow).unionByName(logRow).unionByName(imgRows)
+      // 5. asset copies (W5–W8): the plan q35 checks. `original_ref` and
+      //    `tar_name` ride along as the join key back to the archive bytes
+      //    for the byte-copy pass below; the stored plan table drops them.
+      val assetPlan = IngestQueries.assetPlan(
+        ok.select(col("uri"), col("original_ref"), col("tar_name"), col("source_filename"),
+          exists(col("member_names"), n => n.contains("parser.log")).as("has_parser_log"),
+          col("params.TRE.payload.images").as("images")),
+        col("original_ref"), col("tar_name"))
 
       // Steps 1–5 apply as ONE overlapped effect round: five disjoint
       // tables, every decision derived from the pre-batch state pinned in
@@ -545,8 +498,8 @@ object PackageIngest {
           col("consignment_ref"), col("original_ref"), col("uri"), col("doc_type"),
           col("exists_in_db"),
           when(col("error").isNull, willPublish).as("will_publish"),
-          when(col("error").isNull && cannotPublish, lit("CannotPublishException"))
-            .otherwise(col("error")).as("error")))
+          when(col("error").isNull && IngestQueries.cannotPublish(willPublish, col("doc_type")),
+            lit(IngestError.CannotPublish.name)).otherwise(col("error")).as("error")))
     } finally resolved.unpersist() // dropped once the outcome is pinned
   }
 

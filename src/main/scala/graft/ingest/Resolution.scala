@@ -1,7 +1,8 @@
 package graft.ingest
 
 import graft.sql.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.store.DocumentStore
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** URI resolution cascade (SURVEY.md J1–J3; reference
@@ -28,15 +29,31 @@ import org.apache.spark.sql.functions._
   */
 object Resolution {
 
+  /** IDENTIFIER_CLASS_LOOKUP (`ingester.py:51-55`): the NCN lookup's
+    * required type and the assigned identifier's type — judgment → ukncn,
+    * pressSummary → ukncn-summary, anything else (parserLog) → none. */
+  def identifierClass(docType: Column): Column =
+    when(docType === "judgment", lit("ukncn"))
+      .when(docType === "pressSummary", lit("ukncn-summary"))
+      .otherwise(lit(null))
+
+  /** W2 (`ingester.py:263-284`): a (document_uri, id_kind, id_value,
+    * id_type) + `keep` row per (uri, ncn, doc_type) with an NCN and a class. */
+  def ncnRows(docs: DataFrame, keep: Column*): DataFrame = {
+    val idClass = identifierClass(col("doc_type"))
+    docs.filter(col("ncn").isNotNull && idClass.isNotNull)
+      .select(Seq(col("uri").as("document_uri"), lit("value").as("id_kind"),
+        col("ncn").as("id_value"), idClass.as("id_type")) ++ keep: _*)
+  }
+
   /** Resolve requests against an identifiers dimension.
     *
     * requests: (req_id, trimmed_uri nullable, ncn nullable, doc_type,
     *            consignment_ref)
     * identifiers: (document_uri, id_kind 'slug'|'value', id_value, id_type)
     *
-    * Identifier type required per document type — the reference's
-    * IDENTIFIER_CLASS_LOOKUP (`ingester.py:51-55`): judgment → ukncn,
-    * pressSummary → ukncn-summary, parserLog → none (never matches).
+    * The NCN lookup only counts a hit of the doc type's
+    * [[identifierClass]]; a type without one (parserLog) never matches.
     */
   def resolve(requests: DataFrame, identifiers: DataFrame): DataFrame = {
     val slugAgg = identifiers
@@ -48,12 +65,8 @@ object Resolution {
       .groupBy(col("id_value").as("ncn_value"), col("id_type").as("ncn_type"))
       .agg(min(col("document_uri")).as("ncn_uri"), count(lit(1)).as("ncn_hits"))
 
-    val requiredType = when(col("doc_type") === "judgment", lit("ukncn"))
-      .when(col("doc_type") === "pressSummary", lit("ukncn-summary"))
-      .otherwise(lit(null))
-
     val joined = requests
-      .withColumn("required_type", requiredType)
+      .withColumn("required_type", identifierClass(col("doc_type")))
       .join(broadcast(slugAgg),
         col("trimmed_uri").isNotNull && col("trimmed_uri") === col("slug_value"),
         "left")
@@ -212,9 +225,8 @@ object Resolution {
     *     must not duplicate the row (the same dedup
     *     `LocalStore.appendIdentifiers` applies).
     *
-    * The fold is one dropDuplicates + one anti-join on the identifier key
-    * — at scale a single hash shuffle on (document_uri, id_kind,
-    * id_value), the same plan a Delta MERGE on that key produces. */
+    * The rows are the act phase's own ([[ncnRows]]) and the fold is the
+    * store's idempotent append ([[graft.store.DocumentStore.unseen]]). */
   def q48IdentifierAssignment(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables(spark, dir).documents.select(col("doc_id"))
     val n = col("doc_id")
@@ -223,28 +235,25 @@ object Resolution {
     val docType = when(n % 3 === 0, lit("judgment"))
       .when(n % 3 === 1, lit("pressSummary")).otherwise(lit("parserLog"))
     val ncn = when(n % 4 =!= 0, concat(lit("[2024] TEST "), id)).otherwise(lit(null))
-    val idType = when(docType === "judgment", lit("ukncn"))
-      .when(docType === "pressSummary", lit("ukncn-summary")).otherwise(lit(null))
 
     val preexisting = d.filter(n % 5 === 0).select(
       n.as("doc_id"), uri.as("document_uri"), lit("value").as("id_kind"),
       when(n % 10 === 0 && n % 4 =!= 0, concat(lit("[2024] TEST "), id))
         .otherwise(concat(lit("[2020] OLD "), id)).as("id_value"),
+      // the incoming NCN, stored earlier as a judgment's or summary's
       when(n % 10 === 0 && n % 4 =!= 0,
-          when(n % 3 === 0, lit("ukncn")).otherwise(lit("ukncn-summary")))
+          identifierClass(when(n % 3 === 0, lit("judgment")).otherwise(lit("pressSummary"))))
         .otherwise(lit("fclid")).as("id_type"),
       lit("preexisting").as("origin"))
 
-    val assigned = d
-      .filter(ncn.isNotNull && docType.isin("judgment", "pressSummary"))
-      .select(n.as("doc_id"), uri.as("document_uri"), lit("value").as("id_kind"),
-        ncn.as("id_value"), idType.as("id_type"), lit("ingest").as("origin"))
+    val assigned = ncnRows(
+      d.select(n.as("doc_id"), uri.as("uri"), ncn.as("ncn"), docType.as("doc_type")),
+      col("doc_id"), lit("ingest").as("origin"))
     // second delivery of every 7th doc — must collapse in the dedup
     val redelivered = assigned.filter(col("doc_id") % 7 === 0)
-    val additions = assigned.unionByName(redelivered)
-      .dropDuplicates("document_uri", "id_kind", "id_value")
-      .join(preexisting.select("document_uri", "id_kind", "id_value"),
-        Seq("document_uri", "id_kind", "id_value"), "left_anti")
+    val additions = DocumentStore.unseen(assigned.unionByName(redelivered),
+      Some(preexisting.select("document_uri", "id_kind", "id_value")),
+      "document_uri", "id_kind", "id_value")
 
     val hadIdentifiers = preexisting.select(col("document_uri").as("warn_uri")).distinct()
     val post = preexisting.unionByName(additions)

@@ -108,12 +108,8 @@ trait DocumentStore {
   def appendFailures(rows: DataFrame): Unit
   def assetRoot: String
 
-  def documents: DataFrame = read("documents").getOrElse(
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      DocumentStore.schemas("documents")))
-  def failures: DataFrame = read("failures").getOrElse(
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      DocumentStore.schemas("failures")))
+  def documents: DataFrame = read("documents").getOrElse(DocumentStore.empty(spark, "documents"))
+  def failures: DataFrame = read("failures").getOrElse(DocumentStore.empty(spark, "failures"))
 }
 
 object DocumentStore {
@@ -143,6 +139,19 @@ object DocumentStore {
         out.map(_.get)
       } finally pool.shutdownNow()
     }
+
+  /** Table `t` with no rows, under its [[schemas]] entry — a local
+    * relation, so the optimizer can prune joins against it. */
+  def empty(spark: SparkSession, t: String): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schemas(t))
+
+  /** Idempotent append on a natural key: the rows whose `key` is in
+    * neither an earlier row nor `current` — set semantics for a
+    * redelivered package (`ingester.py:267-279` adds to a set). */
+  def unseen(rows: DataFrame, current: Option[DataFrame], key: String*): DataFrame = {
+    val u = rows.dropDuplicates(key)
+    current.fold(u)(c => u.join(c, key, "left_anti"))
+  }
 
   /** The store's table schemas — the cross-implementation contract the
     * parity spec compares against (names, types, order). */

@@ -275,7 +275,7 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
     val d = winnerPerUri(decisions.select(col("uri"), col("will_publish"), col("xml")))
       .select("uri", "will_publish")
     mergeBuckets("documents", d, "uri") { (cur, dd) =>
-      val c = cur.getOrElse(emptyDocs)
+      val c = cur.getOrElse(DocumentStore.empty(spark, "documents"))
       c.join(dd, Seq("uri"), "left")
         .withColumn("is_published", coalesce(col("will_publish"), col("is_published")))
         .drop("will_publish")
@@ -285,14 +285,9 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
   /** W2: add identifier rows (document_uri, id_kind, id_value, id_type).
     * Idempotent: a redelivered package must not duplicate its identifier
     * (the reference adds to a set and warns — `ingester.py:267-279`). */
-  def appendIdentifiers(rows: DataFrame): Unit = {
-    val u = rows.dropDuplicates("document_uri", "id_kind", "id_value")
-    val fresh = read("identifiers") match {
-      case None => u
-      case Some(cur) => u.join(cur, Seq("document_uri", "id_kind", "id_value"), "left_anti")
-    }
-    append("identifiers", fresh)
-  }
+  def appendIdentifiers(rows: DataFrame): Unit =
+    append("identifiers",
+      DocumentStore.unseen(rows, read("identifiers"), "document_uri", "id_kind", "id_value"))
 
   /** W3/W4: upsert properties on (uri, name) — reference `set_property`
     * overwrites. Bucketed on uri (co-located with the document's other
@@ -327,14 +322,8 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
 
   /** W5–W8: add asset-copy records. Idempotent on the destination key —
     * the reference overwrites the same S3 keys on redelivery. */
-  def appendAssets(rows: DataFrame): Unit = {
-    val u = rows.dropDuplicates("uri", "asset_type", "dest_filename")
-    val fresh = read("assets") match {
-      case None => u
-      case Some(cur) => u.join(cur, Seq("uri", "asset_type", "dest_filename"), "left_anti")
-    }
-    append("assets", fresh)
-  }
+  def appendAssets(rows: DataFrame): Unit =
+    append("assets", DocumentStore.unseen(rows, read("assets"), "uri", "asset_type", "dest_filename"))
 
   /** W9: append notification records (uri, action, payload, delivered). */
   def appendNotifications(rows: DataFrame): Unit =
@@ -342,17 +331,4 @@ final case class LocalStore(spark: SparkSession, base: String, buckets: Int = 64
 
   /** W11: append per-message failures (the DLQ table). */
   def appendFailures(rows: DataFrame): Unit = append("failures", rows)
-
-  override def documents: DataFrame = read("documents").getOrElse(emptyDocs)
-  override def failures: DataFrame = read("failures").getOrElse {
-    import spark.implicits._
-    Seq.empty[(String, String, Boolean)].toDF("msg_id", "error", "terminal")
-  }
-
-  private def emptyDocs: DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, String, String, String, Boolean, String, Int, Boolean)]
-      .toDF("uri", "xml", "doc_type", "annotation_message", "annotation_payload",
-        "automated", "upload_state", "version", "is_published")
-  }
 }

@@ -1,6 +1,7 @@
 package graft.store
 
 import graft.ingest.IngestQueries
+import graft.model.IngestError
 import graft.sql.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,8 +25,10 @@ import org.apache.spark.sql.functions._
   * an independent originator × auto_publish × doc-type mix, consulting
   * wave 1's published flag (the FCL-reparse branch and both guards). Both
   * waves collapse into one narrow projection per doc_id — no join, no
-  * shuffle except the presentation sort; the store-effect twin of this
-  * truth table is exercised end-to-end in `PackageIngestSpec`.
+  * shuffle except the presentation sort. The guards and the publish
+  * decision are the act phase's own functions ([[IngestQueries]]); the
+  * store-effect twin of this truth table is exercised end-to-end in
+  * `PackageIngestSpec`.
   */
 object PublishQueries {
 
@@ -38,30 +41,29 @@ object PublishQueries {
     val d = Tables(spark, dir).documents.select(col("doc_id"))
     val n = col("doc_id")
 
-    // wave 1: fresh inserts (exists=false, published=false)
+    // wave 1: fresh inserts (exists=false, published=false); the MERGE
+    // folds each wave's publish decision over the flag it found
     val orig1 = origOf(n % 3)
     val ap1 = (n / 3).cast("long") % 2 === 1
     val dt1 = dtOf((n / 6).cast("long") % 3)
     val wp1 = IngestQueries.willPublish(orig1, ap1, lit(false), lit(false))
-    val cannotPub1 = wp1 && dt1 === "parserLog"
-    val pub1 = wp1 && dt1 =!= "parserLog" // publish() failed → flag unchanged
-    val err1 = when(cannotPub1, lit("CannotPublishException"))
+    val pub1 = coalesce(IngestQueries.publishDecision(wp1, dt1), lit(false))
+    val err1 = when(IngestQueries.cannotPublish(wp1, dt1), lit(IngestError.CannotPublish.name))
 
     // wave 2 (even doc_ids): re-ingest against wave-1 state
     val hasW2 = n % 2 === 0
     val orig2 = origOf((n / 12).cast("long") % 3)
     val ap2 = (n / 24).cast("long") % 2 === 1
     val dt2 = dtOf((n / 48).cast("long") % 3)
-    val guard2 = dt2 === "parserLog" && pub1 // error-log over published doc
+    val guard2 = IngestQueries.errorLogOverPublished(dt2, lit(true), pub1)
     val wp2 = IngestQueries.willPublish(orig2, ap2, lit(true), pub1)
-    val cannotPub2 = !guard2 && wp2 && dt2 === "parserLog"
-    val pub2 = wp2 && dt2 =!= "parserLog"
-    val err2 = when(guard2, lit("ErrorLogWouldOverwritePublishedDocument"))
-      .when(cannotPub2, lit("CannotPublishException"))
+    val pub2 = coalesce(IngestQueries.publishDecision(wp2, dt2), pub1)
+    val err2 = when(guard2, lit(IngestError.ErrorLogWouldOverwritePublishedDocument.name))
+      .when(IngestQueries.cannotPublish(wp2, dt2), lit(IngestError.CannotPublish.name))
 
     // guard2 aborts before any effect: version/doc_type/published keep
-    // wave-1 state; cannotPub2 aborts AFTER the write effects: version and
-    // doc_type advance, published stays
+    // wave-1 state; CannotPublish aborts AFTER the write effects: version
+    // and doc_type advance, published stays (its decision is null)
     val accepted2 = hasW2 && !guard2
 
     d.select(

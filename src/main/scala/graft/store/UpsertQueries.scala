@@ -53,7 +53,7 @@ object UpsertQueries {
         IngestQueries.annotationMessage(col("is_tdr"), col("exists_in_db")))
       .withColumn("upload_state",
         when(col("rejected"), lit("error"))
-          .when(col("exists_in_db"), lit("updated")).otherwise(lit("inserted")))
+          .otherwise(IngestQueries.uploadState(col("exists_in_db"))))
 
     // head row per uri = last ACCEPTED write
     val head = folded.filter(!col("rejected"))

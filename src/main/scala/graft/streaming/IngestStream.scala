@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ingest.{Messages, PackageIngest, RawPackage}
+import graft.ingest.{IngestQueries, Messages, PackageIngest, RawPackage}
 import graft.metrics.Observe
 import graft.model.IngestError
 import graft.store.{DocumentStore, LocalStore}
@@ -129,13 +129,8 @@ object IngestStream {
     val scoped = store.withBatchScope(s"$txnScopePrefix-$batchId")
 
     // ---- decode (S1–S4) + unknown-originator guard ----
-    // same rule as the batch act phase (PackageIngest.ingestDs): send_email
-    // and will_publish both raise RuntimeError on an unrecognized — or
-    // absent — originator (ingester.py:440,457); the record must fail (and,
-    // with a msg_id, redeliver) rather than silently carry a null publish
-    // decision. Guarding BEFORE the fetch skips the pointless download.
-    // NULL needs the explicit isNull arm: `!isin(...)` alone is NULL for
-    // null input and falls through the `when`.
+    // the act phase's own guard (IngestQueries.originatorGuard), applied
+    // BEFORE the fetch so a doomed record skips the pointless download.
     // CollectMetrics rides the decode plan and is reported by the eager
     // checkpoint action to any registered graft.metrics.MetricsSink — no
     // extra pass, no driver-side count() (see Observe's scaladoc) — and
@@ -149,12 +144,7 @@ object IngestStream {
     // actions.
     val decodedObs = Observation("graft.ingest.decoded")
     val decoded = Messages.decode(batch)
-      .withColumn("error",
-        when(col("error").isNull &&
-            (col("originator").isNull || !col("originator").isin("TDR", "FCL", "FCL S3")),
-          concat(lit("RuntimeError: Didn't recognise originator "),
-            coalesce(col("originator"), lit("null"))))
-          .otherwise(col("error")))
+      .withColumn("error", IngestQueries.originatorGuard(col("error"), col("originator")))
       .observe(decodedObs,
         count(lit(1)).as("n_records"),
         sum(when(col("error").isNotNull, 1L).otherwise(0L)).cast("long").as("n_rejected"),
@@ -179,9 +169,6 @@ object IngestStream {
     val nFetchFailed = fetchedCounts("n_failed")
 
     try {
-      // taxonomy routing stays codegen'd: IngestError.all is a short
-      // static list, so `isin` beats a Scala UDF here
-      val terminalNames = IngestError.all.filter(_.terminal).map(_.name)
       def failureMetric(df: DataFrame, terminal: Column): DataFrame =
         df.observe("graft.ingest.failures",
           Observe.countIf(col("error").isNotNull).as("n_failures"),
@@ -200,7 +187,7 @@ object IngestStream {
           Some(PackageIngest.ingestOutcome(spark, packages, scoped, requestId, environment,
             observeOutcome =
               if (nRejected + nFetchFailed == 0)
-                failureMetric(_, col("error").isin(terminalNames: _*))
+                failureMetric(_, IngestError.terminal(col("error")))
               else identity))
         case _ => None // nothing fetched: no gather, no act phase
       }
@@ -243,7 +230,7 @@ object IngestStream {
           .join(broadcast(priorReceives), Seq("msg_id"), "left")
           .withColumn("receive_no", coalesce(col("prior_receives"), lit(0L)) + lit(1L))
           .withColumn("terminal",
-            col("error").isin(terminalNames: _*) ||
+            IngestError.terminal(col("error")) ||
               col("receive_no") >= lit(maxReceives.toLong))
           .select("msg_id", "error", "terminal"), col("terminal")))
       } finally outcome.foreach(_.rows.unpersist())

@@ -18,6 +18,23 @@ class PackageIngestSpec extends SparkSpec {
   private def pkg(ref: String, originator: String, file: String): RawPackage =
     RawPackage(ref, originator, s"$ref.tar.gz", Files.readAllBytes(fixtures.resolve(file)))
 
+  /** A judgment package built in the spec (metadata with `cite` and
+    * `auto_publish`, the XML, parser.log), for the act-phase rules that
+    * need no reference tarball. */
+  private def judgmentPkg(ref: String, originator: String, cite: String,
+      autoPublish: Boolean = false): RawPackage = {
+    val metadata =
+      s"""{"parameters": {"TRE": {"reference": "$ref", "payload": {
+         |  "filename": null, "xml": "$ref.xml", "metadata": "$ref-metadata.json",
+         |  "images": [], "log": "parser.log"}},
+         |  "PARSER": {"uri": null, "cite": "$cite"},
+         |  "INGESTER_OPTIONS": {"auto_publish": $autoPublish}}}""".stripMargin
+    RawPackage(ref, originator, s"$ref.tar.gz", graft.tar.TarOps.packStrings(Seq(
+      s"$ref/$ref-metadata.json" -> metadata,
+      s"$ref/$ref.xml" -> s"<akomaNtoso><judgment>body of $ref</judgment></akomaNtoso>",
+      s"$ref/parser.log" -> "ok")))
+  }
+
   test("golden TDR package: full gather+act, all store tables") {
     assume(Files.exists(fixtures), "reference fixtures not present")
     val storeDir = Files.createTempDirectory("graft-pkg-store").toString
@@ -263,13 +280,12 @@ class PackageIngestSpec extends SparkSpec {
   }
 
   test("W10 guard: error-log package over a published document fails terminally, store untouched") {
-    assume(Files.exists(fixtures), "reference fixtures not present")
     val storeDir = Files.createTempDirectory("graft-guard-store").toString
     val store = LocalStore(spark, storeDir)
 
     // publish a document via the bulk path
-    val o1 = PackageIngest.ingest(spark,
-      Seq(pkg("BULK-0", "FCL S3", "test3.tar.gz")), store).collect().head
+    val bulk = judgmentPkg("BULK-0", "FCL S3", "[2024] EWHC 40 (KB)", autoPublish = true)
+    val o1 = PackageIngest.ingest(spark, Seq(bulk), store).collect().head
     val uri = o1.getAs[String]("uri")
     assert(store.documents.collect().head.getAs[Boolean]("is_published"))
     val xmlBefore = store.documents.collect().head.getAs[String]("xml")
@@ -298,14 +314,13 @@ class PackageIngestSpec extends SparkSpec {
 
     // counter-case: unpublish first (TDR update), then the same error-log
     // package lands as a normal parserLog update
-    PackageIngest.ingest(spark, Seq(pkg("BULK-0", "TDR", "test3.tar.gz")), store)
+    PackageIngest.ingest(spark, Seq(bulk.copy(originator = "TDR")), store)
     val o3 = PackageIngest.ingest(spark, Seq(errPkg), store).collect().head
     assert(o3.getAs[String]("error") == null)
     assert(store.documents.collect().head.getAs[Int]("version") == 3)
   }
 
   test("W10 cannot-publish: auto-publish error-log package ingests but fails to publish") {
-    assume(Files.exists(fixtures), "reference fixtures not present")
     val store = LocalStore(spark, Files.createTempDirectory("graft-cp-store").toString)
 
     // a bulk error-log package whose INGESTER_OPTIONS demand auto-publish:
@@ -333,14 +348,13 @@ class PackageIngestSpec extends SparkSpec {
   }
 
   test("unknown originator fails with RuntimeError before any effect runs") {
-    assume(Files.exists(fixtures), "reference fixtures not present")
     val store = LocalStore(spark, Files.createTempDirectory("graft-orig-store").toString)
 
     // send_email and will_publish both raise on an unrecognized originator
     // (ingester.py:440,457) — the outcome must carry the error, not a
     // silent null will_publish, and the store must stay untouched
     val o = PackageIngest.ingest(spark,
-      Seq(pkg("TDR-2022-DNWR", "MYSTERY", "TDR-2022-DNWR.tar.gz")), store).collect().head
+      Seq(judgmentPkg("REF-O", "MYSTERY", "[2024] EWHC 41 (KB)")), store).collect().head
     assert(o.getAs[String]("error") != null &&
       o.getAs[String]("error").startsWith("RuntimeError"))
     assert(o.isNullAt(o.fieldIndex("will_publish")))
@@ -352,7 +366,7 @@ class PackageIngestSpec extends SparkSpec {
     // three-valued logic on `isin` alone would let it slip through
     val store2 = LocalStore(spark, Files.createTempDirectory("graft-orig2-store").toString)
     val o2 = PackageIngest.ingest(spark,
-      Seq(pkg("TDR-2022-DNWR", null, "TDR-2022-DNWR.tar.gz")), store2).collect().head
+      Seq(judgmentPkg("REF-O", null, "[2024] EWHC 41 (KB)")), store2).collect().head
     assert(o2.getAs[String]("error") != null &&
       o2.getAs[String]("error").startsWith("RuntimeError"))
     assert(store2.documents.count() == 0)

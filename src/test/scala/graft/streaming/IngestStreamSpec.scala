@@ -435,12 +435,16 @@ class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** Ingests one message for `archive` (spilled when `spillAt` is set)
-    * and asserts the package lands as one terminal `error` row, with no
-    * document, no asset file, and no file outside the asset root. */
+    * into a store `seed` prepared, and asserts the package lands as one
+    * terminal `error` row, with no document, no asset file, and no
+    * `escaped*` file anywhere. The store sits one directory below that
+    * search root, so a name climbing two levels out of the asset root
+    * still lands inside it. */
   private def assertRejected(ref: String, archive: Array[Byte], error: String,
-      spillAt: Option[Long] = None): Unit = {
-    val storeDir = Files.createTempDirectory("graft-hostile")
-    val store = LocalStore(spark, storeDir.toString)
+      spillAt: Option[Long] = None, seed: LocalStore => Unit = _ => ()): Unit = {
+    val searchRoot = Files.createTempDirectory("graft-hostile")
+    val store = LocalStore(spark, searchRoot.resolve("store").toString)
+    seed(store)
     spillAt.foreach(n => spark.conf.set(IngestStream.MaxInMemoryFetchKey, n.toString))
     try IngestStream.processBatch(store, packageUri = stage(ref -> archive))(
       Seq(sqs(s"msg-$ref", v2Inner(ref))).toDF("kind", "record_json"), 0L)
@@ -450,7 +454,7 @@ class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(store.documents.count() == 0, ref)
     val root = Paths.get(store.assetRoot)
     assert(regularFiles(root).isEmpty, s"$ref: asset files written")
-    val outside = regularFiles(storeDir).filter(_.getFileName.toString.contains("escaped"))
+    val outside = regularFiles(searchRoot).filter(_.getFileName.toString.contains("escaped"))
     assert(outside.isEmpty, s"$ref: files written outside the asset root: $outside")
   }
 
@@ -472,6 +476,33 @@ class IngestStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       images = Seq("image1.png", "../../escaped.png")), "UnsafeAssetNameException")
     assertRejected("../../escaped-R", tdrArchive("../../escaped-R", "[2024] EWHC 16 (KB)",
       images = Seq("image1.png")), "UnsafeAssetNameException")
+  }
+
+  test("hostile package: a resolved uri climbing out of the asset root fails terminally before any effect") {
+    // the package's NCN resolves to an identifier row whose document_uri
+    // would put every asset copy at `<assetRoot>/../../escaped-U/…`
+    val cite = "[2024] EWHC 30 (KB)"
+    assertRejected("REF-U", tdrArchive("REF-U", cite), "UnsafeAssetNameException",
+      seed = _.appendIdentifiers(Seq(("../../escaped-U", "value", cite, "ukncn"))
+        .toDF("document_uri", "id_kind", "id_value", "id_type")))
+  }
+
+  test("malformed metadata fails its own message as a retryable JSONDecodeError, not the round") {
+    val store = LocalStore(spark, Files.createTempDirectory("graft-bad-json").toString)
+    val broken = TarOps.packStrings(Seq(
+      "REF-J/TRE-REF-J-metadata.json" -> """{"parameters": {""",
+      "REF-J/doc.xml" -> "<akomaNtoso><judgment>body of REF-J</judgment></akomaNtoso>"))
+    val resolver = stage("REF-G" -> tdrArchive("REF-G", "[2024] EWHC 31 (KB)"), "REF-J" -> broken)
+    IngestStream.processBatch(store, packageUri = resolver)(
+      Seq(sqs("msg-g", v2Inner("REF-G")), sqs("msg-j", v2Inner("REF-J")))
+        .toDF("kind", "record_json"), 0L)
+
+    val docs = store.documents.collect()
+    assert(docs.length == 1)
+    assert(docs.head.getAs[String]("xml").contains("body of REF-G"))
+    val fails = failureRows(store)
+    assert(fails.map { case (id, _, terminal) => (id, terminal) } == Seq(("msg-j", false)))
+    assert(fails.head._2.startsWith("JSONDecodeError: "), fails.head._2)
   }
 
   test("hostile package: a decompression bomb or a member flood fails terminally before inflating") {
